@@ -85,7 +85,8 @@ def quality_score(text: Column) -> Column:
     return F.round((length_score + punct_score + stop_score) / 3.0, 6)
 
 
-def _marker_hits(tokens: Column, words: list[str]) -> Column:
+def marker_hits(tokens: Column, words: list[str]) -> Column:
+    """How many of ``tokens`` are in ``words``."""
     # Dedicated helper: a `lambda t, w=words:` inline would have arity 2
     # and be misread by Spark as an (element, index) lambda.
     return F.size(F.filter(tokens, lambda t: t.isin(*words)))
@@ -99,7 +100,7 @@ def lang_id(text: Column) -> Column:
     best = F.lit("und")
     best_score = F.lit(0)
     for lang in sorted(LANG_MARKERS):
-        hits = _marker_hits(tokens, LANG_MARKERS[lang])
+        hits = marker_hits(tokens, LANG_MARKERS[lang])
         improved = hits > best_score
         best = F.when(improved, F.lit(lang)).otherwise(best)
         best_score = F.when(improved, hits).otherwise(best_score)

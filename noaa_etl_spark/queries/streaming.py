@@ -1,7 +1,10 @@
 """Structured Streaming graded queries (SURVEY.md §2.J): the streaming
-twins of the temporal operators, executed with
-``trigger(availableNow=True)`` into a memory sink so the driver receives
-an ordinary batch DataFrame.
+twins of the batch operators, drained with ``trigger(availableNow=True)``
+so the driver receives an ordinary batch DataFrame. Stateful twins go
+through a memory sink (``run_to_memory``); fold twins stage their source
+as three micro-batches and name only their split, per-batch partials and
+finalize (``fold_stream``). Two twins drain through sinks of their own:
+``q_stream_drift_monitor`` and ``q_stream_observed_metrics``.
 
 Semantics notes vs the batch oracle:
 
@@ -20,7 +23,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.registry import graded
-from noaa_etl_spark.streaming.core import run_to_memory, stream_table
+from noaa_etl_spark.streaming.core import (
+    fold_stream,
+    hash_split,
+    range_split,
+    run_to_memory,
+    stream_table,
+)
 
 
 @graded(
@@ -495,7 +504,7 @@ def q_stream_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the count-min sketch: lineitem drained as
     three micro-batches (maxFilesPerTrigger=1 over a 3-file split);
     each batch builds ITS OWN grid inside foreachBatch and appends it
-    under grids/batch_id=N (batch_id-keyed overwrite ⇒ restart-
+    under batch_id=N (batch_id-keyed overwrite ⇒ restart-
     idempotent, the drift-monitor pattern). Because CMS grids are
     cell-wise ADDITIVE, merging the per-batch grids reproduces the
     one-pass batch grid EXACTLY — so this twin shares the batch
@@ -509,9 +518,6 @@ def q_stream_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanning history — the streaming ingestion half of the sketch
     kit (HLL has the same publishing pattern in q_hll_sketch_union).
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.operators.cms import cms_build, cms_merge
     from noaa_etl_spark.queries.text import (
@@ -519,48 +525,18 @@ def q_stream_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
         CMS_WIDTH,
         cms_bound_report,
     )
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_cms")
-    grids = os.path.join(root, "grids")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (grids, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
-    gate = F.pmod(F.xxhash64(F.lit("scms"), F.col("l_partkey")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            li.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return cms_build(batch_df, "l_partkey", depth=CMS_DEPTH, width=CMS_WIDTH)
 
-    src = staged_stream_src(sf_dir, "stream_cms", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        grid = cms_build(batch_df, "l_partkey", depth=CMS_DEPTH, width=CMS_WIDTH)
-        record_foreach_batch_plan("stream_cms_grid", grid)
-        grid.write.mode("overwrite").parquet(f"{grids}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [grids] = fold_stream(
+        sf_dir, "stream_cms", li, hash_split("scms", "l_partkey"),
+        {"stream_cms_grid": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    cells = cms_merge(spark.read.parquet(grids)).persist()
+    cells = cms_merge(grids).persist()
     cells.count()
     return cms_bound_report(spark, sf_dir, cells)
 
@@ -573,7 +549,7 @@ def q_stream_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the mergeable variance state: events drained as
     three micro-batches (maxFilesPerTrigger=1 over a 3-file hash split);
     each batch builds its own (n, Σv, Σv²) BIGINT state inside
-    foreachBatch and writes it under states/batch_id=N (batch_id-keyed
+    foreachBatch and writes it under batch_id=N (batch_id-keyed
     overwrite ⇒ restart-idempotent, the drift-monitor/CMS pattern).
     Because the state is pure integer addition, folding the per-batch
     states reproduces the one-pass batch state EXACTLY — so this twin
@@ -585,59 +561,23 @@ def q_stream_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (state rows = |keys|, never raw rows); the persisted state
     table IS the continuously-maintained rollup — finalize() serves
     mean/var/stddev dashboards without rescanning history."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.operators.incremental import (
         finalize_stats,
         merge_stats_states,
         stats_state,
     )
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_stats")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.floor(F.col("value") * 100).cast("bigint").alias("cents")
     )
-    gate = F.pmod(F.xxhash64(F.lit("sst"), F.col("cents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_stats", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        state = stats_state(batch_df, ["event_type"], "cents")
-        record_foreach_batch_plan("stream_stats_state", state)
-        state.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_stats", ev, hash_split("sst", "cents"),
+        {"stream_stats_state": lambda b: stats_state(b, ["event_type"], "cents")},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    merged = merge_stats_states(spark.read.parquet(states).drop("batch_id"))
+    merged = merge_stats_states(states.drop("batch_id"))
     return finalize_stats(merged).orderBy("event_type")
 
 
@@ -661,17 +601,7 @@ def q_stream_feature_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; the snapshot tables are daily-grain (orders of magnitude
     smaller than the event log) and would be served broadcast on a real
     cluster once they fit the threshold."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_pit")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (out, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events")
     snap_click, snap_view = pit_snapshots(ev)
@@ -682,43 +612,48 @@ def q_stream_feature_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    gate = F.pmod(F.xxhash64(F.lit("spit"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            purchases.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_pit", _build_src)
-
-    def enrich(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        enriched = pit_enrich(batch_df, snap_click, snap_view)
-        record_foreach_batch_plan("stream_pit_enrich", enriched)
-        enriched.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [out] = fold_stream(
+        sf_dir, "stream_pit", purchases, hash_split("spit", "event_id"),
+        {"stream_pit_enrich": lambda b: pit_enrich(b, snap_click, snap_view)},
     )
-    query = (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    result = spark.read.parquet(out).drop("batch_id").select(
+
+    result = out.drop("batch_id").select(
         "event_id", "user_id", "ts", "clicks_in_day", "click_cents", "views_in_day"
     )
     snap_click.unpersist()
     snap_view.unpersist()
     return result
+
+
+def _fold_daily_cents(
+    spark: SparkSession, sf_dir: str, name: str, seed: str
+) -> DataFrame:
+    """The per-(event_type, day_idx) BIGINT cents rollup four twins fold
+    (decayed sum, Holt, Holt-Winters, rolling median): each micro-batch
+    writes its partial under the plan key ``<name>_partial``, and the
+    folded sum equals the one-pass batch rollup exactly."""
+    from noaa_etl_spark.io import load_table
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_type",
+        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
+        .cast("bigint")
+        .alias("day_idx"),
+        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+    )
+
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("event_type", "day_idx").agg(
+            F.sum("cents").alias("day_cents")
+        )
+
+    [states] = fold_stream(
+        sf_dir, name, ev, hash_split(seed, "cents"), {f"{name}_partial": partial}
+    )
+    return states.groupBy("event_type", "day_idx").agg(
+        F.sum("day_cents").alias("day_cents")
+    )
 
 
 from noaa_etl_spark.queries.temporal import DECAYED_SUM_ORACLE, decayed_from_daily
@@ -729,7 +664,7 @@ def q_stream_decayed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the exponentially-decayed revenue counter:
     events drain as three micro-batches; each batch's foreachBatch
     writes its own per-(type, day) PARTIAL daily rollup under
-    states/batch_id=N (batch_id-keyed overwrite ⇒ restart-idempotent).
+    batch_id=N (batch_id-keyed overwrite ⇒ restart-idempotent).
     The daily rollup is pure BIGINT addition, so folding the per-batch
     partials reproduces the one-pass daily rollup EXACTLY, and the
     shared decay-window finalization (decayed_from_daily) then yields
@@ -743,64 +678,7 @@ def q_stream_decayed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously-maintained reduced relation the decay window reads,
     never raw history.
     """
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_decay")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
-        .cast("bigint")
-        .alias("day_idx"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    gate = F.pmod(F.xxhash64(F.lit("sdecay"), F.col("cents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_decay", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("event_type", "day_idx").agg(
-            F.sum("cents").alias("day_cents")
-        )
-        record_foreach_batch_plan("stream_decay_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    daily = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("day_cents").alias("day_cents"))
-    )
+    daily = _fold_daily_cents(spark, sf_dir, "stream_decay", "sdecay")
     return decayed_from_daily(daily)
 
 
@@ -824,64 +702,7 @@ def q_stream_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted state is the |types|×|days| reduced relation the fold
     reads at forecast time.
     """
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_holt")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
-        .cast("bigint")
-        .alias("day_idx"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    gate = F.pmod(F.xxhash64(F.lit("sholt"), F.col("cents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_holt", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("event_type", "day_idx").agg(
-            F.sum("cents").alias("day_cents")
-        )
-        record_foreach_batch_plan("stream_holt_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    daily = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("day_cents").alias("day_cents"))
-    )
+    daily = _fold_daily_cents(spark, sf_dir, "stream_holt", "sholt")
     return holt_from_daily(daily)
 
 
@@ -906,58 +727,24 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch form runs — binlog consumers restart idempotently because
     re-folding a replayed batch's partial cannot change an argmax.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_cdc")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     log = cdc_changelog(spark, sf_dir)
-    gate = F.pmod(F.xxhash64(F.lit("scdc"), F.col("seq")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            log.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_cdc", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("key").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("key").agg(
             F.max_by("op", "seq").alias("op"),
             F.max_by("new_bal_cents", "seq").alias("new_bal_cents"),
             F.max("seq").alias("last_seq"),
         )
-        record_foreach_batch_plan("stream_cdc_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_cdc", log, hash_split("scdc", "seq"),
+        {"stream_cdc_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     latest = (
-        spark.read.parquet(states)
-        .groupBy("key")
+        states.groupBy("key")
         .agg(
             F.max_by("op", "last_seq").alias("op"),
             F.max_by("new_bal_cents", "last_seq").alias("new_bal_cents"),
@@ -992,54 +779,17 @@ def q_stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-trigger work is one combinable agg over the batch; the
     persisted state is |types| rows of six integers.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.queries.profiling import ab_moments
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ab")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     assigned = ab_assigned(spark, sf_dir)
-    gate = F.pmod(F.xxhash64(F.lit("sab"), F.col("cents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            assigned.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_ab", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = ab_moments(batch_df)
-        record_foreach_batch_plan("stream_ab_moments", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(assigned.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_ab", assigned, hash_split("sab", "cents"),
+        {"stream_ab_moments": ab_moments},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type")
+        states.groupBy("event_type")
         .agg(
             *[
                 F.sum(c).cast("bigint").alias(c)
@@ -1069,55 +819,18 @@ def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-trigger work is one combinable agg over the batch; the
     persisted state is |sources|×10 rows of one integer each.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.queries.profiling import psi_binned, psi_report_from_binned
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_psi")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    gate = F.pmod(F.xxhash64(F.lit("spsi"), F.col("doc_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_psi", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = psi_binned(batch_df)
-        record_foreach_batch_plan("stream_psi_binned", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_psi", docs, hash_split("spsi", "doc_id"),
+        {"stream_psi_binned": psi_binned},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("source", "bin")
+        states.groupBy("source", "bin")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
     return psi_report_from_binned(folded)
@@ -1147,64 +860,7 @@ def q_stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-trigger work is one combinable agg over the batch; the
     persisted state is the |types|×|days| reduced relation.
     """
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_hw")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
-        .cast("bigint")
-        .alias("day_idx"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    gate = F.pmod(F.xxhash64(F.lit("shw"), F.col("cents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_hw", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("event_type", "day_idx").agg(
-            F.sum("cents").alias("day_cents")
-        )
-        record_foreach_batch_plan("stream_hw_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    daily = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("day_cents").alias("day_cents"))
-    )
+    daily = _fold_daily_cents(spark, sf_dir, "stream_hw", "shw")
     return holt_winters_from_daily(daily)
 
 
@@ -1231,17 +887,7 @@ def q_stream_user_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted state is the |users|×|weeks| activity rollup (the
     continuously-maintained reduced relation).
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ltv")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1259,43 +905,19 @@ def q_stream_user_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    gate = F.pmod(F.xxhash64(F.lit("sltv"), F.col("cents"), F.col("week_idx")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_ltv", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("user_id", "week_idx").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("user_id", "week_idx").agg(
             F.sum("cents").alias("cents")
         )
-        record_foreach_batch_plan("stream_ltv_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_ltv", ev, hash_split("sltv", "cents", "week_idx"),
+        {"stream_ltv_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("user_id", "week_idx")
+        states.groupBy("user_id", "week_idx")
         .agg(F.sum("cents").alias("cents"))
     )
     return ltv_from_user_weeks(folded)
@@ -1322,74 +944,36 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct keys; the maintained sketch table answers distinct-count
     dashboards over any batch range without rescanning history, at
     k·|batches| rows total."""
-    import os
-    import shutil
-
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
     from noaa_etl_spark.io import load_table
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_kmv")
-    sketches = os.path.join(root, "sketches")
-    keys_dir = os.path.join(root, "keys")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (sketches, keys_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    gate = F.pmod(F.xxhash64(F.lit("kmv"), F.col("o_orderkey")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            orders.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_kmv", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        mink = (
+    def sketch(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(kmv_hash(F.col("o_custkey")).alias("v"))
             .dropDuplicates(["v"])
             .orderBy("v")
             .limit(KMV_K)
         )
-        record_foreach_batch_plan("stream_kmv_sketch", mink)
-        mink.write.mode("overwrite").parquet(f"{sketches}/batch_id={batch_id}")
-        dk = batch_df.select("o_custkey").distinct()
-        record_foreach_batch_plan("stream_kmv_keys", dk)
-        dk.write.mode("overwrite").parquet(f"{keys_dir}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    sketches, keys = fold_stream(
+        sf_dir, "stream_kmv", orders, hash_split("kmv", "o_orderkey"),
+        {
+            "stream_kmv_sketch": sketch,
+            "stream_kmv_keys": lambda b: b.select("o_custkey").distinct(),
+        },
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     # merge = min-k of the union of per-batch min-k sets (exact)
     merged = (
-        spark.read.parquet(sketches)
-        .select("v")
+        sketches.select("v")
         .dropDuplicates(["v"])
         .orderBy("v")
         .limit(KMV_K)
     )
     kth = merged.agg(F.max("v").cast("bigint").alias("kth_v"))
     exact = (
-        spark.read.parquet(keys_dir)
-        .select("o_custkey")
+        keys.select("o_custkey")
         .distinct()
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_distinct"))
     )
@@ -1427,55 +1011,17 @@ def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch; the maintained partial table is |batches|×|days| rows,
     and re-detection after each batch costs one bounded-calendar
     window — never a history rescan."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_changepoint")
-    partials = os.path.join(root, "partials")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (partials, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    gate = F.pmod(F.xxhash64(F.lit("scp"), F.col("o_orderkey")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            orders.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_changepoint", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        part = changepoint_daily(batch_df)
-        record_foreach_batch_plan("stream_changepoint_partial", part)
-        part.write.mode("overwrite").parquet(f"{partials}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [partials] = fold_stream(
+        sf_dir, "stream_changepoint", orders, hash_split("scp", "o_orderkey"),
+        {"stream_changepoint_partial": changepoint_daily},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(partials)
-        .groupBy("d")
+        partials.groupBy("d")
         .agg(F.sum("y").cast("bigint").alias("y"))
     )
     return changepoint_finalize(folded)
@@ -1502,39 +1048,15 @@ def q_stream_activity_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: per-trigger state is 8 bytes per active user; re-anchoring
     is pure bitwise arithmetic on the state table — no raw-day replay."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_bitmask")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     day = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    e = ev.select("event_id", "user_id", day.alias("day"))
-    gate = F.pmod(F.xxhash64(F.lit("sbm"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            e.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
+    e = ev.select("user_id", day.alias("day"))
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_bitmask", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         anchor = batch_df.agg(F.min("day").alias("anchor"))
-        masks = (
+        return (
             batch_df.crossJoin(F.broadcast(anchor))
             .select(
                 "user_id",
@@ -1549,23 +1071,12 @@ def q_stream_activity_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("mask")
             )
         )
-        record_foreach_batch_plan("stream_bitmask_state", masks)
-        masks.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema("user_id bigint, day bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [parts] = fold_stream(
+        sf_dir, "stream_bitmask", e, hash_split("sbm", "event_id"),
+        {"stream_bitmask_state": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    parts = spark.read.parquet(states)
     base = parts.agg(F.min("anchor").alias("base"))
     aligned = parts.crossJoin(F.broadcast(base)).select(
         "user_id",
@@ -1618,43 +1129,16 @@ def q_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-trigger work is the batch's explode-32 combinable agg
     (32 partial rows per partition); maintained state is 32 rows per
     batch."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_bootstrap")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    # 4 files per micro-batch (not coalesce(1)): a single-file trigger
-    # would run the 32× md5 ladder near-single-threaded — the probe read
-    # 8× at 10× data until the batch got scan parallelism.
-    gate = F.pmod(F.xxhash64(F.lit("sbc"), F.col("o_orderkey")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            base.filter(gate == i).coalesce(4).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_bootstrap", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         rep = boot_replicates(batch_df, "o_orderkey")
-        part = (
+        return (
             rep.groupBy("b")
             .agg(
                 F.sum(F.col("w") * F.col("cents")).cast("bigint").alias("wsum"),
@@ -1663,25 +1147,17 @@ def q_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("bigint").alias("n"),
             )
         )
-        record_foreach_batch_plan("stream_bootstrap_state", part)
-        part.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    # 4 files per micro-batch (not 1): a single-file trigger would run the
+    # 32× md5 ladder near-single-threaded — the probe read 8× at 10× data
+    # until the batch got scan parallelism.
+    [states] = fold_stream(
+        sf_dir, "stream_bootstrap", base, hash_split("sbc", "o_orderkey"),
+        {"stream_bootstrap_state": partial}, files_per_batch=4,
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("b")
+        states.groupBy("b")
         .agg(
             F.sum("wsum").cast("bigint").alias("wsum"),
             F.sum("wn").cast("bigint").alias("wn"),
@@ -1722,20 +1198,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: per-trigger work is the batch's combinable candle agg;
     maintained state is one row per (type, bucket, batch)."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ohlc")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
@@ -1745,21 +1208,10 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
         F.window("ts", "10 minutes")["start"].alias("bucket"),
     )
-    gate = F.pmod(F.xxhash64(F.lit("soh"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            e.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_ohlc", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         key = F.struct(F.col("ts"), F.col("event_id"))
-        part = batch_df.groupBy("event_type", "bucket").agg(
+        return batch_df.groupBy("event_type", "bucket").agg(
             F.min(key).alias("open_key"),
             F.min_by("cents", key).cast("bigint").alias("open"),
             F.max("cents").cast("bigint").alias("high"),
@@ -1768,25 +1220,14 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("cents", key).cast("bigint").alias("close"),
             F.count(F.lit(1)).cast("bigint").alias("volume"),
         )
-        record_foreach_batch_plan("stream_ohlc_state", part)
-        part.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_ohlc", e, hash_split("soh", "event_id"),
+        {"stream_ohlc_state": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     return (
-        spark.read.parquet(states)
-        .groupBy("event_type", "bucket")
+        states.groupBy("event_type", "bucket")
         .agg(
             F.min_by("open", F.col("open_key")).cast("bigint").alias("open"),
             F.max("high").cast("bigint").alias("high"),
@@ -1821,64 +1262,7 @@ def q_stream_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted state is the |types|×|days| reduced relation the
     7-row-frame window reads at report time.
     """
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_rollmed")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
-        .cast("bigint")
-        .alias("day_idx"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    gate = F.pmod(F.xxhash64(F.lit("srmed"), F.col("cents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_rollmed", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("event_type", "day_idx").agg(
-            F.sum("cents").alias("day_cents")
-        )
-        record_foreach_batch_plan("stream_rollmed_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    daily = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("day_cents").alias("day_cents"))
-    )
+    daily = _fold_daily_cents(spark, sf_dir, "stream_rollmed", "srmed")
     return rolling_median_from_daily(daily)
 
 
@@ -1906,59 +1290,25 @@ def q_stream_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalization's per-nation sort runs on demand at report time, not
     per trigger.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_gini")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("ocents"),
     )
-    gate = F.pmod(F.xxhash64(F.lit("sgini"), F.col("ocents")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            orders.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_gini", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("o_custkey").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("o_custkey").agg(
             F.sum("ocents").alias("cents")
         )
-        record_foreach_batch_plan("stream_gini_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_gini", orders, hash_split("sgini", "ocents"),
+        {"stream_gini_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     rev = (
-        spark.read.parquet(states)
-        .groupBy("o_custkey")
+        states.groupBy("o_custkey")
         .agg(F.sum("cents").cast("bigint").alias("cents"))
     )
     return gini_finalize(spark, sf_dir, rev)
@@ -1992,52 +1342,16 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, bucket) count; the persisted state is that reduced relation
     (≤64 rows per doc), and scoring runs on demand at selection time.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_dsir")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    gate = F.pmod(F.xxhash64(F.lit("sdsir"), F.col("doc_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_dsir", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = dsir_doc_buckets(batch_df)
-        record_foreach_batch_plan("stream_dsir_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_dsir", docs, hash_split("sdsir", "doc_id"),
+        {"stream_dsir_partial": dsir_doc_buckets},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    db = spark.read.parquet(states).select("doc_id", "source", "b", "c")
+    db = states.select("doc_id", "source", "b", "c")
     return dsir_score_from_db(db)
 
 
@@ -2208,52 +1522,15 @@ def q_stream_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the gini/rolling-median rule: keep the mergeable state, recompute
     the statistic).
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_covariance")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    gate = F.pmod(F.xxhash64(F.lit("scov"), F.col("vec_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            emb.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_covariance", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = covariance_moments(batch_df)
-        record_foreach_batch_plan("stream_covariance_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [state] = fold_stream(
+        sf_dir, "stream_covariance", emb, hash_split("scov", "vec_id"),
+        {"stream_covariance_partial": covariance_moments},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    state = spark.read.parquet(states)
     sum_cols = [c for c in state.columns if c not in ("label", "batch_id")]
     folded = state.groupBy("label").agg(
         *[F.sum(c).cast("bigint").alias(c) for c in sum_cols]
@@ -2289,54 +1566,16 @@ def q_stream_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted state is ≤ |types|×|bands| rows per batch; the report
     runs on the folded bounded relation on demand.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_chi_square")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    gate = F.pmod(F.xxhash64(F.lit("schi"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_chi_square", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = chi_square_grid(batch_df)
-        record_foreach_batch_plan("stream_chi_square_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_chi_square", ev, hash_split("schi", "event_id"),
+        {"stream_chi_square_partial": chi_square_grid},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "band")
+        states.groupBy("event_type", "band")
         .agg(F.sum("o").cast("bigint").alias("o"))
     )
     return chi_square_finalize(folded.localCheckpoint())
@@ -2370,54 +1609,17 @@ def q_stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted state is the |sources|×|distinct values| reduced grid per
     batch; the test reruns on the folded bounded relation on demand.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_mannwhitney")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    gate = F.pmod(F.xxhash64(F.lit("smw"), F.col("doc_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_mannwhitney", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = mannwhitney_grid(batch_df)
-        record_foreach_batch_plan("stream_mannwhitney_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_mannwhitney", docs, hash_split("smw", "doc_id"),
+        {"stream_mannwhitney_partial": mannwhitney_grid},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("source", "v")
+        states.groupBy("source", "v")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
     return mannwhitney_finalize(folded.localCheckpoint())
@@ -2447,61 +1649,28 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained first-touch table every funnel/attribution consumer
     shares).
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_funnel")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .select("user_id", "event_type", F.unix_micros("ts").alias("t_us"))
     )
-    gate = F.pmod(F.xxhash64(F.lit("sfun"), F.col("t_us")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_funnel", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
+    def partial(batch_df: DataFrame) -> DataFrame:
         t = F.col("t_us")
-        partial = batch_df.groupBy("user_id").agg(
+        return batch_df.groupBy("user_id").agg(
             F.min(F.when(F.col("event_type") == "view", t)).alias("t_view"),
             F.min(F.when(F.col("event_type") == "click", t)).alias("t_click"),
             F.min(F.when(F.col("event_type") == "purchase", t)).alias("t_purchase"),
         )
-        record_foreach_batch_plan("stream_funnel_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_funnel", ev, hash_split("sfun", "t_us"),
+        {"stream_funnel_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    folded = spark.read.parquet(states).groupBy("user_id").agg(
+    folded = states.groupBy("user_id").agg(
         F.min("t_view").alias("t_view"),
         F.min("t_click").alias("t_click"),
         F.min("t_purchase").alias("t_purchase"),
@@ -2529,59 +1698,25 @@ def q_stream_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained state is the (source, token) reduced relation —
     the streaming wordcount every feature store already keeps.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.functions.text import tokenize as _tok
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_oov")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    gate = F.pmod(F.xxhash64(F.lit("soov"), F.col("doc_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_oov", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select("source", F.explode(_tok(F.col("text"))).alias("w"))
             .groupBy("source", "w")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        record_foreach_batch_plan("stream_oov_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_oov", docs, hash_split("soov", "doc_id"),
+        {"stream_oov_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("source", "w")
+        states.groupBy("source", "w")
         .agg(F.sum("c").alias("c"))
         .localCheckpoint()
     )
@@ -2607,56 +1742,20 @@ def q_stream_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins walking off the diagonal) maintained for the cost of one
     10-row rollup per trigger.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_calib")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .select("user_id", "event_type", F.unix_micros("ts").alias("t_us"))
     )
-    gate = F.pmod(F.xxhash64(F.lit("scal"), F.col("t_us")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_calib", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = calibration_partials(batch_df)
-        record_foreach_batch_plan("stream_calib_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_calib", ev, hash_split("scal", "t_us"),
+        {"stream_calib_partial": calibration_partials},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    return calibration_finalize(spark.read.parquet(states))
+    return calibration_finalize(states)
 
 
 from noaa_etl_spark.queries.profiling import AUC_ORACLE, auc_finalize, auc_grid
@@ -2676,58 +1775,21 @@ def q_stream_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-regression alarm next to q_stream_calibration_bins' drift
     dashboard.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_auc")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .select("user_id", "event_type", F.unix_micros("ts").alias("t_us"))
     )
-    gate = F.pmod(F.xxhash64(F.lit("sauc"), F.col("t_us")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_auc", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = auc_grid(batch_df)
-        record_foreach_batch_plan("stream_auc_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_auc", ev, hash_split("sauc", "t_us"),
+        {"stream_auc_partial": auc_grid},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("s20")
+        states.groupBy("s20")
         .agg(
             F.sum("pos_c").cast("bigint").alias("pos_c"),
             F.sum("neg_c").cast("bigint").alias("neg_c"),
@@ -2763,68 +1825,29 @@ def q_stream_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-join cap exactly) — the guardrail lesson: corpus-wide
     invariants evaluate on folded state, never per batch.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_linkage")
-    states = os.path.join(root, "states")
-    counts_dir = os.path.join(root, "counts")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, counts_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     clean = fs_cap_blocks(fs_clean(load_table(spark, sf_dir, "customer")))
     dirty = fs_dirty(fs_clean(load_table(spark, sf_dir, "customer")))
-    gate = F.pmod(F.xxhash64(F.lit("slink"), F.col("k")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            dirty.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
+    def keyed(batch_df: DataFrame) -> DataFrame:
+        return batch_df.withColumn("blk", F.expr("substring(name, length(name) - 1)"))
 
-    src = staged_stream_src(sf_dir, "stream_linkage", _build_src)
+    def block_counts(batch_df: DataFrame) -> DataFrame:
+        return keyed(batch_df).groupBy("nat", "blk").agg(F.count(F.lit(1)).alias("n"))
 
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        keyed = batch_df.withColumn(
-            "blk", F.expr("substring(name, length(name) - 1)")
-        )
-        partial = fs_link(clean, keyed)
-        record_foreach_batch_plan("stream_linkage_pairs", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-        cnt = keyed.groupBy("nat", "blk").agg(F.count(F.lit(1)).alias("n"))
-        record_foreach_batch_plan("stream_linkage_counts", cnt)
-        cnt.write.mode("overwrite").parquet(f"{counts_dir}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(dirty.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    pairs, counts = fold_stream(
+        sf_dir, "stream_linkage", dirty, hash_split("slink", "k"),
+        {
+            "stream_linkage_pairs": lambda b: fs_link(clean, keyed(b)),
+            "stream_linkage_counts": block_counts,
+        },
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    folded_counts = (
-        spark.read.parquet(counts_dir)
-        .groupBy("nat", "blk")
-        .agg(F.sum("n").alias("n"))
-    )
+    folded_counts = counts.groupBy("nat", "blk").agg(F.sum("n").alias("n"))
     ok_blocks = folded_counts.filter(F.col("n") <= FS_BLOCK_CAP).select(
         F.col("nat").alias("nat_d"), F.col("blk").alias("blk_d")
     )
-    pairs = spark.read.parquet(states)
     return pairs.join(F.broadcast(ok_blocks), ["nat_d", "blk_d"]).select(
         "clean_key", "dirty_key", "fs_weight", "is_match"
     )
@@ -2852,56 +1875,22 @@ def q_stream_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     |groups|×|bins| — this twin is the fallback when no such contract
     exists.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_hist")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    gate = F.pmod(F.xxhash64(F.lit("shist"), F.col("value")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_hist", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = batch_df.groupBy("event_type", "value").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("event_type", "value").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        record_foreach_batch_plan("stream_hist_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_hist", ev, hash_split("shist", "value"),
+        {"stream_hist_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "value")
+        states.groupBy("event_type", "value")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         .localCheckpoint()
     )
@@ -2974,54 +1963,17 @@ def q_stream_mime_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-merge, min_doc min-merges — and the fold IS the report (no
     separate finalize arithmetic), sharing MIME_SNIFF_ORACLE verbatim.
     """
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_mime")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    gate = F.pmod(F.xxhash64(F.lit("smime"), F.col("doc_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_mime", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from noaa_etl_spark.streaming.core import record_foreach_batch_plan
-
-        partial = mime_census(batch_df)
-        record_foreach_batch_plan("stream_mime_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_mime", docs, hash_split("smime", "doc_id"),
+        {"stream_mime_partial": mime_census},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     return (
-        spark.read.parquet(states)
-        .groupBy("detected_mime")
+        states.groupBy("detected_mime")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("total_bytes").cast("bigint").alias("total_bytes"),
@@ -3158,20 +2110,7 @@ def q_stream_ewma_irregular(spark: SparkSession, sf_dir: str) -> DataFrame:
     decay_score at 3 dp, matching the q_ewma_irregular noise-floor
     adjudication (an unordered all-positive float sum has noise floor
     ~n·eps·Σ|x|; 6 dp was a ~2e-3 per-user flip probability)."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ewma")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     gate = (
@@ -3189,47 +2128,23 @@ def q_stream_ewma_irregular(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         "user_id", "value", F.unix_micros("ts").alias("t_us"), gate.alias("b")
     )
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            e.filter(F.col("b") == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_ewma", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        w_u = W.partitionBy("user_id")
+    def partial(batch_df: DataFrame) -> DataFrame:
+        w_u = Window.partitionBy("user_id")
         anchored = batch_df.withColumn("t_anchor", F.max("t_us").over(w_u))
         decay = F.exp(
             -((F.col("t_anchor") - F.col("t_us")).cast("double")
               / F.lit(86400000000.0))
         )
-        partial = anchored.groupBy("user_id", "b", "t_anchor").agg(
+        return anchored.groupBy("user_id", "b", "t_anchor").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(F.col("value") * decay).alias("s_b"),
         )
-        record_foreach_batch_plan("stream_ewma_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema("user_id bigint, value double, t_us bigint, b bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [parts] = fold_stream(
+        sf_dir, "stream_ewma", e, F.col("b"), {"stream_ewma_partial": partial}
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    parts = spark.read.parquet(states)
     w_u = Window.partitionBy("user_id")
     aligned = parts.withColumn("t_global", F.max("t_anchor").over(w_u))
     scale = F.exp(
@@ -3260,62 +2175,27 @@ def q_stream_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     meaningless). Live mix-collapse alarm: one combinable agg per
     trigger, |sources|-row maintained state. Shares
     SOURCE_ENTROPY_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.queries.sampling import (
         source_entropy_report,
         source_token_count,
     )
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_src_entropy")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    gate = F.pmod(F.xxhash64(F.lit("sentropy"), F.col("doc_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_src_entropy", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = batch_df.groupBy("source").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("source").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(source_token_count()).cast("bigint").alias("n_tokens"),
         )
-        record_foreach_batch_plan("stream_src_entropy_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_src_entropy", docs, hash_split("sentropy", "doc_id"),
+        {"stream_src_entropy_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("source")
+        states.groupBy("source")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("n_tokens"),
@@ -3338,63 +2218,26 @@ def q_stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-derived-domain lesson applied to a time split). Maintained
     state is the (user, day) reduced relation; shares CUPED_ORACLE
     verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.queries.profiling import cuped_report
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_cuped")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     day = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
     cents = F.floor(F.col("value") * 100).cast("bigint")
-    e = ev.select(
-        "event_id", "user_id", day.alias("day"), cents.alias("cents")
-    )
-    gate = F.pmod(F.xxhash64(F.lit("scuped"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            e.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
+    e = ev.select("user_id", day.alias("day"), cents.alias("cents"))
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_cuped", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = batch_df.groupBy("user_id", "day").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("user_id", "day").agg(
             F.sum("cents").cast("bigint").alias("cents")
         )
-        record_foreach_batch_plan("stream_cuped_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema("user_id bigint, day bigint, cents bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_cuped", e, hash_split("scuped", "event_id"),
+        {"stream_cuped_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("user_id", "day")
+        states.groupBy("user_id", "day")
         .agg(F.sum("cents").cast("bigint").alias("cents"))
     )
     return cuped_report(folded)
@@ -3433,81 +2276,31 @@ def q_stream_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     realization trades that for idempotence. Shares OUT_OF_ORDER_ORACLE
     verbatim — batching by arrival ranges is exactly "the stream",
     so the census is the batch answer by construction."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ooo")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = out_of_order_events(load_table(spark, sf_dir, "events"))
-    # schema of the staged files: ev + the int batch-gate column (the
-    # lit(0) stand-in has the same type as the when-chain gate)
-    evg_schema = ev.withColumn("g", F.lit(0)).schema
+    # the staged files carry the arrival range g, which the finalize reads
+    evg = ev.withColumn("g", range_split(ev, "arrival"))
 
-    def _build_src(d: str) -> None:
-        # the arrival-range boundary collect is BUILD-only work — inside
-        # the closure it runs once per (session, sf_dir), not per run
-        b = ev.agg(
-            F.min("arrival").alias("lo"), F.max("arrival").alias("hi")
-        ).collect()[0]
-        lo, hi = int(b.lo), int(b.hi)
-        cut1 = lo + (hi - lo) // 3
-        cut2 = lo + 2 * ((hi - lo) // 3)
-        g = (
-            F.when(F.col("arrival") < F.lit(cut1), F.lit(0))
-            .when(F.col("arrival") < F.lit(cut2), F.lit(1))
-            .otherwise(F.lit(2))
-        )
-        evg = ev.withColumn("g", g.cast("int"))
-        for i in range(3):
-            evg.filter(F.col("g") == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_ooo", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         w = (
             Window.partitionBy("user_id")
             .orderBy("arrival", "event_id")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        partial = batch_df.select(
+        return batch_df.select(
             "user_id",
             "event_type",
             "g",
             "t",
             F.max("t").over(w).alias("w_runmax"),
         )
-        record_foreach_batch_plan("stream_ooo_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(evg_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_ooo", evg, F.col("g"), {"stream_ooo_partial": partial}
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    st = spark.read.parquet(states).localCheckpoint()
+    st = states.localCheckpoint()
     bm = st.groupBy("user_id", "g").agg(F.max("t").alias("bmax"))
     wg = (
         Window.partitionBy("user_id")
@@ -3530,6 +2323,26 @@ from noaa_etl_spark.queries.temporal import (
 )
 
 
+def _fold_daily_xy(
+    spark: SparkSession, sf_dir: str, name: str, seed: str
+) -> DataFrame:
+    """The per-day (x, y) cents relation (rolling_corr_daily) three twins
+    fold — Pearson, Spearman and Kendall: each micro-batch writes its
+    partial under the plan key ``<name>_partial``; a day split across
+    batches folds by integer addition."""
+    from noaa_etl_spark.io import load_table
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
+    [states] = fold_stream(
+        sf_dir, name, ev, hash_split(seed, "event_id"),
+        {f"{name}_partial": rolling_corr_daily},
+    )
+    return states.groupBy("day").agg(
+        F.sum("x").cast("bigint").alias("x"),
+        F.sum("y").cast("bigint").alias("y"),
+    )
+
+
 @graded("q_stream_rolling_corr", oracle=ROLLING_CORR_ORACLE)
 def q_stream_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the trailing-7d Pearson correlation (twin #38):
@@ -3541,61 +2354,8 @@ def q_stream_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling_corr_report over the folded daily relation (the stats-merge
     discipline on the full joint-moment window). Shares
     ROLLING_CORR_ORACLE verbatim."""
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_rollcorr")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
-    gate = F.pmod(F.xxhash64(F.lit("srcorr"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_rollcorr", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = rolling_corr_daily(batch_df)
-        record_foreach_batch_plan("stream_rollcorr_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    folded = (
-        spark.read.parquet(states)
-        .groupBy("day")
-        .agg(
-            F.sum("x").cast("bigint").alias("x"),
-            F.sum("y").cast("bigint").alias("y"),
-        )
-    )
-    return rolling_corr_report(folded)
+    daily = _fold_daily_xy(spark, sf_dir, "stream_rollcorr", "srcorr")
+    return rolling_corr_report(daily)
 
 
 from noaa_etl_spark.queries.profiling import JSD_DRIFT_ORACLE, jsd_grid, jsd_report
@@ -3611,55 +2371,16 @@ def q_stream_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the fold. Shares JSD_DRIFT_ORACLE verbatim. This is the
     drift-battery member that needs NO smoothing prior as state grows:
     empty bands contribute exactly 0 at any fold depth."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_jsd")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    gate = F.pmod(F.xxhash64(F.lit("sjsd"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_jsd", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = jsd_grid(batch_df)
-        record_foreach_batch_plan("stream_jsd_grid", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_id bigint, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_jsd", ev, hash_split("sjsd", "event_id"),
+        {"stream_jsd_grid": jsd_grid},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("band")
+        states.groupBy("band")
         .agg(
             F.sum("a").cast("bigint").alias("a"),
             F.sum("b").cast("bigint").alias("b"),
@@ -3682,62 +2403,8 @@ def q_stream_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     a day's rank can change every time a later batch adds to any day's
     total, the strongest form of the non-mergeable-rank lesson).
     Shares SPEARMAN_ORACLE verbatim."""
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.queries.temporal import rolling_corr_daily
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_spearman")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
-    gate = F.pmod(F.xxhash64(F.lit("sspear"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_spearman", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = rolling_corr_daily(batch_df)
-        record_foreach_batch_plan("stream_spearman_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    folded = (
-        spark.read.parquet(states)
-        .groupBy("day")
-        .agg(
-            F.sum("x").cast("bigint").alias("x"),
-            F.sum("y").cast("bigint").alias("y"),
-        )
-    )
-    return spearman_report(folded)
+    daily = _fold_daily_xy(spark, sf_dir, "stream_spearman", "sspear")
+    return spearman_report(daily)
 
 
 from noaa_etl_spark.queries.temporal import (
@@ -3759,55 +2426,16 @@ def q_stream_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist-quantiles data-derived-domain lesson applied to a forecast
     horizon). Shares FORECAST_BASELINE_ORACLE verbatim — the live
     "is the model still beating last week's value" monitor."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_fcbt", ev, hash_split("sfcbt", "event_id"),
+        {"stream_fcbt_partial": forecast_eval_daily},
     )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_fcbt")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
-    gate = F.pmod(F.xxhash64(F.lit("sfcbt"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_fcbt", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = forecast_eval_daily(batch_df)
-        record_foreach_batch_plan("stream_fcbt_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "day")
+        states.groupBy("event_type", "day")
         .agg(F.sum("a").cast("bigint").alias("a"))
     )
     return forecast_baseline_report(folded)
@@ -3835,54 +2463,17 @@ def q_stream_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch; the maintained state is |batches|x|days| rows; each
     re-estimate costs one broadcast self-join over the bounded
     calendar, never a history rescan."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_theil_sen")
-    partials = os.path.join(root, "partials")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (partials, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    gate = F.pmod(F.xxhash64(F.lit("sts"), F.col("o_orderkey")), F.lit(3))
 
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            orders.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged once
-    # per session — the drain (checkpoint fresh per run) is unchanged.
-    src = staged_stream_src(sf_dir, "stream_theil_sen", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        part = changepoint_daily(batch_df)
-        record_foreach_batch_plan("stream_theil_sen_partial", part)
-        part.write.mode("overwrite").parquet(f"{partials}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [partials] = fold_stream(
+        sf_dir, "stream_theil_sen", orders, hash_split("sts", "o_orderkey"),
+        {"stream_theil_sen_partial": changepoint_daily},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(partials)
-        .groupBy("d")
+        partials.groupBy("d")
         .agg(F.sum("y").cast("bigint").alias("y"))
     )
     return theil_sen_finalize(folded)
@@ -3903,59 +2494,8 @@ def q_stream_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons are only final after every batch contributes (the
     spearman non-mergeable-rank lesson, strengthened to pairwise
     comparisons). Shares KENDALL_TAU_ORACLE verbatim."""
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.queries.temporal import rolling_corr_daily
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_kendall")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
-    gate = F.pmod(F.xxhash64(F.lit("sken"), F.col("event_id")), F.lit(3))
-
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    src = staged_stream_src(sf_dir, "stream_kendall", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = rolling_corr_daily(batch_df)
-        record_foreach_batch_plan("stream_kendall_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    folded = (
-        spark.read.parquet(states)
-        .groupBy("day")
-        .agg(
-            F.sum("x").cast("bigint").alias("x"),
-            F.sum("y").cast("bigint").alias("y"),
-        )
-    )
-    return kendall_report(folded)
+    daily = _fold_daily_xy(spark, sf_dir, "stream_kendall", "sken")
+    return kendall_report(daily)
 
 
 from noaa_etl_spark.queries.profiling import (
@@ -3976,52 +2516,17 @@ def q_stream_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic's merge discipline). Shares CLIFFS_DELTA_ORACLE
     verbatim — the live "is the shift still LARGE" monitor beside the
     significance monitor."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
+
+    docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
+
+    [states] = fold_stream(
+        sf_dir, "stream_cliffs", docs, hash_split("sclf", "doc_id"),
+        {"stream_cliffs_partial": mannwhitney_grid},
     )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_cliffs")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    gate = F.pmod(F.xxhash64(F.lit("sclf"), F.col("doc_id")), F.lit(3))
-
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).drop("doc_id").coalesce(1).write.mode("append").parquet(d)
-
-    src = staged_stream_src(sf_dir, "stream_cliffs", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = mannwhitney_grid(batch_df)
-        record_foreach_batch_plan("stream_cliffs_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("source string, n_chars bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("source", "v")
+        states.groupBy("source", "v")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
     return cliffs_delta_report(folded.localCheckpoint())
@@ -4049,52 +2554,16 @@ def q_stream_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonconformity, which only a grid-state twin survives). Shares
     CONFORMAL_ORACLE verbatim — the live model-serving coverage
     monitor."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_conformal")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    gate = F.pmod(F.xxhash64(F.lit("sconf"), F.col("event_id")), F.lit(3))
-
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
-
-    src = staged_stream_src(sf_dir, "stream_conformal", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = conformal_grid(batch_df)
-        record_foreach_batch_plan("stream_conformal_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_id bigint, event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_conformal", ev, hash_split("sconf", "event_id"),
+        {"stream_conformal_partial": conformal_grid},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "is_cal", "cents")
+        states.groupBy("event_type", "is_cal", "cents")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
     return conformal_report(folded)
@@ -4113,33 +2582,10 @@ def q_stream_mspt(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs, the stream_ab_test machinery); the mixture-LR chain runs
     only in the shared mspt_report over the fold. Shares
     SEQUENTIAL_MSPT_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.queries.profiling import ab_moments
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
-    )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_mspt")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "user_id", "value"
-    )
-    gate = F.pmod(F.xxhash64(F.lit("smspt"), F.col("event_id")), F.lit(3))
-
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    src = staged_stream_src(sf_dir, "stream_mspt", _build_src)
+    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "value")
 
     arm = F.when(
         F.substring(
@@ -4150,30 +2596,19 @@ def q_stream_mspt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit("B"))
     cents = F.floor(F.col("value") * 100).cast("bigint")
 
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         assigned = batch_df.select(
             "event_type", arm.alias("arm"), cents.alias("cents")
         )
-        partial = ab_moments(assigned)
-        record_foreach_batch_plan("stream_mspt_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
+        return ab_moments(assigned)
 
-    stream = (
-        spark.readStream.schema("event_type string, user_id bigint, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_mspt", ev, hash_split("smspt", "event_id"),
+        {"stream_mspt_partial": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type")
+        states.groupBy("event_type")
         .agg(
             F.sum("n_a").cast("bigint").alias("n_a"),
             F.sum("n_b").cast("bigint").alias("n_b"),
@@ -4199,52 +2634,17 @@ def q_stream_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     meaningless until every batch has contributed (the spearman
     non-mergeable-rank lesson on the frequency axis). Shares
     ZIPF_FIT_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
+
+    docs = load_table(spark, sf_dir, "documents").select("text")
+
+    [states] = fold_stream(
+        sf_dir, "stream_zipf", docs, hash_split("szipf", "doc_id"),
+        {"stream_zipf_partial": zipf_counts},
     )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_zipf")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    gate = F.pmod(F.xxhash64(F.lit("szipf"), F.col("doc_id")), F.lit(3))
-
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).drop("doc_id").coalesce(1).write.mode("append").parquet(d)
-
-    src = staged_stream_src(sf_dir, "stream_zipf", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = zipf_counts(batch_df)
-        record_foreach_batch_plan("stream_zipf_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("word")
+        states.groupBy("word")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
     return zipf_report(folded)
@@ -4271,55 +2671,16 @@ def q_stream_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     period cut are batch-independent pure functions of (user_id, ts),
     so state rows merge regardless of arrival order. Shares DID_ORACLE
     verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_did", ev, hash_split("sdid", "event_id"),
+        {"stream_did_cells": lambda b: did_cells(did_assign(b))},
     )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_did")
-    src, states, ckpt = (os.path.join(root, d) for d in ("src", "states", "ckpt"))
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
-    gate = F.pmod(F.xxhash64(F.lit("sdid"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_did", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = did_cells(did_assign(batch_df))
-        record_foreach_batch_plan("stream_did_cells", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     cols = [f"{p}_{a}{t}" for p in ("n", "s", "q") for a in ("a", "b") for t in (0, 1)]
-    folded = spark.read.parquet(states).agg(
-        *[F.sum(c).cast("bigint").alias(c) for c in cols]
-    )
+    folded = states.agg(*[F.sum(c).cast("bigint").alias(c) for c in cols])
     return did_report(folded)
 
 
@@ -4331,54 +2692,16 @@ def q_stream_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch), so the maintained state is the additive (grp, cents, count)
     grid and the doubled-midrank machinery runs only in the shared
     finalize over the fold. Shares KRUSKAL_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_kruskal", ev, hash_split("skw", "event_id"),
+        {"stream_kruskal_grid": kruskal_grid},
     )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_kruskal")
-    src, states, ckpt = (os.path.join(root, d) for d in ("src", "states", "ckpt"))
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    gate = F.pmod(F.xxhash64(F.lit("skw"), F.col("event_id")), F.lit(3))
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            ev.filter(gate == i).drop("event_id").coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_kruskal", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = kruskal_grid(batch_df)
-        record_foreach_batch_plan("stream_kruskal_grid", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     folded = (
-        spark.read.parquet(states)
-        .groupBy("grp", "v")
+        states.groupBy("grp", "v")
         .agg(F.sum("c").cast("bigint").alias("c"))
         .localCheckpoint()
     )
@@ -4405,69 +2728,25 @@ def q_stream_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative curve and ln-ln fit run only in the shared finalize
     because vocab-so-far at doc i depends on every batch's firsts.
     Shares HEAPS_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_heaps")
-    src, st_tok, st_first, ckpt = (
-        os.path.join(root, d) for d in ("src", "tokens", "firsts", "ckpt")
-    )
-    for d in (st_tok, st_first, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    gate = F.pmod(F.xxhash64(F.lit("sheaps"), F.col("doc_id")), F.lit(3))
 
-    def _build_src(d: str) -> None:
-        for i in range(3):
-            docs.filter(gate == i).coalesce(1).write.mode("append").parquet(d)
+    def toks(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select("doc_id", _heaps_tokenize(F.col("text")).alias("tk"))
 
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_heaps", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        toks = batch_df.select(
-            "doc_id", _heaps_tokenize(F.col("text")).alias("tk")
-        )
-        tokens = toks.select(
-            "doc_id", F.size("tk").cast("bigint").alias("n_tok")
-        )
-        firsts = heaps_word_firsts(toks)
-        record_foreach_batch_plan("stream_heaps_tokens", tokens)
-        record_foreach_batch_plan("stream_heaps_firsts", firsts)
-        tokens.write.mode("overwrite").parquet(f"{st_tok}/batch_id={batch_id}")
-        firsts.write.mode("overwrite").parquet(f"{st_first}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    tokens, firsts = fold_stream(
+        sf_dir, "stream_heaps", docs, hash_split("sheaps", "doc_id"),
+        {
+            "stream_heaps_tokens": lambda b: toks(b).select(
+                "doc_id", F.size("tk").cast("bigint").alias("n_tok")
+            ),
+            "stream_heaps_firsts": lambda b: heaps_word_firsts(toks(b)),
+        },
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    tokens = spark.read.parquet(st_tok).select("doc_id", "n_tok")
-    firsts = (
-        spark.read.parquet(st_first)
-        .groupBy("w")
-        .agg(F.min("fd").cast("bigint").alias("fd"))
-    )
-    return heaps_report(tokens, firsts)
+    firsts = firsts.groupBy("w").agg(F.min("fd").cast("bigint").alias("fd"))
+    return heaps_report(tokens.select("doc_id", "n_tok"), firsts)
 
 
 from noaa_etl_spark.queries.etl import (
@@ -4486,51 +2765,6 @@ from noaa_etl_spark.queries.profiling import (
 )
 
 
-def _drain_batches(spark, root, source_df, order_cols, schema, absorb,
-                   n_batches=3, gate_seed="g", sf_dir=None):
-    """Shared twin scaffolding: write source_df as n_batches hash-gated
-    parquet files, drain them one per micro-batch through foreachBatch
-    absorb(batch_df, batch_id), availableNow + fresh checkpoint.
-
-    r16 opt (VERDICT r15 item 6): when the caller passes ``sf_dir``,
-    the source files are staged ONCE per (session, sf_dir, twin) via
-    streaming.core.staged_stream_src — the deterministic hash-gated
-    split is input preparation, and re-writing it cost 2-3 jobs per
-    twin per invocation. The checkpoint stays fresh per run (drain
-    semantics untouched); sf_dir=None keeps the per-run writes."""
-    import os
-    import shutil
-
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    ckpt = os.path.join(root, "ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    gate = F.pmod(F.xxhash64(F.lit(gate_seed), F.col(order_cols)), F.lit(n_batches))
-
-    def _build_src(d: str) -> None:
-        for i in range(n_batches):
-            source_df.filter(gate == i).drop(order_cols).coalesce(1).write.mode(
-                "append"
-            ).parquet(d)
-
-    if sf_dir is not None:
-        src = staged_stream_src(sf_dir, os.path.basename(root), _build_src)
-    else:
-        src = os.path.join(root, "src")
-        shutil.rmtree(src, ignore_errors=True)
-        _build_src(src)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
 @graded("q_stream_multiple_regression", oracle=MULTI_REG_ORACLE)
 def q_stream_multiple_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the 2-feature OLS (twin #51) — INCREMENTAL
@@ -4540,41 +2774,19 @@ def q_stream_multiple_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     solve runs only at finalize over the fold — the model is exactly
     re-fit on all data after every batch at O(1) state. Shares
     MULTI_REG_ORACLE verbatim."""
-    import os
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ols")
-    states = os.path.join(root, "states")
-    import shutil
-
-    shutil.rmtree(states, ignore_errors=True)
 
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_discount", "l_extendedprice"
+        "l_quantity", "l_discount", "l_extendedprice"
     )
 
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = ols_moments(ols_obs(batch_df))
-        record_foreach_batch_plan("stream_ols_moments", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
+    [states] = fold_stream(
+        sf_dir, "stream_ols", li, hash_split("sols", "l_orderkey"),
+        {"stream_ols_moments": lambda b: ols_moments(ols_obs(b))},
+    )
 
-    _drain_batches(
-        spark,
-        root,
-        li,
-        "l_orderkey",
-        "l_quantity double, l_discount double, l_extendedprice double",
-        absorb,
-        gate_seed="sols", sf_dir=sf_dir)
     cols = ["n", "sx1", "sx2", "sy", "sx11", "sx22", "sx12", "sx1y", "sx2y", "syy"]
-    folded = spark.read.parquet(states).agg(
-        *[F.sum(c).cast("bigint").alias(c) for c in cols]
-    )
+    folded = states.agg(*[F.sum(c).cast("bigint").alias(c) for c in cols])
     return ols_report(folded)
 
 
@@ -4586,37 +2798,16 @@ def q_stream_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1)); the prefix-sum gain scan and rounded-gain argmax run only at
     finalize, because every candidate split's counts depend on all
     batches. Shares STUMP_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_stump", ev, hash_split("sstump", "event_id"),
+        {"stream_stump_grid": stump_grid},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_stump")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = stump_grid(batch_df)
-        record_foreach_batch_plan("stream_stump_grid", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "event_type string, value double",
-        absorb,
-        gate_seed="sstump", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("bucket")
+        states.groupBy("bucket")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("pos").cast("bigint").alias("pos"),
@@ -4634,39 +2825,16 @@ def q_stream_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
     run only at finalize (per-batch diffs would pair a user's pre
     events against an incomplete post — the first PAIRED-design merge).
     Shares WILCOXON_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_wilcoxon", ev, hash_split("swsr", "event_id"),
+        {"stream_wilcoxon_user": wilcoxon_user_state},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_wilcoxon")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "value"
-    )
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = wilcoxon_user_state(batch_df)
-        record_foreach_batch_plan("stream_wilcoxon_user", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "user_id bigint, ts timestamp, value double",
-        absorb,
-        gate_seed="swsr", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("user_id")
+        states.groupBy("user_id")
         .agg(
             F.sum("pre").cast("bigint").alias("pre"),
             F.sum("post").cast("bigint").alias("post"),
@@ -4698,37 +2866,16 @@ def q_stream_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     v@rank((n+2) div 2) == quantile_cont's odd/even midpoint identity)
     before building the deviation moments FROM THE GRID. Shares
     LEVENE_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_levene", ev, hash_split("slev", "event_id"),
+        {"stream_levene_grid": kruskal_grid},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_levene")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = kruskal_grid(batch_df)
-        record_foreach_batch_plan("stream_levene_grid", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "event_type string, value double",
-        absorb,
-        gate_seed="slev", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("grp", "v")
+        states.groupBy("grp", "v")
         .agg(F.sum("c").cast("bigint").alias("c"))
         .localCheckpoint()
     )
@@ -4745,38 +2892,19 @@ def q_stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum — the stream_kendall lesson on the calendar axis). Pair scan,
     tie correction, and the continuity-corrected z run only at
     finalize. Shares MANN_KENDALL_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.queries.profiling import mann_kendall_finalize
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    # the stream has always read the NTZ column as TIMESTAMP (session TZ is UTC)
+    date = F.col("o_orderdate").cast("timestamp").alias("o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").select(date)
+    [states] = fold_stream(
+        sf_dir, "stream_mk", orders, hash_split("smk", "o_orderkey"),
+        {"stream_mk_daily": _mk_daily},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_mk")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = _mk_daily(batch_df)
-        record_foreach_batch_plan("stream_mk_daily", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        orders,
-        "o_orderkey",
-        "o_orderdate timestamp",
-        absorb,
-        gate_seed="smk", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("d")
+        states.groupBy("d")
         .agg(F.sum("y").cast("bigint").alias("y"))
         .localCheckpoint()
     )
@@ -4791,39 +2919,16 @@ def q_stream_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
     events arrive across batches; per-batch alphas would correlate
     incomplete items), variances and alpha only at finalize. Shares
     CRONBACH_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_cronbach", ev, hash_split("scron", "event_id"),
+        {"stream_cronbach_user": cronbach_user_state},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_cronbach")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = cronbach_user_state(batch_df)
-        record_foreach_batch_plan("stream_cronbach_user", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "user_id bigint, event_type string, value double",
-        absorb,
-        gate_seed="scron", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("user_id")
+        states.groupBy("user_id")
         .agg(
             F.sum("x1").cast("bigint").alias("x1"),
             F.sum("x2").cast("bigint").alias("x2"),
@@ -4852,54 +2957,20 @@ def q_stream_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-squares) contribution to the folded internal moments: the
     interval-merge discipline applied to MOMENT state. Shares
     GAP_REGULARITY_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-        staged_stream_src,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_gapreg")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("t"), "event_id"
     )
 
-    def _build_src(d: str) -> None:
-        # the arrival-range boundary collect is BUILD-only work — inside
-        # the closure it runs once per (session, sf_dir), not per run
-        b = ev.agg(F.min("t").alias("lo"), F.max("t").alias("hi")).collect()[0]
-        lo, hi = int(b.lo), int(b.hi)
-        cut1 = lo + (hi - lo) // 3
-        cut2 = lo + 2 * ((hi - lo) // 3)
-        g = (
-            F.when(F.col("t") < F.lit(cut1), F.lit(0))
-            .when(F.col("t") < F.lit(cut2), F.lit(1))
-            .otherwise(F.lit(2))
-        )
-        evg = ev.withColumn("g", g.cast("int"))
-        for i in range(3):
-            evg.filter(F.col("g") == i).drop("g").coalesce(1).write.mode(
-                "append"
-            ).parquet(d)
-
-    src = staged_stream_src(sf_dir, "stream_gapreg", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy("t", "event_id")
         gaps = batch_df.select(
             "user_id",
             "t",
             (F.col("t") - F.lag("t").over(w)).alias("dt"),
         )
-        seg = gaps.groupBy("user_id").agg(
+        return gaps.groupBy("user_id").agg(
             F.count_if(F.col("dt").isNotNull()).cast("bigint").alias("n_g"),
             F.coalesce(
                 F.sum(F.expr("dt div 1000000")), F.lit(0)
@@ -4910,23 +2981,12 @@ def q_stream_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("t").cast("bigint").alias("first_t"),
             F.max("t").cast("bigint").alias("last_t"),
         )
-        record_foreach_batch_plan("stream_gapreg_segments", seg)
-        seg.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema("user_id bigint, t bigint, event_id bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [segs] = fold_stream(
+        sf_dir, "stream_gapreg", ev, range_split(ev, "t"),
+        {"stream_gapreg_segments": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    segs = spark.read.parquet(states)
     with_bg = segs.select(
         "user_id",
         "n_g",
@@ -4965,38 +3025,19 @@ def q_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     x-bar_t depends on the whole prefix, so no per-batch partial of
     the fold itself can merge (the holt-recurrence lesson). Shares
     PAGE_HINKLEY_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.queries.temporal import page_hinkley_finalize
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    # the stream has always read the NTZ column as TIMESTAMP (session TZ is UTC)
+    date = F.col("o_orderdate").cast("timestamp").alias("o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").select(date)
+    [states] = fold_stream(
+        sf_dir, "stream_ph", orders, hash_split("sph", "o_orderkey"),
+        {"stream_ph_daily": _mk_daily},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_ph")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = _mk_daily(batch_df)
-        record_foreach_batch_plan("stream_ph_daily", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        orders,
-        "o_orderkey",
-        "o_orderdate timestamp",
-        absorb,
-        gate_seed="sph", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("d")
+        states.groupBy("d")
         .agg(F.sum("y").cast("bigint").alias("y"))
     )
     return page_hinkley_finalize(folded)
@@ -5012,27 +3053,14 @@ def q_stream_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer merges; the mean is derived from the folded sum at
     report time (never fold per-batch means). Shares NORM_AUDIT_ORACLE
     verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.functions.vectors import l2_norm
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_norms")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
+    emb = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         qn = F.floor(l2_norm(F.col("embedding")) * 1000000 + 0.5).cast("bigint")
-        partial = (
+        return (
             batch_df.select("label", qn.alias("qn"))
             .groupBy("label")
             .agg(
@@ -5048,18 +3076,13 @@ def q_stream_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("n_unit"),
             )
         )
-        record_foreach_batch_plan("stream_norms_partial", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    _drain_batches(
-        spark,
-        root,
-        emb,
-        "vec_id",
-        "label int, embedding array<float>",
-        absorb,
-        gate_seed="snorm", sf_dir=sf_dir)
-    folded = spark.read.parquet(states).groupBy("label").agg(
+    [states] = fold_stream(
+        sf_dir, "stream_norms", emb, hash_split("snorm", "vec_id"),
+        {"stream_norms_partial": partial},
+    )
+
+    folded = states.groupBy("label").agg(
         F.sum("n").cast("bigint").alias("n_vecs"),
         F.min("min_u").cast("bigint").alias("min_norm_u"),
         F.max("max_u").cast("bigint").alias("max_norm_u"),
@@ -5098,37 +3121,16 @@ def q_stream_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-equal to the batch windowed-percentile form, so the twin
     shares TUKEY_FENCES_ORACLE verbatim. Quantiles and fence counts
     run only at finalize (every batch shifts every rank)."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_tukey", ev, hash_split("stuk", "event_id"),
+        {"stream_tukey_grid": tukey_grid},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_tukey")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = tukey_grid(batch_df)
-        record_foreach_batch_plan("stream_tukey_grid", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "event_type string, value double",
-        absorb,
-        gate_seed="stuk", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("event_type", "value")
+        states.groupBy("event_type", "value")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
     return tukey_report_from_grid(folded)
@@ -5150,39 +3152,16 @@ def q_stream_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
     are recomputed from the fold at every report — a per-batch reversal
     flag would compare effects of different populations. Shares
     SIMPSON_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
+
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_simpson", ev, hash_split("ssimp", "event_id"),
+        {"stream_simpson_cells": simpson_cells},
     )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_simpson")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = simpson_cells(batch_df)
-        record_foreach_batch_plan("stream_simpson_cells", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "user_id bigint, event_type string, value double",
-        absorb,
-        gate_seed="ssimp", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states)
-        .groupBy("stratum")
+        states.groupBy("stratum")
         .agg(
             F.sum("n_a").cast("bigint").alias("n_a"),
             F.sum("n_b").cast("bigint").alias("n_b"),
@@ -5214,18 +3193,7 @@ def q_stream_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFra
     Batches are deliberately split by line hash (not order hash) so
     cross-batch orders actually occur. Shares LOCAL_CC_ORACLE
     verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_cc")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_linenumber", "l_orderkey", "l_partkey", "l_quantity"
@@ -5234,22 +3202,16 @@ def q_stream_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFra
         "line_id",
         F.xxhash64(F.lit("scc"), F.col("l_orderkey"), F.col("l_partkey")),
     )
+    [states] = fold_stream(
+        sf_dir,
+        "stream_cc",
+        li.drop("l_linenumber", "line_id"),
+        hash_split("scc2", "line_id"),
+        {"stream_cc_items": cc_items},
+    )
 
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = cc_items(batch_df)
-        record_foreach_batch_plan("stream_cc_items", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(
-        spark,
-        root,
-        li.drop("l_linenumber"),
-        "line_id",
-        "l_orderkey bigint, l_partkey bigint, l_quantity double",
-        absorb,
-        gate_seed="scc2", sf_dir=sf_dir)
     folded = (
-        spark.read.parquet(states).select("l_orderkey", "part").distinct()
+        states.select("l_orderkey", "part").distinct()
     )
     return cc_report_from_items(folded)
 
@@ -5269,36 +3231,6 @@ from noaa_etl_spark.queries.temporal import (
 )
 
 
-def _simple_fb_twin(spark, sf_dir, name, src_cols, src_schema, key_col,
-                    table, state_fn, plan_key, fold_fn, report_fn, gate_seed):
-    """Shared scaffolding for additive/min-mergeable foreachBatch twins:
-    write the source in 3 hash-gated files, absorb per-batch state via
-    state_fn, fold all batch states with fold_fn, report."""
-    import os
-    import shutil
-
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), name)
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
-
-    src_df = load_table(spark, sf_dir, table).select(key_col, *src_cols)
-
-    def absorb(batch_df, batch_id: int) -> None:
-        partial = state_fn(batch_df)
-        record_foreach_batch_plan(plan_key, partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
-
-    _drain_batches(spark, root, src_df, key_col, src_schema, absorb,
-                   gate_seed=gate_seed, sf_dir=sf_dir)
-    return report_fn(fold_fn(spark.read.parquet(states)))
-
-
 @graded("q_stream_metric_waterfall", oracle=METRIC_WATERFALL_ORACLE)
 def q_stream_metric_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the revenue-bridge waterfall (twin #63) — the
@@ -5306,21 +3238,21 @@ def q_stream_metric_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold by addition; all three effects recomputed from the fold (a
     per-batch rate0 would price the volume effect off an incomplete
     baseline). Shares METRIC_WATERFALL_ORACLE verbatim."""
-    def fold(states):
-        return states.groupBy("event_type").agg(
-            F.sum("n0").cast("bigint").alias("n0"),
-            F.sum("n1").cast("bigint").alias("n1"),
-            F.sum("r0").cast("bigint").alias("r0"),
-            F.sum("r1").cast("bigint").alias("r1"),
-        )
+    from noaa_etl_spark.io import load_table
 
-    return _simple_fb_twin(
-        spark, sf_dir, "stream_waterfall",
-        ["ts", "event_type", "value"],
-        "ts timestamp, event_type string, value double",
-        "event_id", "events", waterfall_cells,
-        "stream_waterfall_cells", fold, waterfall_report, "swf",
+    ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_waterfall", ev, hash_split("swf", "event_id"),
+        {"stream_waterfall_cells": waterfall_cells},
     )
+
+    folded = states.groupBy("event_type").agg(
+        F.sum("n0").cast("bigint").alias("n0"),
+        F.sum("n1").cast("bigint").alias("n1"),
+        F.sum("r0").cast("bigint").alias("r0"),
+        F.sum("r1").cast("bigint").alias("r1"),
+    )
+    return waterfall_report(folded)
 
 
 @graded("q_stream_seasonality", oracle=SEASONALITY_STRENGTH_ORACLE)
@@ -5331,18 +3263,18 @@ def q_stream_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and hence every residual) is a cross-batch sum, the stream_
     rolling_corr lesson on the dow axis. Shares
     SEASONALITY_STRENGTH_ORACLE verbatim."""
-    def fold(states):
-        return states.groupBy("event_type", "day_idx").agg(
-            F.sum("y").cast("bigint").alias("y")
-        )
+    from noaa_etl_spark.io import load_table
 
-    return _simple_fb_twin(
-        spark, sf_dir, "stream_seasonality",
-        ["ts", "event_type", "value"],
-        "ts timestamp, event_type string, value double",
-        "event_id", "events", seasonality_daily,
-        "stream_seasonality_daily", fold, seasonality_report, "ssea",
+    ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_seasonality", ev, hash_split("ssea", "event_id"),
+        {"stream_seasonality_daily": seasonality_daily},
     )
+
+    folded = states.groupBy("event_type", "day_idx").agg(
+        F.sum("y").cast("bigint").alias("y")
+    )
+    return seasonality_report(folded)
 
 
 @graded("q_stream_funnel_ttc", oracle=TIME_TO_CONVERT_ORACLE)
@@ -5354,20 +3286,20 @@ def q_stream_funnel_ttc(spark: SparkSession, sf_dir: str) -> DataFrame:
     first view and first purchase may arrive in different batches and
     a per-batch latency would pair the wrong touches. Shares
     TIME_TO_CONVERT_ORACLE verbatim."""
-    def fold(states):
-        return states.groupBy("user_id").agg(
-            F.min("t_view").alias("t_view"),
-            F.min("t_click").alias("t_click"),
-            F.min("t_purchase").alias("t_purchase"),
-        )
+    from noaa_etl_spark.io import load_table
 
-    return _simple_fb_twin(
-        spark, sf_dir, "stream_ttc",
-        ["ts", "user_id", "event_type"],
-        "ts timestamp, user_id bigint, event_type string",
-        "event_id", "events", ttc_firsts,
-        "stream_ttc_firsts", fold, ttc_report, "sttc",
+    ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "event_type")
+    [states] = fold_stream(
+        sf_dir, "stream_ttc", ev, hash_split("sttc", "event_id"),
+        {"stream_ttc_firsts": ttc_firsts},
     )
+
+    folded = states.groupBy("user_id").agg(
+        F.min("t_view").alias("t_view"),
+        F.min("t_click").alias("t_click"),
+        F.min("t_purchase").alias("t_purchase"),
+    )
+    return ttc_report(folded)
 
 
 from noaa_etl_spark.queries.temporal import BOUNCE_RATE_ORACLE
@@ -5389,74 +3321,26 @@ def q_stream_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches (the running-island machinery on SESSION state; correct by
     the same argument as twin #57's boundary gaps). Shares
     BOUNCE_RATE_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
-
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_bounce")
-    states = os.path.join(root, "states")
-    ckpt = os.path.join(root, "ckpt")
-    for d in (states, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", F.unix_micros("ts").alias("t")
     )
 
-    def _build_src(d: str) -> None:
-        # the arrival-range boundary collect is BUILD-only work — inside
-        # the closure it runs once per (session, sf_dir), not per run
-        b = ev.agg(F.min("t").alias("lo"), F.max("t").alias("hi")).collect()[0]
-        lo, hi = int(b.lo), int(b.hi)
-        cut1 = lo + (hi - lo) // 3
-        cut2 = lo + 2 * ((hi - lo) // 3)
-        g = (
-            F.when(F.col("t") < F.lit(cut1), F.lit(0))
-            .when(F.col("t") < F.lit(cut2), F.lit(1))
-            .otherwise(F.lit(2))
-        )
-        evg = ev.withColumn("g", g.cast("int"))
-        for i in range(3):
-            evg.filter(F.col("g") == i).select(
-                "event_id", "user_id", "ts"
-            ).coalesce(1).write.mode("append").parquet(d)
-
-    # r16 opt (VERDICT r15 item 6): micro-batch source files staged
-    # once per session — the drain (checkpoint fresh per run) is
-    # unchanged.
-    from noaa_etl_spark.streaming.core import staged_stream_src
-
-    src = staged_stream_src(sf_dir, "stream_bounce", _build_src)
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         sess = _sess_op(batch_df, tiebreak_col="event_id")
-        summ = sess.groupBy("user_id", "session_id").agg(
+        return sess.groupBy("user_id", "session_id").agg(
             F.min(F.unix_micros("ts")).cast("bigint").alias("s_us"),
             F.max(F.unix_micros("ts")).cast("bigint").alias("e_us"),
             F.count(F.lit(1)).cast("bigint").alias("n_ev"),
         )
-        record_foreach_batch_plan("stream_bounce_sessions", summ)
-        summ.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    [states] = fold_stream(
+        sf_dir, "stream_bounce", ev.drop("t"), range_split(ev, "t"),
+        {"stream_bounce_sessions": partial},
     )
-    query = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
-    segs = spark.read.parquet(states).select("user_id", "s_us", "e_us", "n_ev")
+    segs = states.select("user_id", "s_us", "e_us", "n_ev")
     w = Window.partitionBy("user_id").orderBy("s_us")
     new_island = F.when(
         F.lag("e_us").over(w).isNull()
@@ -5497,28 +3381,17 @@ def q_stream_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison), the score derives from the folded counts at report
     time (never average per-batch Apdex values — unequal batch sizes
     would weight them wrongly). Shares APDEX_ORACLE verbatim."""
-    import os
-    import shutil
-
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import (
-        _CHECKPOINT_ROOT,
-        record_foreach_batch_plan,
-    )
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_apdex")
-    states = os.path.join(root, "states")
-    shutil.rmtree(states, ignore_errors=True)
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
 
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-
-    def absorb(batch_df, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
         band = (
             F.when(F.col("value") <= 50.0, 1)
             .when(F.col("value") <= 200.0, 2)
             .otherwise(3)
         )
-        partial = (
+        return (
             batch_df.select("event_type", band.alias("band"))
             .groupBy("event_type")
             .agg(
@@ -5528,18 +3401,13 @@ def q_stream_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count_if(F.col("band") == 3).cast("bigint").alias("n_frustrated"),
             )
         )
-        record_foreach_batch_plan("stream_apdex_bands", partial)
-        partial.write.mode("overwrite").parquet(f"{states}/batch_id={batch_id}")
 
-    _drain_batches(
-        spark,
-        root,
-        ev,
-        "event_id",
-        "event_type string, value double",
-        absorb,
-        gate_seed="sapx", sf_dir=sf_dir)
-    folded = spark.read.parquet(states).groupBy("event_type").agg(
+    [states] = fold_stream(
+        sf_dir, "stream_apdex", ev, hash_split("sapx", "event_id"),
+        {"stream_apdex_bands": partial},
+    )
+
+    folded = states.groupBy("event_type").agg(
         F.sum("n").cast("bigint").alias("n"),
         F.sum("n_satisfied").cast("bigint").alias("n_satisfied"),
         F.sum("n_tolerating").cast("bigint").alias("n_tolerating"),
@@ -5586,19 +3454,19 @@ def q_stream_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch can add errors to an hour already reported (the
     replay-idempotent fold, not an intake-time carry). Shares
     SLO_BURN_ORACLE verbatim."""
-    def fold(states):
-        return states.groupBy("hour_idx").agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("n_err").cast("bigint").alias("n_err"),
-        )
+    from noaa_etl_spark.io import load_table
 
-    return _simple_fb_twin(
-        spark, sf_dir, "stream_slo",
-        ["ts", "event_type"],
-        "ts timestamp, event_type string",
-        "event_id", "events", slo_hourly,
-        "stream_slo_hourly", fold, slo_report, "sslo",
+    ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
+    [states] = fold_stream(
+        sf_dir, "stream_slo", ev, hash_split("sslo", "event_id"),
+        {"stream_slo_hourly": slo_hourly},
     )
+
+    folded = states.groupBy("hour_idx").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("n_err").cast("bigint").alias("n_err"),
+    )
+    return slo_report(folded)
 
 
 @graded("q_stream_mcc", oracle=MCC_ORACLE)
@@ -5607,21 +3475,21 @@ def q_stream_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells fold by addition and the correlation derives from the folded
     cells (never average per-batch MCCs — the ratio is not linear in
     the cells). Shares MCC_ORACLE verbatim."""
-    def fold(states):
-        return states.agg(
-            F.sum("tp").cast("bigint").alias("tp"),
-            F.sum("fp").cast("bigint").alias("fp"),
-            F.sum("fn").cast("bigint").alias("fn"),
-            F.sum("tn").cast("bigint").alias("tn"),
-        )
+    from noaa_etl_spark.io import load_table
 
-    return _simple_fb_twin(
-        spark, sf_dir, "stream_mcc",
-        ["event_type", "value"],
-        "event_type string, value double",
-        "event_id", "events", mcc_confusion,
-        "stream_mcc_conf", fold, mcc_report, "smcc",
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_mcc", ev, hash_split("smcc", "event_id"),
+        {"stream_mcc_conf": mcc_confusion},
     )
+
+    folded = states.agg(
+        F.sum("tp").cast("bigint").alias("tp"),
+        F.sum("fp").cast("bigint").alias("fp"),
+        F.sum("fn").cast("bigint").alias("fn"),
+        F.sum("tn").cast("bigint").alias("tn"),
+    )
+    return mcc_report(folded)
 
 
 @graded("q_stream_cochran_armitage", oracle=COCHRAN_ARMITAGE_ORACLE)
@@ -5631,16 +3499,16 @@ def q_stream_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Var(T) run only at finalize (p = R/N shifts with every batch, so
     no per-batch z is meaningful). Shares COCHRAN_ARMITAGE_ORACLE
     verbatim."""
-    def fold(states):
-        return states.groupBy("s").agg(
-            F.sum("n_i").cast("bigint").alias("n_i"),
-            F.sum("r_i").cast("bigint").alias("r_i"),
-        )
+    from noaa_etl_spark.io import load_table
 
-    return _simple_fb_twin(
-        spark, sf_dir, "stream_ca",
-        ["event_type", "value"],
-        "event_type string, value double",
-        "event_id", "events", ca_grid,
-        "stream_ca_grid", fold, ca_report, "sca",
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    [states] = fold_stream(
+        sf_dir, "stream_ca", ev, hash_split("sca", "event_id"),
+        {"stream_ca_grid": ca_grid},
     )
+
+    folded = states.groupBy("s").agg(
+        F.sum("n_i").cast("bigint").alias("n_i"),
+        F.sum("r_i").cast("bigint").alias("r_i"),
+    )
+    return ca_report(folded)

@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 from noaa_etl_spark.functions.text import (
     EN_STOPWORDS,
     LANG_MARKERS,
-    _marker_hits,
+    marker_hits,
     ngrams,
-    quality_score,
-    stopword_ratio,
     tokenize,
 )
 from noaa_etl_spark.io import load_table, spread_small_scan
@@ -517,7 +515,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = toks.select(
         "lang",
         *[
-            _marker_hits(F.col("_t"), LANG_MARKERS[lang]).alias(f"h_{lang}")
+            marker_hits(F.col("_t"), LANG_MARKERS[lang]).alias(f"h_{lang}")
             for lang in langs
         ],
     )

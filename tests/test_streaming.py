@@ -497,3 +497,95 @@ def test_stream_forecast_backtest_equals_batch(spark):
     s = {r["event_type"]: tuple(r[c] for c in cols)
          for r in QUERIES["q_stream_forecast_backtest"](spark, SF_SMALL).collect()}
     assert b == s and b
+
+
+# One twin per fold-state shape: a single additive partial (the
+# stream_events benchmark twin), two frames written per batch, and a
+# partial passed straight through as a shared state function.
+RESUME_TWINS = {
+    "q_stream_user_ltv": "q_user_ltv",
+    "q_stream_kmv_distinct": "q_kmv_distinct",
+    "q_stream_mcc": "q_mcc_score",
+}
+
+
+@pytest.mark.parametrize("twin", sorted(RESUME_TWINS))
+def test_fold_twin_resumes_after_failed_batch(spark, monkeypatch, twin):
+    """Kill a fold twin right after batch 1 has written its states, then
+    restart on the same checkpoint: Spark replays batch 1, whose
+    batch_id-keyed overwrite replaces the first attempt's output, and
+    the folded result equals the batch query's. An append in place of
+    the overwrite would count batch 1 twice."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from noaa_etl_spark.queries import QUERIES
+    from noaa_etl_spark.streaming import core
+    from noaa_etl_spark.streaming.core import STREAM_PLAN_KEYS
+
+    last = STREAM_PLAN_KEYS[twin][-1].removeprefix("fb_")
+    real_parquet = DataFrameWriter.parquet
+    written, failed = [], []
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        written.append(os.path.basename(path))
+        if path.endswith(f"{last}/batch_id=1") and not failed:
+            failed.append(path)  # batch 1's last write: fail exactly once
+            raise RuntimeError("injected failure after batch 1")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Exception, match="injected failure"):
+        QUERIES[twin](spark, SF_SMALL).collect()
+
+    written.clear()
+    with monkeypatch.context() as m:
+        m.setattr(core.shutil, "rmtree", lambda *a, **k: None)  # keep ckpt + states
+        resumed = QUERIES[twin](spark, SF_SMALL).collect()
+    assert "batch_id=0" not in written, "batch 0 re-ran: the checkpoint was not resumed"
+    assert "batch_id=1" in written and "batch_id=2" in written
+
+    batch = QUERIES[RESUME_TWINS[twin]](spark, SF_SMALL).collect()
+    assert resumed and sorted(map(tuple, resumed)) == sorted(map(tuple, batch))
+
+
+def test_fold_twin_removes_legacy_src_dir(spark, monkeypatch):
+    """The first staging of a twin removes the <name>/src directory that
+    per-run staging used to leave behind, so .tmp/ stays bounded."""
+    from noaa_etl_spark.queries import QUERIES
+    from noaa_etl_spark.streaming import core
+
+    legacy = os.path.join(os.path.dirname(core._CHECKPOINT_ROOT), "stream_mcc", "src")
+    os.makedirs(legacy, exist_ok=True)
+    monkeypatch.setattr(core, "_STAGED_SRC", {})  # force a first staging
+    QUERIES["q_stream_mcc"](spark, SF_SMALL).collect()
+    assert not os.path.exists(legacy)
+
+
+# The two twins that drain through a sink of their own: the drift
+# monitor through ann_maintenance's writeStream, observed metrics
+# through a noop sink that reads the engine's metric plane.
+BESPOKE_STREAM_TWINS = {"q_stream_drift_monitor", "q_stream_observed_metrics"}
+
+
+def test_only_bespoke_twins_build_their_own_stream():
+    """Spark-free guard: every other twin drains through
+    streaming.core (run_to_memory / fold_stream), so no function in
+    queries/streaming.py may start a stream, set a checkpoint or stage
+    its own source files."""
+    import ast
+
+    import noaa_etl_spark.queries.streaming as mod
+
+    tree = ast.parse(open(mod.__file__).read())
+    offenders = set()
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name in BESPOKE_STREAM_TWINS:
+            continue
+        for node in ast.walk(fn):
+            is_attr = isinstance(node, ast.Attribute)
+            name = node.attr if is_attr else getattr(node, "id", "")
+            if name in ("writeStream", "staged_stream_src") or (
+                isinstance(node, ast.Constant) and node.value == "checkpointLocation"
+            ):
+                offenders.add(fn.name)
+    assert not offenders, f"hand-rolled stream scaffold in {sorted(offenders)}"
