@@ -1,5 +1,5 @@
-"""Text-analysis column helpers: tokenization, n-grams/shingles, quality
-signals, language-ID heuristic, fingerprints. All native expressions
+"""Text-analysis column helpers: tokenization, n-grams/shingles, marker
+counts, language-ID heuristic, fingerprints. All native expressions
 (split / higher-order functions / hashes) — no Python in the hot path.
 """
 
@@ -31,17 +31,6 @@ def tokenize(text: Column, sep: str = " ") -> Column:
     return F.split(text, sep)
 
 
-def bpe_ish_tokenize(text: Column) -> Column:
-    """BPE-style approximate tokenization: split on word boundaries and
-    punctuation, keeping punctuation runs as tokens — a deterministic
-    regex stand-in for a real BPE vocab (token *counting*, not encoding).
-    """
-    return F.filter(
-        F.split(F.lower(text), r"(?<=\W)|(?=\W)"),
-        lambda t: (t != "") & (t != " "),
-    )
-
-
 def ngrams(tokens: Column, n: int = 2, joiner: str = " ") -> Column:
     """Word n-grams (shingles) via zip_with over shifted slices — stays
     JVM-side; O(len) per row. All slices share the same target length
@@ -55,34 +44,6 @@ def ngrams(tokens: Column, n: int = 2, joiner: str = " ") -> Column:
         shifted = F.slice(tokens, i + 1, m)
         out = F.zip_with(out, shifted, lambda a, b: F.concat_ws(joiner, a, b))
     return out
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokenize(text))
-
-
-def stopword_ratio(tokens: Column, stopwords: list[str] | None = None) -> Column:
-    words = stopwords or EN_STOPWORDS
-    hits = F.size(F.filter(tokens, lambda t: t.isin(*words)))
-    return hits.cast("double") / F.greatest(F.size(tokens), F.lit(1)).cast("double")
-
-
-def punct_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[^\w\s]", "")
-    return (F.length(text) - F.length(stripped)).cast("double") / F.greatest(
-        F.length(text), F.lit(1)
-    ).cast("double")
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic doc-quality heuristic in [0,1]: rewards moderate
-    length, low punctuation density, presence of stopwords (prose-ness)."""
-    tokens = tokenize(text)
-    n = F.size(tokens).cast("double")
-    length_score = F.least(n / F.lit(50.0), F.lit(1.0))
-    punct_score = F.lit(1.0) - F.least(punct_ratio(text) * 5.0, F.lit(1.0))
-    stop_score = F.least(stopword_ratio(tokens) * 4.0, F.lit(1.0))
-    return F.round((length_score + punct_score + stop_score) / 3.0, 6)
 
 
 def marker_hits(tokens: Column, words: list[str]) -> Column:

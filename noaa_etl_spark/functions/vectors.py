@@ -34,19 +34,3 @@ def norm_sq(a: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(norm_sq(a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """dot(a,b) / (|a| * |b|) — formula shape matches the oracle's
-    explicit list_inner_product/sqrt composition term-for-term."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

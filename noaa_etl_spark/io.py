@@ -78,11 +78,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    """Load several fixture tables at once."""
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for the SQL surface."""
     for name in TABLES:

@@ -14,6 +14,12 @@ Scale design (the whole point of each variant):
                      only within buckets (explode+self-join on band key)
                      → exact Jaccard verify → connected components →
                      keep min doc id per cluster.
+- MinHash core     : the three MinHash operators (minhash_lsh_candidates,
+                     minhash_sketch_dedup, minhash_lsh_cross_candidates)
+                     share one definition of each stage: _gram_frame
+                     (spread gram arrays), _band_keys (exploded per-band
+                     xxhash64 keys), _capped_band_pairs (hot-band-capped
+                     self-join) and _label_survivors (min-id components).
 - simhash          : 64-bit near-dup fingerprint; candidates via chunk
                      banding, verify via hamming distance (xor+bit_count).
 """
@@ -70,6 +76,114 @@ def jaccard(a, b):
     return inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
 
 
+def _gram_frame(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, id_name: str = "id"
+) -> DataFrame:
+    """(id_name, grams): each doc's distinct word shingles, docs without
+    any dropped — the input of every MinHash operator below.
+
+    r15 opt: the gram array is projected ONCE behind the spread
+    exchange and signatures hash F.col("grams"). Referencing the
+    tokenize+ngrams EXPRESSION from all num_perm signature columns
+    re-evaluated it per column (higher-order-function lambdas sit
+    outside whole-stage codegen's subexpression elimination — the
+    hilbert_by lesson), and a single-row-group scan ran the whole
+    ~num_perm x |grams| hash grid on one core: the signature projection
+    alone measured 15.5 s at sf0.1 against ~0.7 s in this form.
+    spread_small_scan is a no-op on any multi-split real-volume input."""
+    from noaa_etl_spark.io import spread_small_scan
+
+    grams = F.array_distinct(ngrams(tokenize(F.col(text_col)), shingle_n))
+    return spread_small_scan(
+        df.select(F.col(id_col).alias(id_name), grams.alias("grams")), id_name
+    ).filter(F.size("grams") > 0)
+
+
+def _band_keys(perm_hashes: list, bands: int):
+    """The LSH band keys as one exploded ``bk`` struct (band, key) per
+    band: key = xxhash64 over the band's rows_per_band = len(perm_hashes)
+    // bands consecutive permutation hashes. ``perm_hashes`` are the
+    signature's per-permutation columns — ``mh_i`` columns or ``sig[i]``
+    array elements alike.
+
+    Select it next to the id ONLY: the explode replicates each row
+    ×bands, so carrying the grams arrays along would shuffle the whole
+    shingle payload ``bands`` times. Ids are 8 bytes."""
+    rows_per_band = len(perm_hashes) // bands
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(
+                        *perm_hashes[b * rows_per_band : (b + 1) * rows_per_band]
+                    ).alias("key"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bk")
+
+
+def _capped_band_pairs(keyed: DataFrame, hot_band_cap: int | None) -> DataFrame:
+    """Candidate pairs (id_a < id_b) from (id, bk) band-key rows: all
+    pairs within a band bucket, except that buckets holding more than
+    ``hot_band_cap`` ids (None → HOT_BAND_CAP) pair their over-cap ids
+    with the bucket's min id only — the hot-band star of
+    minhash_lsh_candidates' docstring."""
+    if hot_band_cap is None:
+        hot_band_cap = HOT_BAND_CAP  # resolved at call time: monkeypatchable
+    # Eagerly materialize before the self-join (the round-6 Ed-Join
+    # lesson, re-measured here): un-materialized, each join side
+    # recomputes the whole signature subtree and the join stage ran
+    # 27× slower at sf0.1 (27.3 s vs 1.0 s). localCheckpoint, not
+    # persist: checkpoint blocks are reclaimed when the frame becomes
+    # unreachable (persist leaked one cached frame per call for the
+    # session), it keeps the build plan out of readers' exchange
+    # accounting, and eager materialization makes the executed
+    # exchange count deterministic for the COSTS gate.
+    # Rank ids within each band bucket (and carry the bucket min as the
+    # star hub) BEFORE the self-join: the window runs on the same bk
+    # partitioning the join needs, and the checkpoint then feeds both
+    # join sides. rk/hub cost one sort inside the exchange the join
+    # paid anyway.
+    wb = Window.partitionBy("bk").orderBy("id")
+    banded = keyed.select(
+        "id",
+        "bk",
+        F.row_number().over(wb).alias("rk"),
+        F.min("id").over(Window.partitionBy("bk")).alias("hub"),
+    ).localCheckpoint()
+
+    head = banded.filter(F.col("rk") <= hot_band_cap)
+    left = head.select(F.col("bk").alias("bk"), F.col("id").alias("id_a"))
+    right = head.select(F.col("bk").alias("bk2"), F.col("id").alias("id_b"))
+    # Star fallback for hot buckets: hub = bucket min id, so hub < id
+    # holds for every over-cap row and the (id_a < id_b) pair contract
+    # is preserved.
+    star = banded.filter(F.col("rk") > hot_band_cap).select(
+        F.col("hub").alias("id_a"), F.col("id").alias("id_b")
+    )
+    return (
+        left.join(right, (left.bk == right.bk2) & (left.id_a < right.id_b))
+        .select("id_a", "id_b")
+        .unionByName(star)
+        .dropDuplicates(["id_a", "id_b"])  # same pair can collide in >1 band
+    )
+
+
+def _label_survivors(df: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
+    """(id, component, keep) for every id of ``df``: component = min id
+    of its near-dup cluster over ``edges`` (singletons label
+    themselves), keep marks that min-id survivor."""
+    comps = connected_components(edges)
+    all_ids = df.select(F.col(id_col).alias("id"))
+    labeled = all_ids.join(comps, "id", "left").select(
+        "id", F.coalesce("component", F.col("id")).alias("component")
+    )
+    return labeled.withColumn("keep", F.col("id") == F.col("component"))
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -113,24 +227,7 @@ def minhash_lsh_candidates(
     below the cap, so graded outputs are unchanged (pinned by
     tests/test_algorithms.py equality-to-exact on planted subsets).
     """
-    if hot_band_cap is None:
-        hot_band_cap = HOT_BAND_CAP  # resolved at call time: monkeypatchable
-    rows_per_band = num_perm // bands
-    grams = F.array_distinct(ngrams(tokenize(F.col(text_col)), shingle_n))
-    # r15 opt: project the gram array ONCE behind the spread exchange,
-    # then hash F.col("grams"). Referencing the tokenize+ngrams
-    # EXPRESSION from all num_perm mh_i columns re-evaluated it per
-    # column (higher-order-function lambdas sit outside whole-stage
-    # codegen's subexpression elimination — the hilbert_by lesson), and
-    # a single-row-group scan ran the whole ~num_perm x |grams| hash
-    # grid on one core: the signature projection alone measured 15.5 s
-    # at sf0.1 against ~0.7 s in this form. spread_small_scan is a
-    # no-op on any multi-split real-volume input.
-    from noaa_etl_spark.io import spread_small_scan
-
-    grams_frame = spread_small_scan(
-        df.select(F.col(id_col).alias("id"), grams.alias("grams")), "id"
-    ).filter(F.size("grams") > 0)
+    grams_frame = _gram_frame(df, text_col, id_col, shingle_n)
     if verify:
         # r16 opt (VERDICT r15 item 4 — the multi-reader rule): with
         # verify on, the gram frame has THREE readers (the signature
@@ -146,60 +243,9 @@ def minhash_lsh_candidates(
         "grams",
         *_minhash_signature(F.col("grams"), num_perm),
     )
-
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    # Band join on (band-key, id) ONLY: the explode replicates each row
-    # ×bands, so carrying the grams arrays here would shuffle the whole
-    # shingle payload `bands` times. Ids are 8 bytes; grams re-attach
-    # below touches only the (few) surviving candidate pairs.
-    # Eagerly materialize before the self-join (the round-6 Ed-Join
-    # lesson, re-measured here): un-materialized, each join side
-    # recomputes the whole signature subtree and the join stage ran
-    # 27× slower at sf0.1 (27.3 s vs 1.0 s). localCheckpoint, not
-    # persist: checkpoint blocks are reclaimed when the frame becomes
-    # unreachable (persist leaked one cached frame per call for the
-    # session), it keeps the build plan out of readers' exchange
-    # accounting, and eager materialization makes the executed
-    # exchange count deterministic for the COSTS gate.
-    # Rank ids within each band bucket (and carry the bucket min as the
-    # star hub) BEFORE the self-join: the window runs on the same bk
-    # partitioning the join needs, and the checkpoint then feeds both
-    # join sides. rk/hub cost one sort inside the exchange the join
-    # paid anyway.
-    wb = Window.partitionBy("bk").orderBy("id")
-    banded = (
-        sig.select("id", F.explode(band_keys).alias("bk"))
-        .select(
-            "id",
-            "bk",
-            F.row_number().over(wb).alias("rk"),
-            F.min("id").over(Window.partitionBy("bk")).alias("hub"),
-        )
-        .localCheckpoint()
-    )
-
-    head = banded.filter(F.col("rk") <= hot_band_cap)
-    left = head.select(F.col("bk").alias("bk"), F.col("id").alias("id_a"))
-    right = head.select(F.col("bk").alias("bk2"), F.col("id").alias("id_b"))
-    # Star fallback for hot buckets: hub = bucket min id, so hub < id
-    # holds for every over-cap row and the (id_a < id_b) pair contract
-    # is preserved.
-    star = banded.filter(F.col("rk") > hot_band_cap).select(
-        F.col("hub").alias("id_a"), F.col("id").alias("id_b")
-    )
-    pairs = (
-        left.join(right, (left.bk == right.bk2) & (left.id_a < right.id_b))
-        .select("id_a", "id_b")
-        .unionByName(star)
-        .dropDuplicates(["id_a", "id_b"])  # same pair can collide in >1 band
+    pairs = _capped_band_pairs(
+        sig.select("id", _band_keys([F.col(f"mh_{i}") for i in range(num_perm)], bands)),
+        hot_band_cap,
     )
     if not verify:
         return pairs
@@ -271,12 +317,7 @@ def minhash_lsh_dedup(
     pairs = minhash_lsh_candidates(df, text_col, id_col, shingle_n, num_perm, bands).filter(
         F.col("jaccard_sim") >= threshold
     )
-    comps = connected_components(pairs)
-    all_ids = df.select(F.col(id_col).alias("id"))
-    labeled = all_ids.join(comps, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    return labeled.withColumn("keep", F.col("id") == F.col("component"))
+    return _label_survivors(df, id_col, pairs)
 
 
 def minhash_sketch_dedup(
@@ -310,60 +351,17 @@ def minhash_sketch_dedup(
     both pair-side signature re-attachments), banding identical to
     minhash_lsh_candidates (star-capped), pair verify = one zip_with
     over two 32-long arrays per candidate."""
-    if hot_band_cap is None:
-        hot_band_cap = HOT_BAND_CAP
-    rows_per_band = num_perm // bands
-    grams = F.array_distinct(ngrams(tokenize(F.col(text_col)), shingle_n))
-    from noaa_etl_spark.io import spread_small_scan
-
-    # spread_small_scan (r15 opt): the num_perm x |grams| hash grid under
-    # the signature checkpoint ran on one core on a single-row-group scan.
-    g = spread_small_scan(
-        df.select(F.col(id_col).alias("id"), grams.alias("grams")), "id"
-    ).filter(F.size("grams") > 0)
-    sig = g.select(
-        "id",
-        F.array(*[_perm_min(F.col("grams"), i) for i in range(num_perm)]).alias(
-            "sig"
-        ),
-    ).localCheckpoint()
-
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.col("sig")[b * rows_per_band + r]
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    wb = Window.partitionBy("bk").orderBy("id")
-    banded = (
-        sig.select("id", F.explode(band_keys).alias("bk"))
+    sig = (
+        _gram_frame(df, text_col, id_col, shingle_n)
         .select(
             "id",
-            "bk",
-            F.row_number().over(wb).alias("rk"),
-            F.min("id").over(Window.partitionBy("bk")).alias("hub"),
+            F.array(*[_perm_min(F.col("grams"), i) for i in range(num_perm)]).alias("sig"),
         )
         .localCheckpoint()
     )
-    head = banded.filter(F.col("rk") <= hot_band_cap)
-    left = head.select(F.col("bk").alias("bk"), F.col("id").alias("id_a"))
-    right = head.select(F.col("bk").alias("bk2"), F.col("id").alias("id_b"))
-    star = banded.filter(F.col("rk") > hot_band_cap).select(
-        F.col("hub").alias("id_a"), F.col("id").alias("id_b")
-    )
-    pairs = (
-        left.join(right, (left.bk == right.bk2) & (left.id_a < right.id_b))
-        .select("id_a", "id_b")
-        .unionByName(star)
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = _capped_band_pairs(
+        sig.select("id", _band_keys([F.col("sig")[i] for i in range(num_perm)], bands)),
+        hot_band_cap,
     )
     est = (
         F.size(
@@ -390,12 +388,7 @@ def minhash_sketch_dedup(
     edges = scored.filter(F.col("est_jaccard") >= threshold).select(
         "id_a", "id_b"
     )
-    comps = connected_components(edges)
-    all_ids = df.select(F.col(id_col).alias("id"))
-    labeled = all_ids.join(comps, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    return labeled.withColumn("keep", F.col("id") == F.col("component"))
+    return _label_survivors(df, id_col, edges)
 
 
 def ngram_jaccard_pairs(
@@ -710,46 +703,21 @@ def minhash_lsh_cross_candidates(
     (1/bands)^(1/r) ≈ 0.59 threshold at 32/8), so consumers grade
     recall, not completeness (tests/test_algorithms.py measures it vs
     brute force)."""
-    rows_per_band = num_perm // bands
-    grams = F.array_distinct(ngrams(tokenize(F.col(text_col)), shingle_n))
-    from noaa_etl_spark.io import spread_small_scan
+    # r15 opt (the minhash_lsh_candidates lesson applied per side):
+    # checkpoint each side's gram frame — it has TWO readers (the
+    # signature/band path and the verify join).
+    gf_a = _gram_frame(df_a, text_col, id_col, shingle_n, "id_a").localCheckpoint(eager=True)
+    gf_b = _gram_frame(df_b, text_col, id_col, shingle_n, "id_b").localCheckpoint(eager=True)
 
-    def gram_frame(df: DataFrame, side: str) -> DataFrame:
-        # r15 opt (the minhash_lsh_candidates lesson applied per side):
-        # project grams ONCE behind the spread exchange, checkpoint —
-        # each side's frame has TWO readers (the signature/band path and
-        # the verify join), and referencing the tokenize+ngrams
-        # expression from every mh_i column re-evaluated it per column
-        # on a single-task scan.
-        return spread_small_scan(
-            df.select(F.col(id_col).alias(f"id_{side}"), grams.alias("grams")),
-            f"id_{side}",
-        ).filter(F.size("grams") > 0).localCheckpoint(eager=True)
-
-    gf_a = gram_frame(df_a, "a")
-    gf_b = gram_frame(df_b, "b")
-
-    def banded(gf: DataFrame, side: str) -> DataFrame:
-        sig = gf.select(
-            f"id_{side}",
-            *_minhash_signature(F.col("grams"), num_perm),
+    def banded(gf: DataFrame, id_name: str) -> DataFrame:
+        sig = gf.select(id_name, *_minhash_signature(F.col("grams"), num_perm))
+        return sig.select(
+            id_name, _band_keys([F.col(f"mh_{i}") for i in range(num_perm)], bands)
         )
-        band_keys = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-                    ).alias("key"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return sig.select(f"id_{side}", F.explode(band_keys).alias("bk"))
 
     pairs = (
-        banded(gf_a, "a")
-        .join(banded(gf_b, "b").withColumnRenamed("bk", "bk2"), F.col("bk") == F.col("bk2"))
+        banded(gf_a, "id_a")
+        .join(banded(gf_b, "id_b").withColumnRenamed("bk", "bk2"), F.col("bk") == F.col("bk2"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )

@@ -53,28 +53,6 @@ def attach_payload(df: DataFrame, text_col: str = "text", uri_prefix: str = "mem
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """Image decode. Uncompressed formats (24-bit BMP, binary PPM)
-    decode NATIVELY via the pure-numpy codecs in operators/codecs.py —
-    no media library needed (graded end-to-end by q_multimodal_decode's
-    position-weighted checksum). Compressed formats fall back to PIL
-    when present; absent that, the error names the real constraint."""
-    if payload[:2] in (b"BM", b"P6"):
-        from noaa_etl_spark.operators.codecs import decode_media
-
-        return decode_media(payload)
-    try:
-        from PIL import Image  # type: ignore
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    except ImportError as exc:  # pragma: no cover - env has no PIL
-        raise NotImplementedError(
-            "compressed-image decode requires PIL (absent here); "
-            "BMP/PPM decode natively via operators/codecs.py"
-        ) from exc
-
-
 def _byte_histogram_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
     """Deterministic fake feature extractor: normalized byte-value
     histogram folded into ``dim`` buckets. Stands in for a real

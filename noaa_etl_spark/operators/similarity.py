@@ -145,22 +145,11 @@ def knn_bruteforce_blas(
     )
 
 
-def _hyperplane(dim: int, plane_idx: int) -> F.Column:
-    """Deterministic pseudo-random hyperplane: component j derives from
-    md5(plane:j) mapped to [-0.5, 0.5). Literal array — embedded in the
-    plan, no RNG at runtime. (Never Python ``hash()``: it is salted per
-    process and would change the buckets between runs.)"""
-    comps = []
-    for j in range(dim):
-        digest = hashlib.md5(f"noaa_etl_lsh:{plane_idx}:{j}".encode()).digest()
-        h = int.from_bytes(digest[:4], "little") / 0x100000000
-        comps.append(F.lit(h - 0.5))
-    return F.array(*comps)
-
-
 def _plane_matrix(dim: int, num_planes: int):
-    """The same deterministic hyperplanes as :func:`_hyperplane`, as a
-    (num_planes × dim) numpy matrix for the vectorized signature path."""
+    """Deterministic pseudo-random SRP hyperplanes as a (num_planes × dim)
+    numpy matrix: component j of plane p derives from md5(plane:j)
+    mapped to [-0.5, 0.5). (Never Python ``hash()``: it is salted per
+    process and would change the buckets between runs.)"""
     import numpy as np
 
     mat = np.empty((num_planes, dim), dtype=np.float64)
@@ -169,25 +158,6 @@ def _plane_matrix(dim: int, num_planes: int):
             digest = hashlib.md5(f"noaa_etl_lsh:{p}:{j}".encode()).digest()
             mat[p, j] = int.from_bytes(digest[:4], "little") / 0x100000000 - 0.5
     return mat
-
-
-def srp_signature(vec: F.Column, dim: int, num_planes: int) -> F.Column:
-    """Signed-random-projection bit signature as an array<int> of 0/1.
-
-    Pure-expression form (16 interpreted aggregate-over-zip_with
-    evaluations per row) — kept as the JVM-only reference; the hot path
-    uses :func:`_srp_sig_norm_udf`, one Arrow-batched matmul per batch,
-    measured ~10× faster at fixture scale with identical bits except
-    where a projection sits within float-accumulation noise of 0."""
-    bits = []
-    for p in range(num_planes):
-        proj = F.aggregate(
-            F.zip_with(as_double(vec), _hyperplane(dim, p), lambda x, h: x * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, 1).otherwise(0))
-    return F.array(*bits)
 
 
 def _srp_sig_norm_udf(dim: int, num_planes: int):

@@ -14,7 +14,7 @@ for metrics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.io import load_table, ntz_lit, spread_small_scan
@@ -575,17 +575,23 @@ AB_TEST_ORACLE = """
     """
 
 
+def ab_arm(label: bool = True) -> Column:
+    """The shared 'ab:' experiment's 50/50 arm of each ``user_id``: arm A
+    when the first hex digit of md5('ab:' || user_id) is below '8'.
+    Returns the 'A'/'B' label, or with ``label=False`` the is-arm-A
+    boolean. The DuckDB oracles replay the same rule in SQL."""
+    is_a = (
+        F.substring(F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1)
+        < "8"
+    )
+    return F.when(is_a, F.lit("A")).otherwise(F.lit("B")) if label else is_a
+
+
 def ab_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic arm assignment + integer metric both A/B
     queries consume: (event_type, arm, cents)."""
     ev = load_table(spark, sf_dir, "events")
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     cents = F.floor(F.col("value") * 100).cast("bigint")
     return ev.select("event_type", arm.alias("arm"), cents.alias("cents"))
 
@@ -1766,12 +1772,7 @@ def q_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     users = ev.select("user_id").distinct()
-    arm_a = (
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8"
-    )
+    arm_a = ab_arm(label=False)
     agg = users.agg(
         F.count_if(arm_a).cast("bigint").alias("a"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1894,13 +1895,7 @@ def q_ratio_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x"),
         F.count_if(F.col("event_type") == "click").cast("bigint").alias("y"),
     )
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     m = ug.select(arm.alias("arm"), "x", "y").groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -3011,13 +3006,7 @@ def q_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one user-grain agg (the only data-sized exchange), a 3-way
     covariate stack on the user relation, one combinable moment agg."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     day = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
     cents = F.floor(F.col("value") * 100).cast("bigint")
     u = (
@@ -3620,13 +3609,7 @@ def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: fact → user grain (the only data-sized exchange);
     64·|users| rows through one combinable (r, arm) agg."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     cents = F.floor(F.col("value") * 100).cast("bigint")
     u = (
         ev.select("user_id", arm.alias("arm"), cents.alias("cents"))
@@ -4042,13 +4025,7 @@ def q_post_stratification(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds run on the |strata|-row relation (1-row tot checkpointed —
     the source_entropy lesson)."""
     ev = load_table(spark, sf_dir, "events")
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     cents = F.floor(F.col("value") * 100).cast("bigint")
     assigned = ev.select(
         F.col("event_type").alias("stratum"), arm.alias("arm"), cents.alias("cents")
@@ -4489,13 +4466,7 @@ DID_ORACLE = """
 def did_assign(ev):
     """The (arm, post, cents) projection shared by the batch query and
     the streaming twin's per-batch absorb."""
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     post = F.when(F.unix_micros("ts") < 1705363200000000, F.lit(0)).otherwise(F.lit(1))
     cents = F.floor(F.col("value") * 100).cast("bigint")
     return ev.select(arm.alias("arm"), post.alias("post"), cents.alias("cents"))
@@ -5719,13 +5690,7 @@ def simpson_cells(ev: DataFrame) -> DataFrame:
     """The (stratum, n_a, n_b, s_a, s_b) moment relation — the
     SUM-mergeable Simpson state (per-micro-batch rows fold by
     stratum-grain addition)."""
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     cents = F.floor(F.col("value") * 100).cast("bigint")
     rows = ev.select(
         F.col("event_type").alias("stratum"), arm.alias("arm"), cents.alias("cents")

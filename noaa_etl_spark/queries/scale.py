@@ -427,6 +427,22 @@ def q_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The high-quantity part co-purchase graph the graph queries share:
+    one (u, v) edge, u < v, per pair of distinct parts bought together
+    with l_quantity >= 45 in some order. Unmaterialised — each caller
+    persists or checkpoints it as its reader count needs."""
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
+    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
+    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
+    return (
+        a.join(b, ["l_orderkey"])
+        .filter(F.col("u") < F.col("v"))
+        .select("u", "v")
+        .distinct()
+    )
+
+
 @graded(
     "q_triangle_count",
     oracle="""
@@ -478,16 +494,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wedge join's source key, where orientation has already capped
     fan-out at √m.
     """
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    pairs = (
-        a.join(b, ["l_orderkey"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .persist()  # referenced 3× (degrees, wedge sides, closure)
-    )
+    # referenced 3× (degrees, wedge sides, closure)
+    pairs = copurchase_edges(spark, sf_dir).persist()
     pairs.count()
     deg = (
         pairs.select(F.col("u").alias("node"))
@@ -580,15 +588,7 @@ def q_shortest_path_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from noaa_etl_spark.operators.graph import bfs_distances
 
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    pairs = (
-        a.join(b, ["l_orderkey"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
+    pairs = copurchase_edges(spark, sf_dir)
     promo = load_table(spark, sf_dir, "part").filter(
         F.col("p_type").like("PROMO%")
     ).select(F.col("p_partkey").alias("node"))
@@ -772,22 +772,13 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     output filter keeps the result relation sparse either way. Degree
     lookups are two broadcast-size joins on the reduced pair relation.
     """
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
     # localCheckpoint, not persist: the edge set is read by FOUR
     # branches (nbrs union sides, deg, and through them common) — a
     # cached frame EMBEDS its build plan under every InMemoryTableScan,
     # so audits double-count the build exchanges per reader;
     # checkpointing truncates lineage to a scan (and re-reads survive
     # executor loss, unlike MEMORY_ONLY cache).
-    pairs = (
-        a.join(b, ["l_orderkey"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    pairs = copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     nbrs = pairs.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         pairs.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
@@ -966,15 +957,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same bounded clique-expansion edge build as q_triangle_count
     (within-order pairs, quantity-filtered); degrees are one combinable
     agg; the histogram is |degrees| rows."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    pairs = (
-        a.join(b, ["l_orderkey"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
+    pairs = copurchase_edges(spark, sf_dir)
     deg = (
         pairs.select(F.col("u").alias("node"))
         .unionByName(pairs.select(F.col("v").alias("node")))
@@ -1092,15 +1075,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the connected-components iterative-loop rule)."""
     from noaa_etl_spark.operators.graph import kcore
 
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, ["l_orderkey"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     return kcore(edges, k=3).select(
         F.col("node").cast("bigint").alias("part"), "core_deg"
     )
@@ -1129,15 +1104,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from noaa_etl_spark.operators.graph import label_propagation
 
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, ["l_orderkey"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     labels = label_propagation(edges, rounds=5)
     return (
         labels.groupBy("label")

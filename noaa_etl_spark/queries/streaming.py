@@ -634,22 +634,11 @@ def _fold_daily_cents(
     writes its partial under the plan key ``<name>_partial``, and the
     folded sum equals the one-pass batch rollup exactly."""
     from noaa_etl_spark.io import load_table
+    from noaa_etl_spark.queries.temporal import cents_by_day, daily_cents
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
-        .cast("bigint")
-        .alias("day_idx"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-
-    def partial(batch_df: DataFrame) -> DataFrame:
-        return batch_df.groupBy("event_type", "day_idx").agg(
-            F.sum("cents").alias("day_cents")
-        )
-
+    ev = cents_by_day(load_table(spark, sf_dir, "events"))
     [states] = fold_stream(
-        sf_dir, name, ev, hash_split(seed, "cents"), {f"{name}_partial": partial}
+        sf_dir, name, ev, hash_split(seed, "cents"), {f"{name}_partial": daily_cents}
     )
     return states.groupBy("event_type", "day_idx").agg(
         F.sum("day_cents").alias("day_cents")
@@ -2583,17 +2572,11 @@ def q_stream_mspt(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in the shared mspt_report over the fold. Shares
     SEQUENTIAL_MSPT_ORACLE verbatim."""
     from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.queries.profiling import ab_moments
+    from noaa_etl_spark.queries.profiling import ab_arm, ab_moments
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "value")
 
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 1
-        )
-        < "8",
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = ab_arm()
     cents = F.floor(F.col("value") * 100).cast("bigint")
 
     def partial(batch_df: DataFrame) -> DataFrame:

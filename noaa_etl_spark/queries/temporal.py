@@ -976,6 +976,23 @@ def q_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cents_by_day(ev: DataFrame) -> DataFrame:
+    """(event_type, day_idx, cents): each event's epoch-day index and its
+    value in integer cents — the rows every daily-cents rollup sums."""
+    return ev.select(
+        "event_type",
+        F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint").alias("day_idx"),
+        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+    )
+
+
+def daily_cents(rows: DataFrame) -> DataFrame:
+    """The map-side-combinable (event_type, day_idx, day_cents) rollup of
+    :func:`cents_by_day` rows — the |types|×|days| reduced relation the
+    daily-series queries and their streaming twins' partials read."""
+    return rows.groupBy("event_type", "day_idx").agg(F.sum("cents").alias("day_cents"))
+
+
 @graded(
     "q_seasonal_decompose",
     oracle="""
@@ -1025,17 +1042,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the daily rollup shuffles partial sums only; the window
     input is |types|×|days| rows regardless of event volume.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     dow = F.pmod(F.col("day_idx") + 4, F.lit(7)).cast("int")
     w = Window.partitionBy("event_type", "dow")
     seasonal = daily.withColumn("dow", dow).select(
@@ -1153,17 +1160,7 @@ def q_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     event volume). A per-day-unbounded series would stream through
     applyInPandasWithState instead.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     return holt_from_daily(daily)
 
 
@@ -1240,17 +1237,7 @@ def q_decayed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the |types|×|days| reduced relation sharing one partitioning —
     volume-independent, the seasonal-decompose shape.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     return decayed_from_daily(daily)
 
 
@@ -1317,17 +1304,7 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing one (event_type) partitioning over the |types|×|days|
     reduced relation — the seasonal-decompose cost model.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     wp = Window.partitionBy("event_type")
     wo = (
         Window.partitionBy("event_type")
@@ -2046,17 +2023,7 @@ def q_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; each type's fold rides ONE agg row over a bounded-|days|
     array (the forecast_holt cardinality contract).
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     return holt_winters_from_daily(daily)
 
 
@@ -2169,17 +2136,7 @@ def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; the rolling frame is a per-type ordered window over that
     reduced relation (the decayed-sum contract), never over raw events.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     w = (
         Window.partitionBy("event_type")
         .orderBy("day_idx")
@@ -3137,17 +3094,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract). An exact sliding median at raw-row grain would need a
     two-heap state; at daily grain it is free.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day_idx = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = (
-        ev.select(
-            "event_type",
-            day_idx.alias("day_idx"),
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("cents").alias("day_cents"))
-    )
+    daily = daily_cents(cents_by_day(load_table(spark, sf_dir, "events")))
     return rolling_median_from_daily(daily)
 
 

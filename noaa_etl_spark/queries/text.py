@@ -533,8 +533,8 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_score_oracle() -> str:
-    """DuckDB replay of functions/text.quality_score, generated from the
-    SAME EN_STOPWORDS list. Every term is a token-identical IEEE double
+    """DuckDB replay of q_quality_score's score chain, generated from
+    the SAME EN_STOPWORDS list. Every term is a token-identical IEEE double
     chain over exact integers (lengths, filter counts), so the 6-dp
     rounds agree bit-for-bit; \\w and \\s are ASCII classes in both Java
     regex and RE2, and fixture text is space-joined words (no \\x0B
@@ -574,8 +574,8 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     source.
 
     r16 opt (guide §4.1 — interpreted HOFs get no subexpression
-    elimination): the Column-form quality_score + stopword_ratio +
-    size(toks) stack re-ran split() ~7x and the interpreted stop-list
+    elimination): the former Column-form quality_score + stopword_ratio
+    + size(toks) stack re-ran split() ~7x and the interpreted stop-list
     filter 2x per row. The token array and the integer counts are now
     projected ONCE each; the graded doubles are the SAME IEEE chain
     over the bound columns (binding a subexpression to a column changes

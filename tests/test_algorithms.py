@@ -1376,6 +1376,7 @@ def test_cross_corpus_minhash_recall_vs_bruteforce(spark):
     from noaa_etl_spark.io import load_table
     from noaa_etl_spark.operators.dedup import (
         jaccard,
+        minhash_lsh_candidates,
         minhash_lsh_cross_candidates,
     )
     from tests.conftest import SF_SMALL
@@ -1414,6 +1415,53 @@ def test_cross_corpus_minhash_recall_vs_bruteforce(spark):
     a_ids = {r["doc_id"] for r in a.select("doc_id").collect()}
     for ia, ib in got:
         assert ia in a_ids and ib not in a_ids
+
+    # Same banding as the self-join form: before the threshold, the
+    # cross pairs are exactly the union's candidate pairs that cross A→B
+    # (the hot-band cap never binds at this scale).
+    cross = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_lsh_cross_candidates(a, b).select("id_a", "id_b").collect()
+    }
+    self_pairs = minhash_lsh_candidates(a.unionByName(b), verify=False).collect()
+    crossing = {
+        (x, y) if x in a_ids else (y, x)
+        for x, y in ((r["id_a"], r["id_b"]) for r in self_pairs)
+        if (x in a_ids) != (y in a_ids)
+    }
+    assert cross == crossing
+
+
+def test_minhash_core_has_one_definition_per_stage():
+    """Spark-free guard: in operators/dedup.py exactly one function
+    builds MinHash band-key structs, spreads a gram array, ranks band
+    buckets for the hot-band star, and labels survivors."""
+    import ast
+
+    import noaa_etl_spark.operators.dedup as mod
+
+    tree = ast.parse(open(mod.__file__).read())
+    builders = {"band keys": set(), "gram frame": set(), "band cap": set(), "survivors": set()}
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for call in ast.walk(fn):
+            if not isinstance(call, ast.Call):
+                continue
+            callee = getattr(call.func, "attr", getattr(call.func, "id", ""))
+            consts = {
+                n.value for a in call.args for n in ast.walk(a) if isinstance(n, ast.Constant)
+            }
+            names = {n.id for a in call.args for n in ast.walk(a) if isinstance(n, ast.Name)}
+            if callee == "struct" and "band" in consts:
+                builders["band keys"].add(fn.name)
+            if callee == "spread_small_scan" and ("grams" in consts or "grams" in names):
+                builders["gram frame"].add(fn.name)
+            if callee == "alias" and consts == {"hub"}:
+                builders["band cap"].add(fn.name)
+            if callee == "coalesce" and "component" in consts:
+                builders["survivors"].add(fn.name)
+    assert {k: len(v) for k, v in builders.items()} == dict.fromkeys(builders, 1), builders
 
 
 # ---------------------------------------------------------------------------
