@@ -117,8 +117,12 @@ def run_corpus_pipeline(
     )
     kept.write.mode("overwrite").parquet(f"{out_path}/chunks")
     kept = spark.read.parquet(f"{out_path}/chunks")
-    n_chunks_raw = chunks.count()
-    n_chunks = kept.count()
+    # n_copies counts every chunk of its signature, so the kept rows'
+    # sum is the pre-dedup chunk count; reading both off the written
+    # chunks spares a second tokenize + explode over ``clean``.
+    n_chunks, n_chunks_raw = kept.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum("n_copies"), F.lit(0))
+    ).first()
 
     emb = kept.select(
         F.xxhash64("chunk_sig").alias("vec_id"),

@@ -22,6 +22,15 @@ Config rationale (SURVEY.md §1.4, §4):
   scale a small count avoids task-scheduling overhead dominating; on a real
   cluster this should be >= 2-3x total cores (or left to AQE's
   coalescing with a high initial value).
+- ``spark.sql.codegen.cache.maxEntries=2000`` — Spark caches compiled
+  whole-stage-codegen classes in an LRU of 100 entries by default, but
+  one warm corpus-pipeline pass generates ~152 distinct classes and one
+  warm streaming pass ~128, so at the default every rerun of the same
+  plans compiles them all again in Janino and the JVM JIT-compiles the
+  new classes again too (BASELINE.md §codegen cache). 2000 holds the
+  working set of a whole session with room to spare. The conf is
+  *static*: it is set in ``get_spark``'s builder, and
+  ``configure_session`` cannot apply it to a session built elsewhere.
 """
 
 from __future__ import annotations
@@ -167,6 +176,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

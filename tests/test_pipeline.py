@@ -207,3 +207,19 @@ def test_corpus_pipeline_end_to_end(spark, tmp_dir):
     bad = nb.filter((F.col("cos_sim") < -1.0001) | (F.col("cos_sim") > 1.0001))
     assert bad.count() == 0
     assert nb.count() > 0
+
+    # Warm reuse: rerunning the same plans into the same path gives the
+    # same funnel and finds its generated classes in Spark's codegen
+    # cache instead of compiling them again (68-107 per rerun when the
+    # cache holds fewer classes than one pass generates).
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    again = run_corpus_pipeline(
+        spark, SF_SMALL, f"{tmp_dir}/corpus", k_neighbors=3, n_queries=20
+    )
+    assert again == stats
+    # Slack of 8: the two codegen stages of the ANN query pick,
+    # orderBy(...).limit(n), each compile twice per pass, because their
+    # source differs between passes only in the name of Spark's own
+    # _limit_counter_N field (BASELINE.md §codegen cache).
+    assert compiles.getCount() - before <= 8
