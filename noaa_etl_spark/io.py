@@ -44,6 +44,11 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# The repo-relative scratch directory: stream checkpoints and staged
+# sources, sink round-trips and test outputs all live under it, so every
+# such path derives from this one root.
+SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
+
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to a plain TIMESTAMP whatever the file form.

@@ -30,22 +30,13 @@ from pyspark.sql import functions as F
 
 from noaa_etl_spark.functions.text import tokenize
 from noaa_etl_spark.io import load_table
-from noaa_etl_spark.queries.text import _PII_EMAIL, _PII_IP, _PII_PHONE
+from noaa_etl_spark.queries.text import chunk_windows, pii_scrub
 
 
 def scrub_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Redact emails/phones/IPv4 in place (the q_pii_scrub patterns,
     applied to the real text column — no counting, just the scrub)."""
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col(text_col), _PII_EMAIL, "<EMAIL>"),
-            _PII_PHONE,
-            "<PHONE>",
-        ),
-        _PII_IP,
-        "<IP>",
-    )
-    return docs.withColumn(text_col, scrubbed)
+    return docs.withColumn(text_col, pii_scrub(F.col(text_col)))
 
 
 def chunk_with_text(
@@ -54,19 +45,7 @@ def chunk_with_text(
     """The q_chunk_documents windows, carrying the chunk text (the
     graded query emits only signatures; the pipeline needs the text to
     feed the encoder)."""
-    toks = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
-    starts = toks.select(
-        "doc_id",
-        "t",
-        F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(stride))).alias("s"),
-    )
-    chunk = F.array_join(F.slice("t", F.col("s") + 1, F.lit(chunk_size)), " ")
-    return starts.select(
-        "doc_id",
-        F.expr(f"CAST(s div {stride} AS INT)").alias("chunk_idx"),
-        chunk.alias("chunk_text"),
-        F.md5(chunk).alias("chunk_sig"),
-    )
+    return chunk_windows(docs, chunk_size, stride).drop("n_chunk_tokens")
 
 
 def run_corpus_pipeline(

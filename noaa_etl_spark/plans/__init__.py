@@ -8,7 +8,6 @@ from noaa_etl_spark.plans.audit import (
     has_broadcast_join,
     has_pushed_filters,
     scan_read_schema,
-    shuffle_count,
 )
 
 __all__ = [
@@ -17,5 +16,4 @@ __all__ = [
     "has_broadcast_join",
     "has_pushed_filters",
     "scan_read_schema",
-    "shuffle_count",
 ]

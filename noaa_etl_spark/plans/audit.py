@@ -62,40 +62,64 @@ def scan_read_schema(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: struct<([^>]*)>", plan)
 
 
-def shuffle_count(df: DataFrame) -> int:
-    """Number of Exchange nodes — the scale-limiting resource."""
-    return formatted_plan(df).count("Exchange")
+def plan_exchange_counts(plan: str) -> tuple[int, int, int]:
+    """(shuffle_exchanges, broadcast_exchanges, reused_exchanges) in a
+    physical plan string.
+
+    ``\\bExchange\\b`` matches only shuffle Exchange nodes:
+    BroadcastExchange and ReusedExchange have no word boundary
+    before/after their prefix, so the three counts are disjoint (the
+    broadcast count exists so the COSTS gate can see a query *gaining*
+    a BroadcastExchange, not just a shuffle). Batch and streaming plans
+    use the same node names.
+    """
+    exchanges = len(re.findall(r"\bExchange\b", plan))
+    broadcast = len(re.findall(r"BroadcastExchange", plan))
+    reused = len(re.findall(r"ReusedExchange", plan))
+    return exchanges, broadcast, reused
 
 
 def executed_exchange_counts(df: DataFrame) -> tuple[int, int, int]:
-    """(shuffle_exchanges, broadcast_exchanges, reused_exchanges) in the
-    AQE-final executed plan.
+    """``plan_exchange_counts`` of the AQE-final executed plan.
 
     Triggers execution (collect) — AQE only finalizes the plan after the
-    last stage runs. ``\\bExchange\\b`` matches only shuffle Exchange
-    nodes: BroadcastExchange and ReusedExchange have no word boundary
-    before/after their prefix, so the three counts are disjoint (the
-    broadcast count exists so the COSTS gate can see a query *gaining*
-    a BroadcastExchange, not just a shuffle).
+    last stage runs.
     """
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    exchanges = len(re.findall(r"\bExchange\b", plan))
-    broadcast = len(re.findall(r"BroadcastExchange", plan))
-    reused = len(re.findall(r"ReusedExchange", plan))
-    return exchanges, broadcast, reused
+    return plan_exchange_counts(df._jdf.queryExecution().executedPlan().toString())
 
 
-def stream_plan_exchange_counts(plan: str) -> tuple[int, int, int]:
-    """(shuffle_exchanges, broadcast_exchanges, reused_exchanges) from a
-    captured micro-batch plan string (streaming/core.LAST_STREAM_PLANS).
-    Same disjoint regexes as executed_exchange_counts — streaming plans
-    use the identical Exchange node names, plus StateStore operators the
-    caller can grep for separately."""
-    exchanges = len(re.findall(r"\bExchange\b", plan))
-    broadcast = len(re.findall(r"BroadcastExchange", plan))
-    reused = len(re.findall(r"ReusedExchange", plan))
-    return exchanges, broadcast, reused
+def stream_cost_profile(spark, fn, sf_dir: str) -> dict | None:
+    """Run the query ``fn(spark, sf_dir)`` and profile the drain-time
+    plans it captures, or return None when it captures none (a batch
+    query).
+
+    Streaming plans are invisible to the batch audit — the returned frame
+    only scans the sink — so the micro-batch plans the drains leave in
+    ``streaming.core.LAST_STREAM_PLANS`` are the auditable surface: a
+    ``run_to_memory`` drain's executed plan under its query name, and
+    each frame a ``fold_stream`` partial writes under ``fb_<key>``. The
+    map is cleared first, so only this call's plans count. Returns the
+    exchange counts and ``StateStore`` operators summed over every
+    captured plan, plus ``plans``, the sorted captured keys.
+    """
+    from noaa_etl_spark.streaming.core import LAST_STREAM_PLANS
+
+    LAST_STREAM_PLANS.clear()
+    fn(spark, sf_dir).collect()
+    if not LAST_STREAM_PLANS:
+        return None
+    profile = dict.fromkeys(
+        ("exchanges", "broadcast_exchanges", "reused_exchanges", "state_store_ops"), 0
+    )
+    for plan in LAST_STREAM_PLANS.values():
+        e, b, r = plan_exchange_counts(plan)
+        profile["exchanges"] += e
+        profile["broadcast_exchanges"] += b
+        profile["reused_exchanges"] += r
+        profile["state_store_ops"] += plan.count("StateStore")
+    profile["plans"] = sorted(LAST_STREAM_PLANS)
+    return profile
 
 
 def _job_group_stage_ids(spark, group: str) -> tuple[int, set[int], int]:

@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from noaa_etl_spark.io import load_table
+from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 from noaa_etl_spark.pipelines.ghcn import (
     format_dly,
     monthly_climate,
@@ -26,10 +26,6 @@ from noaa_etl_spark.pipelines.ghcn import (
     to_physical_units,
 )
 from noaa_etl_spark.registry import graded
-
-_TMP_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp"
-)
 
 
 def _synth_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,7 +90,7 @@ def q_ghcn_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     climate rollup. The oracle computes the rollup directly from orders,
     so the text format roundtrip must be lossless to match."""
     path = os.path.join(
-        _TMP_ROOT, "noaa", f"dly_{os.path.basename(sf_dir.rstrip('/'))}"
+        SCRATCH_ROOT, "noaa", f"dly_{os.path.basename(sf_dir.rstrip('/'))}"
     )
     obs = _synth_obs(spark, sf_dir)
     monthly = obs.groupBy("station_id", "year", "month", "element").agg(

@@ -1,9 +1,9 @@
 """Source/sink graded queries (SURVEY.md §2.A): CSV (gzip-compressed),
 JSON-lines, fixed-width (GHCN-style), partitioned parquet sink +
 multi-file scan. Each query round-trips fixture data through the format
-under test into ``/root/repo/.tmp`` and aggregates the re-read result;
-the oracle runs the same aggregate over the original parquet view, so a
-hash match proves the sink+scan pair is lossless.
+under test into the scratch root (``io.SCRATCH_ROOT``) and aggregates
+the re-read result; the oracle runs the same aggregate over the original
+parquet view, so a hash match proves the sink+scan pair is lossless.
 
 Float discipline for roundtrips: only order-independent aggregates
 (count / min / max / sums of integer-valued or floor()ed doubles) —
@@ -18,17 +18,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from noaa_etl_spark.io import load_table, ntz_lit
+from noaa_etl_spark.io import SCRATCH_ROOT, load_table, ntz_lit
 from noaa_etl_spark.registry import graded
 from noaa_etl_spark.sources import read_csv, read_fixed_width, read_jsonl
 from noaa_etl_spark.sources.fixed_width import GHCND_STATIONS_SPEC
 
-_TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
-
 
 def _tmp(name: str, sf_dir: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(_TMP_ROOT, "sources", f"{name}_{tag}")
+    return os.path.join(SCRATCH_ROOT, "sources", f"{name}_{tag}")
 
 
 @graded(

@@ -447,8 +447,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_drift_monitor,
     )
     from noaa_etl_spark.operators.similarity import _train_ivf_centers
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
+    from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     gate = F.substring(
@@ -462,7 +461,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (np.arange(len(centers), dtype=np.int64), centers)
     base_stats = cell_stats(assign_with_distance(calib, cents))
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "drift_monitor")
+    root = os.path.join(SCRATCH_ROOT, "drift_monitor")
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
     for d in (out, ckpt):
@@ -1370,10 +1369,9 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from noaa_etl_spark.io import load_table
-    from noaa_etl_spark.streaming.core import _CHECKPOINT_ROOT
+    from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), "stream_obs")
+    root = os.path.join(SCRATCH_ROOT, "stream_obs")
     ckpt = os.path.join(root, "ckpt")
     for d in (ckpt,):
         shutil.rmtree(d, ignore_errors=True)

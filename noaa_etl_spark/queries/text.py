@@ -6,7 +6,7 @@ golden-tested in tests/.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.functions.text import (
@@ -680,23 +680,33 @@ CHUNK_DOCUMENTS_ORACLE = """
     """
 
 
-def chunk_documents_projection(docs: DataFrame) -> DataFrame:
-    """The chunker as a pure projection, shared by the batch query and
-    its streaming twin (stateless — runs identically on readStream)."""
+def chunk_windows(docs: DataFrame, chunk_size: int = 64, stride: int = 48) -> DataFrame:
+    """The chunker: one row per ``chunk_size``-token window of each doc,
+    starting every ``stride`` tokens (``sequence(0, n-1, stride)``, so
+    the tail window may be short but every token is covered). Columns:
+    doc_id, chunk_idx, n_chunk_tokens, chunk_text and its md5 chunk_sig;
+    callers select what they need and the rest is pruned from the plan.
+    """
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
     starts = toks.select(
         "doc_id",
         "t",
-        F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(48))).alias("s"),
+        F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(stride))).alias("s"),
     )
+    chunk = F.array_join(F.slice("t", F.col("s") + 1, F.lit(chunk_size)), " ")
     return starts.select(
         "doc_id",
-        F.expr("CAST(s div 48 AS INT)").alias("chunk_idx"),
-        F.least(F.lit(64), F.size("t") - F.col("s")).alias("n_chunk_tokens"),
-        F.md5(F.array_join(F.slice("t", F.col("s") + 1, F.lit(64)), " ")).alias(
-            "chunk_sig"
-        ),
+        F.expr(f"CAST(s div {stride} AS INT)").alias("chunk_idx"),
+        F.least(F.lit(chunk_size), F.size("t") - F.col("s")).alias("n_chunk_tokens"),
+        chunk.alias("chunk_text"),
+        F.md5(chunk).alias("chunk_sig"),
     )
+
+
+def chunk_documents_projection(docs: DataFrame) -> DataFrame:
+    """The chunker as a pure projection, shared by the batch query and
+    its streaming twin (stateless — runs identically on readStream)."""
+    return chunk_windows(docs).select("doc_id", "chunk_idx", "n_chunk_tokens", "chunk_sig")
 
 
 @graded("q_chunk_documents", oracle=CHUNK_DOCUMENTS_ORACLE)
@@ -795,6 +805,20 @@ _PII_PHONE = r"\b555-[0-9]{4}\b"
 _PII_IP = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
+def pii_scrub(text: Column) -> Column:
+    """Redact emails, then phone numbers, then IPv4 addresses in
+    ``text``."""
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(text, _PII_EMAIL, "<EMAIL>"),
+            _PII_PHONE,
+            "<PHONE>",
+        ),
+        _PII_IP,
+        "<IP>",
+    )
+
+
 def pii_scrub_projection(docs: DataFrame) -> DataFrame:
     """The scrub pass as a pure projection, shared verbatim by the batch
     query and its streaming twin (stateless transforms run identically
@@ -814,15 +838,6 @@ def pii_scrub_projection(docs: DataFrame) -> DataFrame:
             ((F.col("doc_id") * 7) % 256).cast("string"),
         ).alias("t"),
     )
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("t"), _PII_EMAIL, "<EMAIL>"),
-            _PII_PHONE,
-            "<PHONE>",
-        ),
-        _PII_IP,
-        "<IP>",
-    )
     return synth.select(
         "doc_id",
         F.size(F.regexp_extract_all(F.col("t"), F.lit(_PII_EMAIL), F.lit(0))).alias(
@@ -834,7 +849,7 @@ def pii_scrub_projection(docs: DataFrame) -> DataFrame:
         F.size(F.regexp_extract_all(F.col("t"), F.lit(_PII_IP), F.lit(0))).alias(
             "n_ips"
         ),
-        F.md5(scrubbed).alias("scrubbed_sig"),
+        F.md5(pii_scrub(F.col("t"))).alias("scrubbed_sig"),
     )
 
 
@@ -909,18 +924,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy — the same contract as q_dedup_hash,
     at chunk granularity.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
-    chunks = toks.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(48))).alias("s"),
-        "t",
-    ).select(
-        "doc_id",
-        F.md5(F.array_join(F.slice("t", F.col("s") + 1, F.lit(64)), " ")).alias(
-            "chunk_sig"
-        ),
-    )
+    chunks = chunk_windows(load_table(spark, sf_dir, "documents"))
     return (
         chunks.groupBy("chunk_sig")
         .agg(F.min("doc_id").alias("kept_doc_id"), F.count(F.lit(1)).alias("n_copies"))

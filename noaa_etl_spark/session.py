@@ -51,9 +51,9 @@ _RUNTIME_CONFS: dict[str, str] = {
     # task scheduling off sub-second shuffles (q_dedup_exact 483→313 ms)
     # but coalesces every fixture-scale shuffle to ~1 partition, which
     # single-threads the window sorts (q_window_rolling_1h +38%). At
-    # cluster scale the advisory-size behavior is right — sized_confs()
-    # sets parallelismFirst=false there; at bench scale parallelism
-    # dominates. See BASELINE.md §overhead-floor.
+    # cluster scale the advisory-size behavior is right, and a deployment
+    # should set parallelismFirst=false with its own advisory size; at
+    # bench scale parallelism dominates. See BASELINE.md §overhead-floor.
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for any pandas interop (tests, pandas UDFs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -102,49 +102,6 @@ def _register_self_contained_pickling() -> None:
 
     cloudpickle.register_pickle_by_value(noaa_etl_spark)
     _PICKLE_REGISTERED = True
-
-
-def sized_confs(
-    input_bytes: int,
-    total_cores: int,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-    executor_mem_bytes: int = 8 * 1024**3,
-) -> dict[str, str]:
-    """Cluster-sizing arithmetic for a given input volume (SURVEY.md §7
-    M4). Returns the confs a 100 TB deployment should set explicitly.
-
-    Rules encoded:
-    - scan parallelism: ``maxPartitionBytes`` fixed at the row-group-
-      friendly 128 MB; the file source derives split count from it.
-    - shuffle partitions: enough that a post-shuffle partition holds
-      ~``target_partition_bytes`` (assume shuffle volume ≈ input after
-      projection — conservative), floored at 2 tasks per core for
-      scheduling overlap, and left high for AQE to coalesce downward
-      (AQE only merges, never splits non-skewed partitions).
-    - spill guard: a partition must fit several times into the
-      per-core share of executor memory.
-
-    Example: 100 TB input, 1000 executors × 4 cores →
-    shuffle.partitions ≈ 819,200 → capped by AQE coalescing at runtime;
-    per-partition ~128 MB ≪ (8 GB / 4 cores) = 2 GB per-core share.
-    """
-    by_volume = max(1, input_bytes // target_partition_bytes)
-    by_cores = total_cores * 2
-    shuffle_partitions = max(by_volume, by_cores)
-    per_core_mem = executor_mem_bytes  # per-executor; cores share it
-    assert target_partition_bytes * 4 <= per_core_mem, "partitions too large to sort in memory"
-    return {
-        "spark.sql.files.maxPartitionBytes": str(target_partition_bytes),
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(target_partition_bytes // 2),
-        # With real volumes, coalesce to the advisory byte size rather
-        # than preserving the initial partition count — at this scale
-        # every stage still has orders of magnitude more partitions than
-        # cores, so sizing by bytes only removes scheduling waste.
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    }
 
 
 def get_spark(

@@ -23,20 +23,18 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from noaa_etl_spark.io import normalize_events_ts
+from noaa_etl_spark.io import SCRATCH_ROOT, normalize_events_ts
 from noaa_etl_spark.session import configure_session
 
-_CHECKPOINT_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".tmp",
-    "checkpoints",
-)
+_CHECKPOINT_ROOT = os.path.join(SCRATCH_ROOT, "checkpoints")
 
-# Last executed micro-batch physical plan per query name, captured after
-# every run_to_memory drain. Streaming plans are invisible to the batch
-# cost audit (df.explain on the returned memory table shows the SINK
-# scan, not the micro-batch pipeline) — this is the hook the streaming
-# COSTS gate reads so a stream query gaining a shuffle fails CI.
+# Drain-time plans by key: the last executed micro-batch plan of each
+# run_to_memory drain under its query name, and the formatted plan of
+# each frame a foreachBatch function writes under ``fb_<name>``.
+# Streaming plans are invisible to the batch cost audit (df.explain on
+# the returned table shows the SINK scan, not the micro-batch pipeline)
+# — plans.audit.stream_cost_profile reads this map so a stream query
+# gaining a shuffle fails the COSTS gate.
 LAST_STREAM_PLANS: dict[str, str] = {}
 
 # staged_stream_src cache: (abs sf_dir, twin name) -> staged src dir.
@@ -70,97 +68,13 @@ def staged_stream_src(sf_dir: str, name: str, build) -> str:
         # multi-SF test run) would otherwise rebuild into the first
         # key's cached path and poison it.
         tag = hashlib.md5(key[0].encode()).hexdigest()[:8]
-        root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), name)
+        root = os.path.join(SCRATCH_ROOT, name)
         src = os.path.join(root, f"src-{tag}")
         for d in (src, os.path.join(root, "src")):
             shutil.rmtree(d, ignore_errors=True)
         build(src)
         _STAGED_SRC[key] = src
     return src
-
-# Graded streaming query -> the LAST_STREAM_PLANS keys its drain leaves
-# behind: `mem_*` = executed micro-batch plan of a run_to_memory sink,
-# `fb_*` = formatted plans of the frames a foreachBatch function writes
-# (captured via record_foreach_batch_plan — invisible to both the batch
-# audit and explainInternal otherwise). tools/cost_audit.py records and
-# tests/test_costs.py gates the SUM of exchange counts across a query's
-# keys, so a shuffle creeping into ANY written frame fails CI.
-STREAM_PLAN_KEYS: dict[str, list[str]] = {
-    "q_stream_pii_scrub": ["mem_stream_pii_scrub"],
-    "q_stream_chunk_documents": ["mem_stream_chunk_documents"],
-    "q_stream_tumbling": ["mem_stream_tumbling"],
-    "q_stream_sessionize": ["mem_stream_sessionize"],
-    "q_stream_dedup": ["mem_stream_dedup"],
-    "q_stream_dedup_watermark": ["mem_stream_dedup_wm"],
-    "q_stream_quality_gate": ["mem_stream_quality_gate"],
-    "q_stream_cms_frequencies": ["fb_stream_cms_grid"],
-    "q_stream_stats_merge": ["fb_stream_stats_state"],
-    "q_stream_feature_pit": ["fb_stream_pit_enrich"],
-    "q_stream_drift_monitor": ["fb_drift_data", "fb_drift_report"],
-    "q_stream_decayed_sum": ["fb_stream_decay_partial"],
-    "q_stream_cdc_apply": ["fb_stream_cdc_partial"],
-    "q_stream_forecast_holt": ["fb_stream_holt_partial"],
-    "q_stream_holt_winters": ["fb_stream_hw_partial"],
-    "q_stream_user_ltv": ["fb_stream_ltv_partial"],
-    "q_stream_ab_test": ["fb_stream_ab_moments"],
-    "q_stream_psi_drift": ["fb_stream_psi_binned"],
-    "q_stream_kmv_distinct": ["fb_stream_kmv_sketch", "fb_stream_kmv_keys"],
-    "q_stream_changepoint": ["fb_stream_changepoint_partial"],
-    "q_stream_activity_bitmask": ["fb_stream_bitmask_state"],
-    "q_stream_bootstrap_ci": ["fb_stream_bootstrap_state"],
-    "q_stream_ohlc": ["fb_stream_ohlc_state"],
-    "q_stream_rolling_median": ["fb_stream_rollmed_partial"],
-    "q_stream_gini": ["fb_stream_gini_partial"],
-    "q_stream_dsir": ["fb_stream_dsir_partial"],
-    "q_stream_covariance": ["fb_stream_covariance_partial"],
-    "q_stream_chi_square": ["fb_stream_chi_square_partial"],
-    "q_stream_mannwhitney": ["fb_stream_mannwhitney_partial"],
-    "q_stream_funnel": ["fb_stream_funnel_partial"],
-    "q_stream_oov_rate": ["fb_stream_oov_partial"],
-    "q_stream_calibration_bins": ["fb_stream_calib_partial"],
-    "q_stream_auc": ["fb_stream_auc_partial"],
-    "q_stream_record_linkage": ["fb_stream_linkage_pairs", "fb_stream_linkage_counts"],
-    "q_stream_hist_quantiles": ["fb_stream_hist_partial"],
-    "q_stream_mime_sniff": ["fb_stream_mime_partial"],
-    "q_stream_session_funnel": ["mem_stream_session_funnel"],
-    "q_stream_ewma_irregular": ["fb_stream_ewma_partial"],
-    "q_stream_source_entropy": ["fb_stream_src_entropy_partial"],
-    "q_stream_cuped": ["fb_stream_cuped_partial"],
-    "q_stream_out_of_order": ["fb_stream_ooo_partial"],
-    "q_stream_rolling_corr": ["fb_stream_rollcorr_partial"],
-    "q_stream_jsd_drift": ["fb_stream_jsd_grid"],
-    "q_stream_spearman": ["fb_stream_spearman_partial"],
-    "q_stream_forecast_backtest": ["fb_stream_fcbt_partial"],
-    "q_stream_theil_sen": ["fb_stream_theil_sen_partial"],
-    "q_stream_kendall": ["fb_stream_kendall_partial"],
-    "q_stream_cliffs_delta": ["fb_stream_cliffs_partial"],
-    "q_stream_conformal": ["fb_stream_conformal_partial"],
-    "q_stream_mspt": ["fb_stream_mspt_partial"],
-    "q_stream_zipf": ["fb_stream_zipf_partial"],
-    "q_stream_diff_in_diff": ["fb_stream_did_cells"],
-    "q_stream_kruskal": ["fb_stream_kruskal_grid"],
-    "q_stream_heaps": ["fb_stream_heaps_tokens", "fb_stream_heaps_firsts"],
-    "q_stream_multiple_regression": ["fb_stream_ols_moments"],
-    "q_stream_decision_stump": ["fb_stream_stump_grid"],
-    "q_stream_wilcoxon": ["fb_stream_wilcoxon_user"],
-    "q_stream_levene": ["fb_stream_levene_grid"],
-    "q_stream_mann_kendall": ["fb_stream_mk_daily"],
-    "q_stream_cronbach": ["fb_stream_cronbach_user"],
-    "q_stream_gap_regularity": ["fb_stream_gapreg_segments"],
-    "q_stream_page_hinkley": ["fb_stream_ph_daily"],
-    "q_stream_norm_audit": ["fb_stream_norms_partial"],
-    "q_stream_tukey": ["fb_stream_tukey_grid"],
-    "q_stream_simpson": ["fb_stream_simpson_cells"],
-    "q_stream_clustering_coefficient": ["fb_stream_cc_items"],
-    "q_stream_metric_waterfall": ["fb_stream_waterfall_cells"],
-    "q_stream_seasonality": ["fb_stream_seasonality_daily"],
-    "q_stream_funnel_ttc": ["fb_stream_ttc_firsts"],
-    "q_stream_bounce_rate": ["fb_stream_bounce_sessions"],
-    "q_stream_apdex": ["fb_stream_apdex_bands"],
-    "q_stream_error_budget": ["fb_stream_slo_hourly"],
-    "q_stream_mcc": ["fb_stream_mcc_conf"],
-    "q_stream_cochran_armitage": ["fb_stream_ca_grid"],
-}
 
 
 def record_foreach_batch_plan(name: str, df: DataFrame) -> None:
@@ -229,8 +143,7 @@ def run_to_memory(
     # at sf0.01 under the vanilla driver; ~8 s sized). Scope-set the
     # count to the executor parallelism ONLY when the session still
     # carries Spark's untouched 200 default (an explicit production
-    # sizing — sized_confs() or operator config — is respected
-    # verbatim); restore after the drain. Fresh checkpoint per run ⇒
+    # sizing is respected verbatim); restore after the drain. Fresh checkpoint per run ⇒
     # no cross-run state-layout conflict.
     # r16 fix (ADVICE r15): on a session that never explicitly set the
     # conf, conf.get(key, None) returns None — NOT "200" — so the old
@@ -322,7 +235,7 @@ def fold_stream(
     ``partials`` order, each with its ``batch_id`` partition column.
     """
     spark = source.sparkSession
-    root = os.path.join(os.path.dirname(_CHECKPOINT_ROOT), name)
+    root = os.path.join(SCRATCH_ROOT, name)
     ckpt = os.path.join(root, "ckpt")
     states = {key: os.path.join(root, key) for key in partials}
     for d in (ckpt, *states.values()):

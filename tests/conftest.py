@@ -12,15 +12,11 @@ import duckdb
 import pandas as pd
 import pytest
 
-from noaa_etl_spark.io import TABLES
+from noaa_etl_spark.io import SCRATCH_ROOT, TABLES
 from noaa_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMALL = "/root/testdata/sf0.001"
-
-# Keep local runs fast and repo-contained (the driver policy forbids
-# touching paths outside /root/repo).
-TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
 
 @pytest.fixture(scope="session")
@@ -44,7 +40,7 @@ def duck():
 
 @pytest.fixture()
 def tmp_dir(request):
-    path = os.path.join(TMP_ROOT, request.node.name)
+    path = os.path.join(SCRATCH_ROOT, request.node.name)
     os.makedirs(path, exist_ok=True)
     return path
 

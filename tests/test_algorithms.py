@@ -10,7 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from noaa_etl_spark.io import load_table
+from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 from noaa_etl_spark.operators.dedup import (
     connected_components,
     minhash_lsh_candidates,
@@ -2414,8 +2414,7 @@ def test_csv_corrupt_marker_lost_under_pruning(spark):
     required-field nullness."""
     import os
 
-    p = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     ".tmp", "csv_prune_probe")
+    p = os.path.join(SCRATCH_ROOT, "csv_prune_probe")
     spark.createDataFrame([("1,A,10.5",), ("13,C",)], "value string") \
         .coalesce(1).write.mode("overwrite").text(p)
     reader = (

@@ -12,9 +12,10 @@ committed numbers at the SAME scale factor (COSTS.json carries a
 ``queries_test_sf`` section recorded at the test SF), with tolerance
 for compression/AQE jitter.
 
-COSTS.json is regenerated deliberately via `python tools/cost_audit.py`
-when a plan change is intended; this test only guards against
-accidental regressions.
+COSTS.json is re-audited deliberately via `python tools/cost_audit.py
+[q_name ...]` when a plan change is intended; this test only guards
+against accidental regressions. Each batch query executes once: the
+count and byte gates read one ``executed_cost_profile``.
 """
 
 from __future__ import annotations
@@ -26,7 +27,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.io import load_table
-from noaa_etl_spark.plans.audit import executed_cost_profile, executed_exchange_counts
+from noaa_etl_spark.plans.audit import (
+    executed_cost_profile,
+    executed_exchange_counts,
+    stream_cost_profile,
+)
 from noaa_etl_spark.queries import QUERIES
 from tests.conftest import SF_DIR
 
@@ -67,6 +72,22 @@ ITERATIVE_ALLOWANCE = {
 }
 
 
+# One executed_cost_profile per query per session: the count gate and
+# the byte gate read the same execution.
+_PROFILES: dict[str, dict] = {}
+
+
+def _batch_profile(spark, name: str) -> dict:
+    if name not in _PROFILES:
+        df = QUERIES[name](spark, SF_DIR)
+        _PROFILES[name] = executed_cost_profile(spark, df, f"costs_{name}")
+    return _PROFILES[name]
+
+
+def _regen(name: str) -> str:
+    return f"if intended, re-audit it (python tools/cost_audit.py {name})"
+
+
 @pytest.mark.parametrize("name", sorted(COSTS))
 def test_no_new_shuffles_vs_committed_costs(spark, name):
     """Shuffle exchanges may only go DOWN vs the committed audit (AQE
@@ -74,8 +95,8 @@ def test_no_new_shuffles_vs_committed_costs(spark, name):
     crept in. The shuffle+broadcast SUM may not grow either: an AQE
     shuffle->broadcast conversion trades >=2 shuffle exchanges for 1
     broadcast (sum shrinks), so a sum increase is a genuinely new node."""
-    df = QUERIES[name](spark, SF_DIR)
-    exchanges, broadcast, reused = executed_exchange_counts(df)
+    profile = _batch_profile(spark, name)
+    exchanges, broadcast = profile["exchanges"], profile["broadcast_exchanges"]
     # Compare at the SAME SF the test executes (the byte gate's rule):
     # AQE's shuffle->broadcast conversion KEEPS the feeding exchange in
     # the executed plan, so a plan whose small-SF run converts a join
@@ -87,17 +108,17 @@ def test_no_new_shuffles_vs_committed_costs(spark, name):
     allowance = ITERATIVE_ALLOWANCE.get(name, 0)
     assert exchanges <= committed["exchanges"] + allowance, (
         f"{name}: {exchanges} exchanges vs committed {committed['exchanges']} "
-        f"(+{allowance} iterative allowance) — a shuffle was added; if "
-        f"intended, regenerate COSTS.json (python tools/cost_audit.py)"
+        f"(+{allowance} iterative allowance) — a shuffle was added; {_regen(name)}"
     )
     committed_total = committed["exchanges"] + committed.get("broadcast_exchanges", 0)
     assert exchanges + broadcast <= committed_total + allowance, (
         f"{name}: shuffle+broadcast exchanges {exchanges}+{broadcast} vs "
         f"committed total {committed_total} (+{allowance} iterative "
-        f"allowance) — a BroadcastExchange was added"
+        f"allowance) — a BroadcastExchange was added; {_regen(name)}"
     )
-    assert reused >= committed["reused_exchanges"] - allowance, (
-        f"{name}: lost a ReusedExchange ({reused} < {committed['reused_exchanges']})"
+    assert profile["reused_exchanges"] >= committed["reused_exchanges"] - allowance, (
+        f"{name}: lost a ReusedExchange ({profile['reused_exchanges']} < "
+        f"{committed['reused_exchanges']}); {_regen(name)}"
     )
 
 
@@ -108,17 +129,13 @@ def test_no_shuffle_byte_inflation_vs_committed_costs(spark, name):
     committed = COSTS_TEST_SF[name].get("shuffle_write_bytes")
     if committed is None:
         pytest.skip("committed audit ran without the UI (no byte metrics)")
-    profile = executed_cost_profile(
-        spark, QUERIES[name](spark, SF_DIR), f"costs_bytes_{name}"
-    )
-    measured = profile["shuffle_write_bytes"]
+    measured = _batch_profile(spark, name)["shuffle_write_bytes"]
     if measured is None:
         pytest.skip("spark.ui.enabled=false in this session (no byte metrics)")
     limit = committed * BYTES_TOL + BYTES_SLACK
     assert measured <= limit, (
         f"{name}: shuffle write {measured}B vs committed {committed}B "
-        f"(limit {int(limit)}B) — a wide payload entered the shuffle; if "
-        f"intended, regenerate COSTS.json (python tools/cost_audit.py)"
+        f"(limit {int(limit)}B) — a wide payload entered the shuffle; {_regen(name)}"
     )
 
 
@@ -130,37 +147,32 @@ COSTS_STREAMING = (
 @pytest.mark.parametrize("name", sorted(COSTS_STREAMING))
 def test_streaming_micro_batch_plan_vs_committed_costs(spark, name):
     """Streaming twin of the exchange gate: the batch explain of a
-    run_to_memory result shows only the memory-sink scan, so a stream
-    query gaining a shuffle (or a state-store stage) was previously
-    invisible to CI. The micro-batch plan captured at drain time
-    (streaming/core.LAST_STREAM_PLANS) is the auditable surface — the
-    stateless ETL twins must hold at ZERO exchanges."""
-    from noaa_etl_spark.plans.audit import stream_plan_exchange_counts
-    from noaa_etl_spark.streaming.core import LAST_STREAM_PLANS, STREAM_PLAN_KEYS
+    twin's result shows only the sink scan, so a stream query gaining a
+    shuffle (or a state-store stage) was previously invisible to CI. The
+    micro-batch plans captured at drain time are the auditable surface —
+    the stateless ETL twins must hold at ZERO exchanges — and the twin
+    must still capture every plan the audit recorded."""
+    from noaa_etl_spark.streaming.core import LAST_STREAM_PLANS
 
-    QUERIES[name](spark, SF_DIR).collect()
-    exchanges = broadcast = state_ops = 0
-    plans = []
-    for key in STREAM_PLAN_KEYS[name]:
-        plan = LAST_STREAM_PLANS.get(key)
-        assert plan, f"{name}: no plan captured at drain time for {key!r}"
-        e, b, _ = stream_plan_exchange_counts(plan)
-        exchanges, broadcast = exchanges + e, broadcast + b
-        state_ops += plan.count("StateStore")
-        plans.append(plan)
-    joined = "\n---\n".join(plans)
+    profile = stream_cost_profile(spark, QUERIES[name], SF_DIR)
     committed = COSTS_STREAMING[name]
+    captured = profile["plans"] if profile else []
+    assert captured == committed["plans"], (
+        f"{name}: captured plans {captured} vs committed {committed['plans']}; "
+        f"{_regen(name)}"
+    )
+    exchanges, broadcast = profile["exchanges"], profile["broadcast_exchanges"]
+    joined = "\n---\n".join(LAST_STREAM_PLANS.values())
     assert exchanges <= committed["exchanges"], (
         f"{name}: micro-batch plans have {exchanges} exchanges vs committed "
-        f"{committed['exchanges']} — a shuffle entered the stream; if "
-        f"intended, regenerate COSTS.json (python tools/cost_audit.py)\n{joined}"
+        f"{committed['exchanges']} — a shuffle entered the stream; {_regen(name)}\n{joined}"
     )
     assert exchanges + broadcast <= (
         committed["exchanges"] + committed.get("broadcast_exchanges", 0)
     ), f"{name}: a BroadcastExchange entered the micro-batch plans\n{joined}"
-    assert state_ops <= committed.get("state_store_ops", 0), (
+    assert profile["state_store_ops"] <= committed.get("state_store_ops", 0), (
         f"{name}: micro-batch plans gained state-store operators "
-        f"({state_ops} vs {committed.get('state_store_ops', 0)})\n{joined}"
+        f"({profile['state_store_ops']} vs {committed.get('state_store_ops', 0)})\n{joined}"
     )
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from noaa_etl_spark.io import load_table
+from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 from noaa_etl_spark.sources.synthetic import (
     _HAS_DATASOURCE_API,
     SyntheticObsDataSource,
@@ -69,8 +69,7 @@ def test_synthetic_datasource_stream_equals_batch(spark):
     expected = {tuple(r) for r in batch.load().collect()}
     assert len(expected) == 3 * 10 * 3
 
-    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-    checkpoint = os.path.join(root, "checkpoints", "synthetic_paced")
+    checkpoint = os.path.join(SCRATCH_ROOT, "checkpoints", "synthetic_paced")
     shutil.rmtree(checkpoint, ignore_errors=True)
     query = (
         stream().writeStream.format("memory")
@@ -100,9 +99,8 @@ def test_synthetic_datasource_available_now_resumes_from_checkpoint(spark):
     import shutil
 
     spark.dataSource.register(SyntheticObsDataSource)
-    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-    checkpoint = os.path.join(root, "checkpoints", "synthetic_resume")
-    out = os.path.join(root, "synthetic_resume_out")
+    checkpoint = os.path.join(SCRATCH_ROOT, "checkpoints", "synthetic_resume")
+    out = os.path.join(SCRATCH_ROOT, "synthetic_resume_out")
     shutil.rmtree(checkpoint, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)
 

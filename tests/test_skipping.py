@@ -30,9 +30,9 @@ def laid_out(spark, tmp_dir_module):
 def tmp_dir_module(request):
     import os
 
-    from conftest import TMP_ROOT
+    from noaa_etl_spark.io import SCRATCH_ROOT
 
-    path = os.path.join(TMP_ROOT, "skipping_mod")
+    path = os.path.join(SCRATCH_ROOT, "skipping_mod")
     os.makedirs(path, exist_ok=True)
     return path
 

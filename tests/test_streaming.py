@@ -10,10 +10,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from noaa_etl_spark.io import load_table
+from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 from noaa_etl_spark.operators.merge import merge_upsert
 from noaa_etl_spark.streaming.core import run_to_memory, stream_table
-from tests.conftest import SF_SMALL, TMP_ROOT
+from tests.conftest import SF_SMALL
 
 
 def test_stream_file_sink(spark, tmp_dir):
@@ -332,11 +332,11 @@ def test_transform_with_state_gated(spark):
     import shutil
 
     from noaa_etl_spark.streaming.core import stream_table
-    from tests.conftest import SF_SMALL, TMP_ROOT
+    from tests.conftest import SF_SMALL
 
     for k, v in tws_session_confs().items():
         spark.conf.set(k, v)
-    checkpoint = os.path.join(TMP_ROOT, "checkpoints", "tws_sessionize")
+    checkpoint = os.path.join(SCRATCH_ROOT, "checkpoints", "tws_sessionize")
     shutil.rmtree(checkpoint, ignore_errors=True)
     sessions = tws_sessionize(stream_table(spark, SF_SMALL, "events"))
     q = (
@@ -518,18 +518,23 @@ def test_fold_twin_resumes_after_failed_batch(spark, monkeypatch, twin):
     the overwrite would count batch 1 twice."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from noaa_etl_spark.plans.audit import stream_cost_profile
     from noaa_etl_spark.queries import QUERIES
     from noaa_etl_spark.streaming import core
-    from noaa_etl_spark.streaming.core import STREAM_PLAN_KEYS
 
-    last = STREAM_PLAN_KEYS[twin][-1].removeprefix("fb_")
+    # A clean run names the partial states the twin writes: its plan keys.
+    clean = stream_cost_profile(spark, QUERIES[twin], SF_SMALL)
+    keys = {k.removeprefix("fb_") for k in clean["plans"]}
     real_parquet = DataFrameWriter.parquet
-    written, failed = [], []
+    written, failed, batch1 = [], [], set()
 
     def parquet(self, path, *args, **kwargs):
         real_parquet(self, path, *args, **kwargs)
         written.append(os.path.basename(path))
-        if path.endswith(f"{last}/batch_id=1") and not failed:
+        parent, leaf = os.path.split(path)
+        if leaf == "batch_id=1":
+            batch1.add(os.path.basename(parent))
+        if batch1 == keys and not failed:
             failed.append(path)  # batch 1's last write: fail exactly once
             raise RuntimeError("injected failure after batch 1")
 
@@ -554,7 +559,7 @@ def test_fold_twin_removes_legacy_src_dir(spark, monkeypatch):
     from noaa_etl_spark.queries import QUERIES
     from noaa_etl_spark.streaming import core
 
-    legacy = os.path.join(os.path.dirname(core._CHECKPOINT_ROOT), "stream_mcc", "src")
+    legacy = os.path.join(SCRATCH_ROOT, "stream_mcc", "src")
     os.makedirs(legacy, exist_ok=True)
     monkeypatch.setattr(core, "_STAGED_SRC", {})  # force a first staging
     QUERIES["q_stream_mcc"](spark, SF_SMALL).collect()

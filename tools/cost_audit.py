@@ -1,19 +1,31 @@
 #!/usr/bin/env python
-"""Per-query execution-cost audit: jobs/stages/tasks (StatusTracker,
-grouped per query via job groups), shuffle-boundary counts from the
-executed plan, and stage-level shuffle BYTES (Spark UI REST) — the
-scheduling-cost companion to bench.py's wall-clock.
+"""Per-query execution-cost audit: writes the COSTS.json pins that
+tests/test_costs.py gates against.
+
+Usage: python tools/cost_audit.py [q_name ...]
+
+With no names, every entry COSTS.json pins is re-audited; with names,
+only those are audited and merged into the file, which is how a new
+query joins the gate. A query whose call captures drain-time plans
+(``plans.audit.stream_cost_profile``) is a streaming entry: its
+micro-batch exchange, broadcast, reused-exchange and StateStore counts,
+summed over every captured plan, and the captured plan keys go to
+``streaming_test_sf``, at the test SF where the gate runs. Any other
+query's returned frame goes through ``executed_cost_profile`` after one
+warm-up run, at the bench SF (``queries``) and at the test SF
+(``queries_test_sf``): jobs, stages, tasks, AQE-final exchange counts,
+stage-level shuffle bytes (Spark UI REST) and wall seconds.
 
 Why it matters at 100 TB: wall-clock at fixture scale is dominated by
-fixed per-job overhead, so plan *shape* (how many shuffles, how many
-stages) is the number that predicts cluster cost. And exchange COUNT
-alone is blind to payload width — the round-2 MinHash band join kept
-its exchange count while shuffling ~60x the bytes — so the audit also
-records shuffle read/write bytes per query, at BOTH the bench SF
-(headline record) and the test SF (tests/test_costs.py gates runtime
-bytes against the committed same-SF numbers with tolerance).
-
-Usage: python tools/cost_audit.py [out_json]   (default COSTS.json)
+fixed per-job overhead, so plan shape is the number that predicts
+cluster cost. The gate catches a query that gains a shuffle or a
+BroadcastExchange or loses a ReusedExchange; a wide payload riding an
+unchanged exchange count (the round-2 MinHash band join kept its count
+while shuffling ~60x the bytes); and a streaming twin whose micro-batch
+plans gain a shuffle, a broadcast or a state-store operator, or that
+stops capturing one of its plans. ``q_stream_observed_metrics`` stays
+outside the gate: its noop sink's output is the engine's observedMetrics
+plane, so its call captures no plan.
 """
 
 from __future__ import annotations
@@ -28,456 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-
-# The bench.py headline set — audited at the bench scale factor.
-AUDITED = [
-    "q_pricing_summary",
-    "q_join3_topk",
-    "q_join5_region",
-    "q_window_rank",
-    "q_window_rolling_1h",
-    "q_sessionize",
-    "q_json_extract",
-    "q_dedup_exact",
-    "q_knn_cosine",
-    "q_wordcount",
-    # Not in bench.py's headline set, but plan-shape-gated all the same:
-    # the two corpus-scale ANN paths (IVF-served similarity, LSH dedup).
-    "q_doc_similarity",
-    "q_semantic_dedup_lsh",
-    # Round-4 LLM-pipeline additions: the narrow-only trio must stay at
-    # ZERO shuffle bytes; decontaminate's bytes are its two per-doc
-    # counts only (the gram stream never exchanges).
-    "q_chunk_documents",
-    "q_pii_scrub",
-    "q_quantize_int8",
-    "q_decontaminate",
-    "q_chunk_dedup",
-    # Round-5 TPC-H completions: Q2's decorrelated min join-back and
-    # Q21's orderkey-agg-plus-join-back are the shapes most likely to
-    # regress into extra fact shuffles — gate them.
-    "q_tpch_q2_min_cost",
-    "q_tpch_q9_profit",
-    "q_tpch_q12_late_priority",
-    "q_tpch_q16_supplier_cnt",
-    "q_tpch_q21_waiting",
-    # Round 6: the whole remaining TPC-H suite. The r5 double-plan
-    # rewrites (Q11/Q15/Q17 thresholds as windows over the reduced
-    # relation instead of agg+join-back — 14→6 / 8→4 exchanges) are
-    # precisely the regressions only a plan gate catches; the rest join
-    # the audit so no TPC-H shape can silently grow a fact shuffle.
-    "q_tpch_q4_priority",
-    "q_tpch_q7_volume",
-    "q_tpch_q8_share",
-    "q_tpch_q10_returns",
-    "q_tpch_q11_value",
-    "q_tpch_q13_custdist",
-    "q_tpch_q14_promo",
-    "q_tpch_q15_top_supplier",
-    "q_tpch_q17_small_qty",
-    "q_tpch_q19_disjunctive",
-    "q_tpch_q20_nested_in",
-    "q_tpch_q22_idle_balance",
-    "q_tpch_q3_shipping",
-    "q_tpch_q6_forecast",
-    "q_tpch_q18_large_volume",
-    # Round-6 LLM-pipeline additions: the gate must stay at ZERO
-    # shuffles (narrow-only), the repetition filter must never grow a
-    # join-induced 5th shuffle, and the shard report stays at its tiny
-    # agg+sort pair.
-    "q_quality_gate",
-    "q_gopher_quality",
-    "q_repetition_filter",
-    "q_corpus_shuffle_shard",
-    "q_mixture_epochs",
-    # Profiling / constraint suite: both must stay single-pass (one
-    # scan per table) — a per-column or per-rule rescan regression
-    # multiplies the 100 TB read volume by the rule count.
-    "q_profile_columns",
-    "q_dq_checks",
-    # Blocked fuzzy join: the gram equi-join must never degenerate into
-    # a cross join; shuffle bytes bound the gram-occupancy candidate
-    # space.
-    "q_fuzzy_name_match",
-    # Snapshot diff: one co-partitioned full-outer join — a second fact
-    # pass or a join-induced extra exchange is the regression to catch.
-    "q_table_diff",
-    # Late round-6 additions: the CMS grid must keep its map-side
-    # combine (shuffle carries ≤ d·w partial cells per partition, never
-    # raw rows) and broadcast the grid for estimates; the k-anonymity
-    # audit is one QI aggregate + one tiny class-level agg — a source
-    # join-back is the regression; the stats-skipping query's pruned
-    # scan must stay pruned (file-count regression shows as bytes).
-    "q_cms_frequencies",
-    "q_k_anonymity",
-    "q_stats_skipping",
-    # MAD outliers must keep the single-exchange stacked-window shape
-    # (a percentile agg + join-back would re-scan the fact); the
-    # histogram query's sketch leg is cell-table-sized (its exact-
-    # quantile grading leg carries the window sort); weighted sampling
-    # must stay TakeOrderedAndProject (a full sort is the regression).
-    "q_anomaly_mad",
-    "q_hist_quantiles",
-    "q_weighted_sample",
-    # Gaps-and-islands + funnel + cohort: all three are one-fact-pass
-    # shapes (windows/conditional aggs on a single user_id exchange);
-    # a self-join or agg+join-back regression doubles the 100 TB scan.
-    "q_interval_merge",
-    "q_funnel",
-    "q_cohort_retention",
-    # Array HOF showcase must stay a zero-exchange scan projection.
-    "q_array_functions",
-    # Fourth round-6 session: the PIT join must stay two union+window
-    # passes (never a per-probe range join); interpolation is one grid
-    # join + ONE window partitioning serving both frames; the
-    # perplexity filter's model joins must never re-scan the corpus per
-    # model table; the stats merge is two partial-state aggs + one
-    # state-sized fold. (q_bpe_train is a driver-coordinated loop —
-    # its returned frame is a createDataFrame artifact, nothing to
-    # audit.)
-    "q_feature_store_pit",
-    "q_resample_interpolate",
-    "q_perplexity_filter",
-    "q_incremental_stats_merge",
-    # The trend fit must stay two nested map-side-combinable aggs (a
-    # window or join-back regression would re-shuffle the fact); mode
-    # must stay agg-only (the window row_number form is the shape to
-    # avoid); the BPE encode leg is scan-local UDF + one report agg.
-    "q_linear_trend",
-    "q_mode_by_group",
-    "q_bpe_tokenize",
-    # round 7: BM25 must stay scan-local + broadcast stats (no token
-    # shuffle); token-budget selection is one source-window exchange.
-    "q_bm25_rank",
-    "q_token_budget_select",
-    # feature hashing is explode + ONE combinable (doc,bucket) agg;
-    # string_agg broadcasts both dims onto the customer scan.
-    "q_feature_hashing",
-    "q_string_agg",
-    # seasonal/decayed: one combinable daily rollup + window(s) over the
-    # reduced relation — no join-back.
-    "q_seasonal_decompose",
-    "q_decayed_sum",
-    # skew diagnosis: ONE scan via GROUPING SETS (Expand collapses in
-    # the partial agg); distinct rollup folds per-day set state.
-    "q_skew_diagnose",
-    "q_distinct_rollup_exact",
-    # round 8: RRF fusion must keep its two per-partition heaps (a
-    # global sort or a rank window over the unreduced corpus is the
-    # regression); containment rides the inverted-index join (bytes
-    # bound the gram-candidate space like fuzzy_name_match); CUSUM and
-    # winsorize are one-fact-pass window shapes; KS runs its CDF
-    # windows per source over the value-count reduced relation.
-    "q_rrf_fusion",
-    "q_containment_dedup",
-    "q_changepoint_cusum",
-    "q_ks_drift",
-    "q_winsorize",
-    # round-8 second batch: CDC folds in one combinable argmax (a
-    # window-over-log or per-op pass is the regression); the entropy
-    # filter must stay a ZERO-shuffle projection; DP counts one agg;
-    # golden record one groupBy carrying every attribute rule.
-    "q_cdc_apply",
-    "q_entropy_filter",
-    "q_dp_noisy_counts",
-    "q_golden_record",
-    # round 9: event_sequence was the one graded r8 shape without a
-    # byte gate (VERDICT r8 item 4) — its celebrity cap must ride the
-    # ONE user exchange (a second window exchange is the regression);
-    # the approx winsorize/MAD twins must stay Window-free with the
-    # sketch join broadcast from cache; containment's df-capped
-    # candidates bound the gram join bytes; the codec queries are
-    # scan-local mapInPandas (their only exchange is the tiny final
-    # agg the ORACLE needs — production decode is shuffle-free).
-    "q_event_sequence",
-    "q_winsorize_approx",
-    "q_anomaly_mad_approx",
-    "q_containment_lsh",
-    "q_multimodal_decode",
-    "q_wav_decode",
-    # round-9 second batch: nearest as-of must stay ONE key exchange
-    # (its two direction-carries are in-partition sorts); mutual kNN is
-    # two blocked-BLAS passes + a tiny pair join; Holt folds on the
-    # reduced daily relation; the GDPR cascade is one pass per table.
-    "q_asof_nearest",
-    "q_mutual_knn",
-    "q_forecast_holt",
-    "q_gdpr_erasure",
-    # round-9 third batch: triangle counting must keep its oriented
-    # wedge join (an unoriented hub blows Σd²); pareto's fact windows
-    # stay bucket-partitioned (only survivors see the global range
-    # window); the A/B readout is one combinable agg.
-    "q_triangle_count",
-    "q_pareto_frontier",
-    "q_ab_test_report",
-    # PMI's marginal joins must broadcast the vocab (a gram-key shuffle
-    # of the bigram stream is the regression); markov is one user
-    # exchange + a reduced-relation window; the spatial radius join
-    # must stay a cell equi-join (a nested-loop over raw coordinates is
-    # the regression).
-    "q_cooccurrence_pmi",
-    "q_markov_transitions",
-    "q_spatial_radius_join",
-    "q_rbo_rank_similarity",
-    # round-9 fourth batch: attribution must stay ONE left bucket-join
-    # (a second anti-join orphan branch double-plans the pairs);
-    # proration's three windows share the l_orderkey partitioning;
-    # peak concurrency / PSI / Benford run their windows on reduced
-    # relations; nearest-site is an agg argmin (a rank window or raw
-    # cross join is the regression).
-    "q_attribution_multitouch",
-    "q_peak_concurrency",
-    "q_proration_largest_remainder",
-    "q_psi_drift",
-    "q_benford_audit",
-    "q_spatial_nearest",
-    # round-9 fifth batch: market-basket pairs must stay the bounded
-    # order-key self-join (brand marginals broadcast); ACF's lag joins
-    # run broadcast over the persisted |days| relation. Shortest-path
-    # BFS is iterative (round count data-dependent) — excluded like
-    # connected_components/pagerank; its plan test pins the shape.
-    "q_market_basket_lift",
-    "q_acf_daily",
-    # round-9 sixth batch: the Holt-Winters / balance folds are agg-only
-    # (a gained window or join is the regression); bollinger windows the
-    # reduced daily relation; NDCG prunes via map-side heaps before its
-    # survivor windows; jaccard wedges stay co-partitioned with
-    # broadcast degree lookups; novelty's only join is doc-grain.
-    "q_holt_winters_seasonal",
-    "q_bollinger_bands",
-    "q_running_balance_floor",
-    "q_ndcg_eval",
-    "q_jaccard_neighbors",
-    "q_ngram_novelty",
-    # curriculum order: exactly ONE exchange (the range repartition) —
-    # a gained exchange or window means the global row_number crept in.
-    "q_curriculum_order",
-    # entity resolution / geo cluster: both end in a CC stage whose
-    # round count is data-dependent (like connected_components /
-    # pagerank), so tests/test_costs.py grants them an explicit
-    # ITERATIVE_ALLOWANCE (~2 extra CC rounds) on top of the committed
-    # measurement instead of the exact ≤ gate — the committed numbers
-    # stay honest measurements of today's fixture, and a regression
-    # bigger than the iteration jitter (an extra fact scan, a lost
-    # broadcast) still fails.
-    "q_entity_resolution",
-    "q_geo_cluster",
-    # user LTV: one fact window inside the checkpointed partial; a
-    # second Window or an SMJ is the double-plan regression.
-    "q_user_ltv",
-    # round-9 sixth batch: balanced sampling must keep the map-side
-    # prune (a per-class global window is the regression); keyword
-    # extraction's idf join may broadcast or shuffle but never
-    # cartesian; malformed recovery is a write + schema'd scan + one
-    # combinable agg.
-    "q_balanced_class_sample",
-    "q_keyword_extraction",
-    "q_csv_malformed_recovery",
-    # PQ encode is scan-local (codebooks broadcast via closure): any
-    # exchange is a regression.
-    "q_pq_encode",
-    # round-10 additions: the KMV sketch keeps its heap-pruned min-k
-    # (a global sort or window is the regression); gini is one fact
-    # collapse + broadcast dims + per-nation rank window; theil-sen /
-    # changepoint fold on the checkpointed calendar relation; the
-    # interval-overlap join must stay a (user, bucket) equi-join (the
-    # quadratic range join is oracle-only); systematic sampling rides
-    # the checkpointed order index (one range exchange inside the
-    # checkpoint job).
-    "q_kmv_distinct",
-    "q_gini_concentration",
-    "q_theil_sen",
-    "q_changepoint_detect",
-    "q_interval_overlap_join",
-    "q_systematic_sample",
-    # Kaplan-Meier folds on the lifetime grid (a raw-event window or
-    # SMJ is the regression); semantic decontamination is scan-local
-    # (any exchange is a regression — the bench set rides the closure).
-    "q_kaplan_meier",
-    "q_semantic_decontaminate",
-    # blocklist filter is scan-local (array-literal terms, HOF fold).
-    "q_blocklist_filter",
-    # weighted median reduces to the value grid before its windows; the
-    # CMS join estimator joins KB-sized grids (one checkpointed scan
-    # feeds both sides).
-    "q_weighted_median",
-    "q_cms_join_estimate",
-    # degree histogram: bounded clique-expansion join + combinable aggs;
-    # activity bitmask: ONE bit_or agg (8-byte per-group state).
-    "q_degree_distribution",
-    "q_activity_bitmask",
-    # exact sliding distinct: one lead window + the 1h banded equi-join
-    # (a raw-timestamp nested loop is the oracle-only plan).
-    "q_sliding_distinct",
-    # bootstrap: explode(32) before ONE combinable agg — a join/window/
-    # second scan is the regression.
-    "q_bootstrap_ci",
-    # negative sampling: shard-blocked self-join + anchor rank window.
-    "q_negative_sampling",
-    # OHLC: one combinable agg (min_by/max_by composite keys) — a rank
-    # window over the raw stream is the regression.
-    "q_ohlc_candles",
-    # RFM: customer-grain collapse BEFORE the three ntile windows.
-    "q_rfm_segmentation",
-    # round 11: rolling median windows on the daily rollup (a raw-event
-    # window is the regression); temperature mix broadcasts the rate
-    # table back (a doc-grain shuffle is the regression); DSIR's only
-    # doc-grain exchange is the (doc,bucket) count — terms broadcast;
-    # readability is scan-local (any exchange is a regression); the
-    # salted skew join pins shuffle-hash (broadcast would invalidate
-    # the measured big-x-big shape); compaction is write-side and the
-    # disjointness self-join reads only the |files|-row relation.
-    "q_rolling_median",
-    "q_temperature_mix",
-    "q_dsir_select",
-    "q_readability",
-    "q_skew_join_salted",
-    # image resize is scan-local mapInPandas (any exchange is a
-    # regression; the graded agg's single exchange is the ceiling).
-    "q_image_resize",
-    # mapInArrow histogram: per-batch partials + ONE merge exchange.
-    "q_mapinarrow_hist",
-    # grouped Arrow map / table-arg UDTF: one group-key shuffle each.
-    "q_applyinarrow_stats",
-    "q_udtf_table_arg",
-    # round 11, second session: covariance is ONE combinable 45-column
-    # agg (the pair explode runs on the |labels|-row aggregate — a
-    # per-pair exploded data relation is the regression); mannwhitney
-    # mirrors the KS shape (per-(source,value) combinable counts, then
-    # per-source windows on the reduced relation); chi-square collapses
-    # to the |types|x|bands| grid (localCheckpoint'd — three readers)
-    # and every window after runs on that bounded relation.
-    "q_covariance_matrix",
-    "q_mannwhitney_u",
-    "q_chi_square_independence",
-    # quantile normalize: grid agg + per-source windows + broadcast
-    # ref-rank equi-join (a theta/range join is the regression).
-    "q_quantile_normalize",
-    # geohash: scan-local integer projection (any exchange/UDF is the
-    # regression).
-    "q_geohash_encode",
-    # SRM is one combinable distinct agg; delta method is two stacked
-    # combinable aggs (events -> user grain -> arm moments).
-    "q_ab_srm_check",
-    "q_ratio_metric_delta",
-    # round 12: funnel = two stacked combinable aggs (user pivot ->
-    # scalar); temporal split = min/max agg broadcast back + count agg;
-    # record linkage = blocked equi-join, both sides scan-local;
-    # calibration/auc/dp = combinable aggs (auc adds a window on the
-    # BOUNDED 2^20 grid); oov = (source,token) agg localCheckpoint'd,
-    # top-K TakeOrdered + broadcast scoring join. (q_funnel is already
-    # audited above.)
-    "q_temporal_split",
-    "q_record_linkage_fs",
-    "q_calibration_bins",
-    "q_auc_eval",
-    "q_dp_noise_agg",
-    "q_oov_rate",
-    # MI shares chi-square's bounded-grid posture (grid checkpoint +
-    # marginal windows + ordered fold).
-    "q_mutual_information",
-    # gains table: calibration partials + 10-row cumulative windows.
-    "q_gains_table",
-    # mime sniff: scan-local synthesis + prefix tests + one tiny agg.
-    "q_mime_sniff",
-    # session funnel: the q_sessionize 2-exchange shape + census agg.
-    "q_session_funnel",
-    # Round-13 additions: the auto dispatcher must keep the plain
-    # 2-exchange sessionize shape at fixture skew (below threshold);
-    # logrank/entropy run on bounded reduced relations after one
-    # data-sized agg; SNM is the order_index range exchange + banded
-    # join; ewma is the rolling_1h window+agg shape; the capped ngram
-    # gear must not add exchanges over the uncapped form.
-    "q_sessionize_auto",
-    "q_logrank_test",
-    "q_sorted_neighborhood_dedup",
-    "q_ewma_irregular",
-    "q_source_entropy",
-    "q_dedup_ngram_jaccard_capped",
-    "q_lang_id",
-    "q_quality_score",
-    # audio resample: scan-local mapInPandas — must stay zero-exchange.
-    "q_audio_resample",
-    # CUPED: one user-grain agg + one 1-row moment agg; line dedup:
-    # exactly two exchanges (lines by content, survivors by doc).
-    "q_cuped_adjustment",
-    "q_line_dedup_global",
-    # disorder census: one user window + type agg (sessionize shape);
-    # rolling corr: day-grain reduction then bounded-spine window.
-    "q_out_of_order_audit",
-    "q_rolling_corr",
-    # Round-14 additions. Eval battery: one fact collapse to the s20
-    # grid + bounded-grid math (classification report adds only the
-    # 3-row broadcast); mcnemar is one scan-local agg. Correlation
-    # battery runs on the bounded day grain; kendall's pair join is
-    # calendar-bounded. Target encoding is agg + broadcast-back
-    # (deliberate two fact passes, never a 5-key window); kfold is one
-    # combinable agg; neyman collapses to |strata| rows; rouge's
-    # two-phase top-k moves ≤ 2·|sources|·|partitions| rows.
-    "q_classification_report",
-    "q_cohens_kappa",
-    "q_mcnemar_test",
-    "q_target_encode_loo",
-    "q_grouped_kfold",
-    "q_spearman_corr",
-    "q_kendall_tau",
-    "q_neyman_allocation",
-    "q_rouge_eval",
-    # Round-14 second batch: balance/power ride one combinable agg
-    # (user-grain for balance); JSD collapses to the 10-band grid;
-    # forecast backtest runs its lag join on the checkpointed bounded
-    # daily relation; log-odds on the checkpointed (source, term)
-    # reduced relation + broadcast universe.
-    "q_covariate_balance",
-    "q_power_mde",
-    "q_jsd_drift",
-    "q_forecast_baseline_eval",
-    "q_log_odds_terms",
-    # MRR rides the shared ranked-matches frame + the two-phase top-k
-    # prune; Brier is one scan-local combinable agg.
-    "q_mrr_eval",
-    "q_brier_score",
-    # Isotonic: fact -> bounded s10 grid once, pair join + windows on
-    # the checkpointed <=1024-row relation; ECE: one fact agg to the
-    # 10-bin grid + ordered fold.
-    "q_isotonic_calibration",
-    "q_ece_score",
-    # Permutation test: fact -> user grain once; the x64 replicate
-    # explode runs on the REDUCED relation into one combinable agg.
-    "q_permutation_test",
-    # Round-15 additions. Cliff's delta rides the Mann-Whitney grid
-    # shape; mSPRT / Cochran's Q / post-stratification are ONE
-    # combinable fact agg each (post-strat adds only the |strata|-row
-    # fold); Fleiss is explode(3) -> one (doc,label) agg -> bounded
-    # category math; conformal is ONE fact collapse to the
-    # (type,is_cal,cents) grid then bounded-domain selection; Hilbert
-    # is scan-local integer projection (any exchange/UDF is the
-    # regression); Zipf reduces to the (word,cnt) relation before its
-    # rank window.
-    "q_cliffs_delta",
-    "q_sequential_mspt",
-    "q_fleiss_kappa",
-    "q_conformal_interval",
-    "q_hilbert_order",
-    "q_cochran_q",
-    "q_zipf_fit",
-    "q_post_stratification",
-    # SQL UDF: the body INLINES (one hash-agg, no Python stage) — a
-    # BatchEvalPython node appearing is the regression.
-    "q_sql_udf",
-]
-
-# Streaming queries whose drain-time plans are auditable via
-# streaming/core.LAST_STREAM_PLANS (batch explain sees only the memory
-# sink): `mem_*` keys carry the executed micro-batch plan of a
-# run_to_memory drain, `fb_*` keys the plans of frames written inside
-# foreachBatch (record_foreach_batch_plan). Exchange counts only —
-# stage->query byte attribution isn't stable across micro-batches. The
-# stateless ETL twins must stay at ZERO exchanges; windowed/stateful/
-# foreachBatch ones gate their shuffle count (summed over their keys).
-from noaa_etl_spark.streaming.core import STREAM_PLAN_KEYS
-
-AUDITED_STREAMING = sorted(STREAM_PLAN_KEYS)
+SECTIONS = ("queries", "queries_test_sf", "streaming_test_sf")
 
 
 def audit_query(spark, name, fn, sf_dir) -> dict:
@@ -490,47 +53,41 @@ def audit_query(spark, name, fn, sf_dir) -> dict:
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "COSTS.json")
+    path = os.path.join(REPO, "COSTS.json")
+    with open(path) as f:
+        payload = json.load(f)
+    names = sys.argv[1:] or sorted({n for s in SECTIONS for n in payload[s]})
+    if sys.argv[1:]:
+        assert (payload["sf_dir"], payload["test_sf_dir"]) == (SF_DIR, TEST_SF_DIR), (
+            "merging entries audited at other scale factors than COSTS.json's"
+        )
+    payload.update(sf_dir=SF_DIR, test_sf_dir=TEST_SF_DIR)
+
+    from noaa_etl_spark.plans.audit import stream_cost_profile
     from noaa_etl_spark.queries import QUERIES
     from noaa_etl_spark.session import get_spark
 
     spark = get_spark("cost-audit", ui=True)
     spark.sparkContext.setLogLevel("ERROR")
-    payload = {"sf_dir": SF_DIR, "test_sf_dir": TEST_SF_DIR, "queries": {}, "queries_test_sf": {}}
-    for section, sf_dir in [("queries", SF_DIR), ("queries_test_sf", TEST_SF_DIR)]:
-        for name in AUDITED:
-            audit_query(spark, name, QUERIES[name], sf_dir)  # warm-up (fills caches, JIT)
-            payload[section][name] = audit_query(spark, name, QUERIES[name], sf_dir)
-            print(sf_dir, name, json.dumps(payload[section][name]), flush=True)
-
-    # Streaming micro-batch plans at the TEST SF (where the gate runs).
-    from noaa_etl_spark.plans.audit import stream_plan_exchange_counts
-    from noaa_etl_spark.streaming.core import LAST_STREAM_PLANS
-
-    payload["streaming_test_sf"] = {}
-    for name in AUDITED_STREAMING:
+    for name in names:
+        fn = QUERIES[name]
+        for section in SECTIONS:
+            payload[section].pop(name, None)
         t0 = time.perf_counter()
-        QUERIES[name](spark, TEST_SF_DIR).collect()
-        ex = bc = ru = state_ops = 0
-        for key in STREAM_PLAN_KEYS[name]:
-            plan = LAST_STREAM_PLANS.get(key)
-            if plan is None:
-                raise RuntimeError(f"no captured plan {key!r} for {name}")
-            e, b, r = stream_plan_exchange_counts(plan)
-            ex, bc, ru = ex + e, bc + b, ru + r
-            state_ops += plan.count("StateStore")
-        payload["streaming_test_sf"][name] = {
-            "exchanges": ex,
-            "broadcast_exchanges": bc,
-            "reused_exchanges": ru,
-            "state_store_ops": state_ops,
-            "wall_sec": round(time.perf_counter() - t0, 3),
-        }
-        print("stream", name, json.dumps(payload["streaming_test_sf"][name]), flush=True)
-    with open(out_path, "w") as f:
+        stream = stream_cost_profile(spark, fn, TEST_SF_DIR)
+        if stream is not None:
+            stream["wall_sec"] = round(time.perf_counter() - t0, 3)
+            payload["streaming_test_sf"][name] = stream
+            print("stream", name, json.dumps(stream), flush=True)
+            continue
+        for section, sf_dir in (("queries", SF_DIR), ("queries_test_sf", TEST_SF_DIR)):
+            audit_query(spark, name, fn, sf_dir)  # warm-up (fills caches, JIT)
+            payload[section][name] = audit_query(spark, name, fn, sf_dir)
+            print(sf_dir, name, json.dumps(payload[section][name]), flush=True)
+    with open(path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(f"wrote {out_path}")
+    print(f"audited {len(names)} entries into {path}")
     spark.stop()
 
 
