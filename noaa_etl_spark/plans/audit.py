@@ -79,6 +79,14 @@ def plan_exchange_counts(plan: str) -> tuple[int, int, int]:
     return exchanges, broadcast, reused
 
 
+def physical_plan(df: DataFrame) -> str:
+    """The physical plan's tree string, each node named once (the
+    formatted explain names every node twice: in the tree and in the
+    details). Before the frame runs this is AQE's initial plan; after,
+    it also holds the final plan."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def executed_exchange_counts(df: DataFrame) -> tuple[int, int, int]:
     """``plan_exchange_counts`` of the AQE-final executed plan.
 
@@ -86,7 +94,7 @@ def executed_exchange_counts(df: DataFrame) -> tuple[int, int, int]:
     last stage runs.
     """
     df.collect()
-    return plan_exchange_counts(df._jdf.queryExecution().executedPlan().toString())
+    return plan_exchange_counts(physical_plan(df))
 
 
 def stream_cost_profile(spark, fn, sf_dir: str) -> dict | None:
@@ -164,6 +172,18 @@ def rest_shuffle_bytes(spark, stage_ids: set[int]) -> tuple[int | None, int | No
             read += int(s.get("shuffleReadBytes", 0))
             write += int(s.get("shuffleWriteBytes", 0))
     return read, write
+
+
+def audit_spark(app_name: str):
+    """The session the COSTS pins are audited and gated in: the test
+    suite and ``tools/cost_audit.py`` both build it, so a re-audit
+    reproduces what the gate measures. ``local[8]`` with 8 shuffle
+    partitions whatever the host's core count (shuffle bytes follow the
+    partition count), and the UI on, because the byte gate reads
+    stage-level shuffle bytes from its REST API."""
+    from noaa_etl_spark.session import get_spark
+
+    return get_spark(app_name, master="local[8]", shuffle_partitions=8, ui=True)
 
 
 def executed_cost_profile(spark, df: DataFrame, group: str) -> dict:

@@ -29,7 +29,7 @@ from noaa_etl_spark.session import configure_session
 _CHECKPOINT_ROOT = os.path.join(SCRATCH_ROOT, "checkpoints")
 
 # Drain-time plans by key: the last executed micro-batch plan of each
-# run_to_memory drain under its query name, and the formatted plan of
+# run_to_memory drain under its query name, and the physical plan of
 # each frame a foreachBatch function writes under ``fb_<name>``.
 # Streaming plans are invisible to the batch cost audit (df.explain on
 # the returned table shows the SINK scan, not the micro-batch pipeline)
@@ -87,15 +87,16 @@ def record_foreach_batch_plan(name: str, df: DataFrame) -> None:
     sink, not the batch jobs the function launches. This hook closes the
     gap: the foreachBatch twins call it on each frame they write, the
     LAST batch's plan wins, and the streaming COSTS gate reads it under
-    the ``fb_<name>`` key. The plan is the pre-AQE formatted plan
-    (deterministic — no runtime shuffle→broadcast conversions), so
-    committed counts and gate counts come from one capture method.
-    Multiple frames per batch append under distinct names.
+    the ``fb_<name>`` key. The plan is the un-executed physical plan,
+    i.e. AQE's initial plan (deterministic — no runtime shuffle→broadcast
+    conversions), with each node named once like the ``run_to_memory``
+    plans, so committed counts and gate counts come from one capture
+    method. Multiple frames per batch append under distinct names.
     """
-    from noaa_etl_spark.plans.audit import formatted_plan
+    from noaa_etl_spark.plans.audit import physical_plan
 
     try:
-        LAST_STREAM_PLANS[f"fb_{name}"] = formatted_plan(df)
+        LAST_STREAM_PLANS[f"fb_{name}"] = physical_plan(df)
     except Exception:  # audit aid, never a failure
         LAST_STREAM_PLANS.pop(f"fb_{name}", None)
 

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from noaa_etl_spark.io import SCRATCH_ROOT, TABLES
-from noaa_etl_spark.session import get_spark
+from noaa_etl_spark.plans.audit import audit_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMALL = "/root/testdata/sf0.001"
@@ -21,9 +21,9 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    # ui=True: the COSTS byte gate (tests/test_costs.py) reads stage-level
-    # shuffle bytes via the UI REST API.
-    s = get_spark("noaa-etl-tests", master="local[8]", shuffle_partitions=8, ui=True)
+    # The COSTS gate (tests/test_costs.py) runs in the session shape the
+    # pins were audited in.
+    s = audit_spark("noaa-etl-tests")
     yield s
 
 

@@ -14,7 +14,9 @@ summed over every captured plan, and the captured plan keys go to
 query's returned frame goes through ``executed_cost_profile`` after one
 warm-up run, at the bench SF (``queries``) and at the test SF
 (``queries_test_sf``): jobs, stages, tasks, AQE-final exchange counts,
-stage-level shuffle bytes (Spark UI REST) and wall seconds.
+stage-level shuffle bytes (Spark UI REST) and wall seconds. The audit
+runs in the gate's own session shape (``plans.audit.audit_spark``), so
+the byte pins do not follow the auditing host's core count.
 
 Why it matters at 100 TB: wall-clock at fixture scale is dominated by
 fixed per-job overhead, so plan shape is the number that predicts
@@ -63,11 +65,10 @@ def main() -> None:
         )
     payload.update(sf_dir=SF_DIR, test_sf_dir=TEST_SF_DIR)
 
-    from noaa_etl_spark.plans.audit import stream_cost_profile
+    from noaa_etl_spark.plans.audit import audit_spark, stream_cost_profile
     from noaa_etl_spark.queries import QUERIES
-    from noaa_etl_spark.session import get_spark
 
-    spark = get_spark("cost-audit", ui=True)
+    spark = audit_spark("cost-audit")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         fn = QUERIES[name]
