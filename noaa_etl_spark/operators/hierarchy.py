@@ -9,8 +9,8 @@ rounds a naive parent-following loop (or a recursive CTE executor)
 pays. A 20-level hierarchy resolves in 5 shuffles; a million-level
 pathological chain in 20.
 
-Same driver-side convergence pattern as
-operators/dedup.connected_components: per-round localCheckpoint cuts
+Same driver-side convergence pattern as the distributed connected
+components loop in operators/graph.py: per-round localCheckpoint cuts
 the lineage (20 joins of lazy lineage would otherwise blow plan
 compilation), and a count() decides termination — the loop is over
 ROUNDS (log-depth few), not rows.

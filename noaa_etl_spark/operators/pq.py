@@ -8,7 +8,8 @@ vector (256 B) compresses to 8 codes (8 B, 32×) while preserving approximate di
 distance computation: the query stays exact; per-subspace lookup
 tables turn each candidate's distance into m table reads).
 
-Training follows the IVF pattern (similarity.py): sample-train
+Training follows the IVF pattern (similarity.py) and shares its k-means
+and nearest-center rule (``_kmeans``, ``_sq_dist_key``): sample-train
 driver-side (codebooks converge on any representative sample;
 ≤ sample_cap vectors ≈ 25 MB), broadcast the (m × k × d/m) codebook
 array, and encode distributed via ONE vectorized mapInPandas pass —
@@ -22,36 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _kmeans(mat: np.ndarray, k: int, seed: int, max_iter: int = 25) -> np.ndarray:
-    """Plain-L2 kmeans++ + Lloyd's, deterministic given (mat, seed).
-    Returns (k', sub_dim) centers with k' = min(k, n_rows)."""
-    rng = np.random.default_rng(seed)
-    centers = mat[rng.integers(len(mat))][None, :]
-    # seeding keeps a RUNNING min-distance, updated against only the
-    # newest center (O(k·n·sub) total); Lloyd's uses the BLAS form
-    # c·c − 2x·c (x·x constant per argmin) — never an (n × k × sub)
-    # 3-D broadcast, which is ~800 MB/subspace at the 50k sample cap.
-    d2min = ((mat - centers[0]) ** 2).sum(1)
-    for _ in range(min(k, len(mat)) - 1):
-        total = d2min.sum()
-        probs = d2min / total if total > 0 else None
-        c = mat[rng.choice(len(mat), p=probs)]
-        centers = np.vstack([centers, c])
-        d2min = np.minimum(d2min, ((mat - c) ** 2).sum(1))
-    for _ in range(max_iter):
-        d2 = (centers**2).sum(1)[None, :] - 2.0 * (mat @ centers.T)
-        assign = d2.argmin(axis=1)
-        new = np.vstack(
-            [
-                mat[assign == j].mean(axis=0) if (assign == j).any() else centers[j]
-                for j in range(len(centers))
-            ]
-        )
-        if np.allclose(new, centers):
-            break
-        centers = new
-    return centers
+from noaa_etl_spark.operators.similarity import _kmeans, _sq_dist_key
 
 
 def train_pq_codebooks(
@@ -81,7 +53,7 @@ def train_pq_codebooks(
     sub = d // m
     books = np.zeros((m, k, sub), dtype=np.float64)
     for j in range(m):
-        cs = _kmeans(mat[:, j * sub : (j + 1) * sub], k, seed + j)
+        cs = _kmeans(mat[:, j * sub : (j + 1) * sub], k, seed + j, max_iter=25)
         books[j, : len(cs)] = cs
         if len(cs) < k:  # degenerate tiny sample: repeat last center
             books[j, len(cs) :] = cs[-1]
@@ -114,9 +86,7 @@ def pq_encode(
             err = np.zeros(n, dtype=np.float64)
             for j in range(m):
                 x = mat[:, j * sub : (j + 1) * sub]
-                # ||x-c||² = x·x - 2x·c + c·c ; x·x constant per argmin
-                d2 = (b[j] ** 2).sum(1)[None, :] - 2.0 * (x @ b[j].T)
-                cj = d2.argmin(1)
+                cj = _sq_dist_key(x, b[j]).argmin(1)
                 codes[:, j] = cj
                 err += ((x - b[j][cj]) ** 2).sum(1)
             yield pd.DataFrame(

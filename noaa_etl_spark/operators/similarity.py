@@ -1,16 +1,39 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``knn_bruteforce`` — exact top-k cosine neighbors; the correctness
-  baseline and the oracle-checkable form. O(|Q|·|C|) pairs: fine when
+Exact:
+- ``knn_bruteforce`` — exact top-k cosine neighbors in native
+  expressions; the oracle-checkable form. O(|Q|·|C|) pairs: fine when
   one side is small (it is broadcast), wrong at corpus×corpus scale.
-- ``knn_lsh`` — random-hyperplane (signed random projection) LSH, all
-  native expressions: deterministic pseudo-random hyperplanes derived
-  from xxhash64, sign-bit signatures banded into buckets, candidates
-  joined per bucket, exact cosine re-rank. The 100 TB path: candidate
-  generation is a hash-partitioned equi-join on bucket key instead of a
-  cross join.
-- ``semantic_dedup`` — drop vectors having a higher-similarity earlier
-  neighbor (keep-min-id), on either backend.
+- ``knn_bruteforce_blas`` — the same contract via one BLAS matmul per
+  corpus Arrow batch against the broadcast query matrix.
+- ``best_match_against`` — per-corpus-row best match against a small
+  broadcast reference set; scan-local, zero exchanges.
+
+Approximate:
+- ``lsh_candidate_pairs`` / ``knn_lsh`` — random-hyperplane (signed
+  random projection) LSH: deterministic md5-derived hyperplanes,
+  sign-bit signatures banded into buckets, candidates joined per
+  bucket, exact cosine re-rank. Candidate generation is a
+  hash-partitioned equi-join on bucket key instead of a cross join.
+- ``knn_ivf`` — inverted-file index: corpus vectors bucketed by nearest
+  k-means cell, each query probed against its ``n_probe`` nearest cells.
+- ``ann_index`` — the dispatcher pipelines call (ivf | lsh | exact).
+
+Built on the index:
+- ``semantic_dedup`` — vectors having a higher-similarity earlier
+  neighbor (keep-min-id), brute force or LSH.
+- ``cluster_report`` — spherical k-means cells of a corpus with
+  per-cell size and label purity.
+
+Numeric core: every operator here, operators/pq.py and
+operators/ann_maintenance.py share one definition of each numpy stage —
+``_row_norms``/``_unit_rows`` (floored L2 normalisation: an all-zero
+vector scores cosine 0), ``_sq_dist_key`` (the nearest-center rule),
+``_kmeans`` (kmeans++ seeding + Lloyd's), ``_nearest_centers`` (the IVF
+cell rule) and ``_top_k_order`` (score desc, id asc) — and one Spark
+form each of the vector-side frame (``_vector_frame``), the small-side
+broadcast (``_broadcast_unit_rows``) and the per-query top-k window
+(``_rank_top_k``).
 """
 
 from __future__ import annotations
@@ -33,6 +56,109 @@ from noaa_etl_spark.functions.vectors import as_double, dot, l2_norm
 SRP_HOT_BUCKET_CAP = 512
 
 
+def _row_norms(mat: np.ndarray) -> np.ndarray:
+    """(n, 1) L2 row norms floored at 1e-12: an all-zero vector (a hashed
+    BoW whose signs cancel) divides to zeros and scores cosine 0, never
+    NaN or an ANSI divide-by-zero."""
+    return np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit length (all-zero rows stay zero)."""
+    return mat / _row_norms(mat)
+
+
+def _sq_dist_key(x: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """(n, k) key ||c||² − 2x·c, which orders the centers like ||x − c||²
+    (x·x is constant per row) without an (n × k × d) broadcast — ~800 MB
+    per PQ subspace at the 50k sample cap. The one nearest-center rule:
+    Lloyd's assignment, PQ encoding and the IVF cell rule rank by it."""
+    return (centers * centers).sum(axis=1)[None, :] - 2.0 * (x @ centers.T)
+
+
+def _nearest_centers(x: np.ndarray, centers: np.ndarray, n: int) -> np.ndarray:
+    """(rows, min(n, k)) indices of each row's n nearest centers, ties to
+    the lower index (stable sort over the index-ordered center matrix) —
+    the IVF cell rule that index build, query probing, cluster reports
+    and incremental maintenance all share."""
+    return np.argsort(_sq_dist_key(x, centers), axis=1, kind="stable")[:, :n]
+
+
+def _kmeans(mat: np.ndarray, k: int, seed: int, max_iter: int) -> np.ndarray:
+    """Plain-L2 kmeans++ + Lloyd's, deterministic given (mat, seed).
+    Returns (k', d) centers with k' = min(k, n_rows). Spherical callers
+    (IVF) pass unit rows. Seeding keeps a RUNNING min-distance, updated
+    against only the newest center (O(n·k·d) total)."""
+    rng = np.random.default_rng(seed)
+    centers = mat[rng.integers(len(mat))][None, :]
+    d2min = ((mat - centers[0]) ** 2).sum(1)
+    for _ in range(min(k, len(mat)) - 1):
+        total = d2min.sum()
+        probs = d2min / total if total > 0 else None
+        c = mat[rng.choice(len(mat), p=probs)]
+        centers = np.vstack([centers, c])
+        d2min = np.minimum(d2min, ((mat - c) ** 2).sum(1))
+    for _ in range(max_iter):
+        assign = _sq_dist_key(mat, centers).argmin(axis=1)
+        new = np.vstack(
+            [
+                mat[assign == j].mean(axis=0) if (assign == j).any() else centers[j]
+                for j in range(len(centers))
+            ]
+        )
+        if np.allclose(new, centers):
+            break
+        centers = new
+    return centers
+
+
+def _top_k_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Per-row column indices of the k best (score desc, id asc) entries
+    of an (n, m) score matrix with matching (n, m) ids: stable argsort by
+    id, then stable argsort by −score — the composition is the total
+    order ``_rank_top_k`` applies in Spark, so a per-block top-k never
+    drops a global top-k member."""
+    o1 = np.argsort(ids, axis=1, kind="stable")
+    s1 = np.take_along_axis(scores, o1, axis=1)
+    o2 = np.argsort(-s1, axis=1, kind="stable")[:, :k]
+    return np.take_along_axis(o1, o2, axis=1)
+
+
+def _vector_frame(df: DataFrame, id_col: str, vec_col: str, role: str) -> DataFrame:
+    """(<role>_id, <role>_vec array<double>, <role>_norm) with the norm
+    computed once per vector (not per pair) and floored at 1e-12, so a
+    zero vector reads as sim 0 instead of an ANSI divide-by-zero."""
+    return df.select(
+        F.col(id_col).alias(f"{role}_id"),
+        as_double(F.col(vec_col)).alias(f"{role}_vec"),
+    ).withColumn(
+        f"{role}_norm", F.greatest(l2_norm(F.col(f"{role}_vec")), F.lit(1e-12))
+    )
+
+
+def _broadcast_unit_rows(df: DataFrame, id_col: str, vec_col: str):
+    """Collect the small side (queries or a reference set, small by
+    contract) ONCE and broadcast (ids int64, unit-row matrix)."""
+    rows = df.select(id_col, vec_col).collect()
+    if not rows:
+        raise ValueError("the broadcast side of a similarity search is empty")
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    unit = _unit_rows(np.array([r[1] for r in rows], dtype=np.float64))
+    return df.sparkSession.sparkContext.broadcast((ids, unit))
+
+
+def _rank_top_k(cands: DataFrame, k: int) -> DataFrame:
+    """Keep each query's k best (query_id, neighbor_id, cos_sim) rows by
+    (cos_sim desc, neighbor_id asc) — the one output order of the knn
+    family."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        cands.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
 def knn_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -53,27 +179,18 @@ def knn_bruteforce(
     # sqrt-of-self-dot doubles the oracle computes per pair, so sim bits
     # are unchanged — this is a pure work reduction (~3x fewer
     # higher-order-function evaluations).
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("q_vec"),
-    ).withColumn("q_norm", F.greatest(l2_norm(F.col("q_vec")), F.lit(1e-12)))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("c_vec"),
-    ).withColumn("c_norm", F.greatest(l2_norm(F.col("c_vec")), F.lit(1e-12)))
-    sim = dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
+    q = _vector_frame(queries, id_col, vec_col, "query")
+    c = _vector_frame(corpus, id_col, vec_col, "neighbor")
+    sim = dot(F.col("query_vec"), F.col("neighbor_vec")) / (
+        F.col("query_norm") * F.col("neighbor_norm")
+    )
     if round_digits is not None:
         sim = F.round(sim, round_digits)
     pairs = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _rank_top_k(pairs, k)
 
 
 def knn_bruteforce_blas(
@@ -89,60 +206,41 @@ def knn_bruteforce_blas(
 
     The query matrix (small by contract) is collected once and broadcast;
     each corpus Arrow batch computes all similarities with one BLAS
-    matmul and emits only its local top-k per query, so the shuffle
-    carries ≤ (#batches × |Q| × k) rows instead of |Q|×|C|. A final
-    window rank merges the per-batch survivors.
+    matmul and emits only its local top-k per query — by the same
+    (score desc, id asc) order as the final window, so equal scores (an
+    all-zero vector scores 0 against everything) keep the smallest ids —
+    and the shuffle carries ≤ (#batches × |Q| × k) rows instead of
+    |Q|×|C|. A final window rank merges the per-batch survivors.
 
     Same output contract as knn_bruteforce (rounded sims make the BLAS
     vs sequential-sum accumulation difference invisible; equality is
     asserted in tests)."""
-    import numpy as np
-
-    spark = queries.sparkSession
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_unit))
+    bc = _broadcast_unit_rows(queries, id_col, vec_col)
 
     def score(batches):
-        import pandas as pd
-
         ids, qu = bc.value
-        nq = len(ids)
         for pdf in batches:
             if not len(pdf):
                 continue
             c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_unit = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_unit @ qu.T  # (batch, nq)
-            sims[c_ids[:, None] == ids[None, :]] = -np.inf  # self-exclusion
-            top = min(k, len(c_ids))
-            idx = np.argpartition(-sims, top - 1, axis=0)[:top]  # (top, nq)
-            out_q, out_c, out_s = [], [], []
-            for qi in range(nq):
-                sel = idx[:, qi]
-                out_q.extend([ids[qi]] * len(sel))
-                out_c.extend(c_ids[sel])
-                out_s.extend(sims[sel, qi])
+            c_unit = _unit_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
+            sims = (c_unit @ qu.T).T  # (nq, batch)
+            sims[ids[:, None] == c_ids[None, :]] = -np.inf  # self-exclusion
+            top = _top_k_order(sims, np.broadcast_to(c_ids, sims.shape), k)
             yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_c, "cos_sim": out_s}
+                {
+                    "query_id": np.repeat(ids, top.shape[1]),
+                    "neighbor_id": c_ids[top].ravel(),
+                    "cos_sim": np.take_along_axis(sims, top, axis=1).ravel(),
+                }
             )
 
     cands = corpus.select(id_col, vec_col).mapInPandas(
         score, "query_id bigint, neighbor_id bigint, cos_sim double"
     )
-    sim = F.col("cos_sim")
     if round_digits is not None:
-        cands = cands.withColumn("cos_sim", F.round(sim, round_digits))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cands.filter(F.col("cos_sim") != float("-inf"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+        cands = cands.withColumn("cos_sim", F.round(F.col("cos_sim"), round_digits))
+    return _rank_top_k(cands.filter(F.col("cos_sim") != float("-inf")), k)
 
 
 def _plane_matrix(dim: int, num_planes: int):
@@ -177,10 +275,7 @@ def _srp_sig_norm_udf(dim: int, num_planes: int):
             return pd.DataFrame({"sig": [], "norm": []})
         mat = np.array(vecs.tolist(), dtype=np.float64)  # (n × dim)
         bits = (mat @ planes_t >= 0).astype(np.int32)
-        # Floor the norm: a degenerate all-zero vector (e.g. a hashed
-        # BoW whose signs cancel) must yield sim 0, not an ANSI
-        # divide-by-zero when the cosine denominator multiplies norms.
-        norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-12)
+        norms = _row_norms(mat)[:, 0]
         return pd.DataFrame({"sig": list(bits), "norm": norms})
 
     return sig_norm
@@ -373,11 +468,11 @@ def lsh_candidate_pairs(
         # Vector attach: the checkpointed signed frame carries no stats
         # (checkpoint scans never do), so without help the planner
         # shuffles BOTH attach sides — measured-property broadcast
-        # dispatch instead (the connected_components_auto precedent):
-        # the frame is already materialized, count() is one cheap job,
-        # and the bound keeps the broadcast under ~64 MB of vector
-        # payload. Above it (a true corpus) the shuffled join is the
-        # honest plan and the pair ids are the only replicated bytes.
+        # dispatch instead (connected_components' size-dispatch
+        # precedent): the frame is already materialized, count() is one
+        # cheap job, and the bound keeps the broadcast under ~64 MB of
+        # vector payload. Above it (a true corpus) the shuffled join is
+        # the honest plan and the pair ids are the only replicated bytes.
         qv = shared.select("query_id", "query_vec", "query_norm")
         nv = shared.select(
             F.col("query_id").alias("neighbor_id"),
@@ -427,12 +522,7 @@ def knn_lsh(
     cands = lsh_candidate_pairs(
         queries, corpus, id_col, vec_col, dim, num_planes, bands, round_digits
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _rank_top_k(cands, k)
 
 
 def ann_index(
@@ -621,15 +711,15 @@ def semantic_dedup(
     return pairs.distinct()
 
 
-def train_ivf_centroids(
+def _train_ivf_cells(
     corpus: DataFrame,
     n_cells: int = 16,
     vec_col: str = "embedding",
     seed: int = 42,
-    max_iter: int = 20,
     sample_cap: int = 50_000,
-) -> DataFrame:
-    """K-means cell centroids for an IVF index, trained on UNIT vectors
+) -> tuple[np.ndarray, np.ndarray]:
+    """K-means cells for an IVF index as the numpy pair (cell_ids,
+    centers) every IVF consumer takes, trained on UNIT vectors
     (spherical: L2-nearest centroid of unit vectors orders like cosine).
 
     Sample-train on the driver, assign-all distributed after — the
@@ -637,11 +727,12 @@ def train_ivf_centroids(
     motion: centroids converge on any representative sample, and
     assignment is the only stage that must see every vector). Up to
     ``sample_cap`` vectors are collected (≤ ~25 MB at the default cap)
-    and clustered with vectorized Lloyd's + seeded kmeans++ init in
-    numpy — deterministic given (sample, seed), and free of the ~2
-    scheduler round-trips per iteration that Spark ML's KMeans costs
-    (measured: 5 s for 20 iterations over 2,000 fixture rows, vs <50 ms
-    here, identical recall within test tolerances).
+    and clustered by ``_kmeans`` (20 Lloyd iterations) — deterministic
+    given (sample, seed), and free of the ~2 scheduler round-trips per
+    iteration that Spark ML's KMeans costs (measured: 5 s for 20
+    iterations over 2,000 fixture rows, vs <50 ms here). The pair stays
+    on the driver: a centroid DataFrame would be RDD-backed, so every
+    collect of it would pay a Python-worker job.
 
     Determinism caveat: the unordered ``.limit(sample_cap)`` sample is
     deterministic for a FIXED file layout + partitioning; across
@@ -649,30 +740,7 @@ def train_ivf_centroids(
     centroids) can differ. That is acceptable for an ANN index — recall
     gates, not centroid values, are the contract. Sort by a key before
     the limit if bit-identical centroids across layouts are required.
-
-    Returns (cell_id int, centroid array<double>).
     """
-    centers = _train_ivf_centers(corpus, n_cells, vec_col, seed, max_iter, sample_cap)
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cell_id int, centroid array<double>",
-    )
-
-
-def _train_ivf_centers(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-    sample_cap: int = 50_000,
-) -> np.ndarray:
-    """Numpy body of :func:`train_ivf_centroids` — returns the (cells x
-    dim) center matrix directly. knn_ivf uses this path to skip the
-    createDataFrame/collect round-trip (the wrapper frame is RDD-backed,
-    so every .collect() on it pays a Python-worker job — measured ~1 s
-    at local[32], twice per search via cell assignment)."""
     rows = (
         corpus.select(as_double(F.col(vec_col)).alias("v"))
         .limit(sample_cap)
@@ -680,85 +748,41 @@ def _train_ivf_centers(
     )
     if not rows:
         raise ValueError(
-            "train_ivf_centroids: corpus is empty — cannot train an IVF "
-            "index on zero vectors"
+            "IVF training: corpus is empty — cannot train an IVF index on "
+            "zero vectors"
         )
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    # kmeans++ seeding on unit vectors: d² = 2 - 2·cos
-    centers = mat[rng.integers(len(mat))][None, :]
-    for _ in range(min(n_cells, len(mat)) - 1):
-        d2 = np.min(2.0 - 2.0 * (mat @ centers.T), axis=1)
-        d2 = np.clip(d2, 0.0, None)
-        total = d2.sum()
-        probs = d2 / total if total > 0 else None
-        centers = np.vstack([centers, mat[rng.choice(len(mat), p=probs)]])
-    for _ in range(max_iter):
-        # ||x-c||² on unit x ranks like c·c - 2x·c — no (n × k × dim) blow-up
-        scores = mat @ centers.T
-        d2 = (centers * centers).sum(axis=1)[None, :] - 2.0 * scores
-        assign = d2.argmin(axis=1)
-        new_centers = np.vstack(
-            [
-                mat[assign == j].mean(axis=0) if (assign == j).any() else centers[j]
-                for j in range(len(centers))
-            ]
-        )
-        if np.allclose(new_centers, centers):
-            break
-        centers = new_centers
-    return centers
-
-
-def _centroids_to_np(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Collect a (cell_id, centroid) frame ONCE into (cell_ids, centers).
-    Callers that assign both a query side and a corpus side share this
-    single collect — the frame is RDD-backed, so each collect is a job."""
-    cent_rows = centroids.orderBy("cell_id").collect()
-    cell_ids = np.array([r["cell_id"] for r in cent_rows], dtype=np.int64)
-    centers = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    return cell_ids, centers
+    sample = _unit_rows(np.array([r["v"] for r in rows], dtype=np.float64))
+    centers = _kmeans(sample, n_cells, seed, max_iter=20)
+    return np.arange(len(centers), dtype=np.int64), centers
 
 
 def _nearest_cells(
     df: DataFrame,
-    centroids: "DataFrame | tuple[np.ndarray, np.ndarray]",
+    cells: tuple[np.ndarray, np.ndarray],
     role: str,
     n: int,
 ) -> DataFrame:
-    """Tag each vector with its n nearest cell ids (unit-vector L2 ==
+    """Tag each vector with its n nearest cell ids under the IVF cell
+    rule (``_nearest_centers`` on the unit vector: unit-vector L2 ==
     cosine order).
 
-    The centroid table is tiny by contract (n_cells); it is collected
-    once at plan-build time (or passed pre-collected as a
-    (cell_ids, centers) tuple — knn_ivf shares one collect across both
-    sides) and closed over by an Arrow-batched UDF that scores the whole
-    batch against every centroid in one matmul and argpartitions the
-    top-n — replacing the previous |df| × n_cells broadcast-join
-    blow-up, its interpreted per-pair HOF distance, and the per-vector
-    row_number window. Assignment is a narrow projection + explode: no
-    shuffle, no window, no row inflation. Ties break by ascending
-    cell_id (stable argsort over the cell_id-ordered centroid matrix),
-    matching the old orderBy."""
+    The (cell_ids, centers) pair is tiny by contract (n_cells) and is
+    closed over by an Arrow-batched UDF that scores the whole batch
+    against every centroid in one matmul and keeps the top-n — no
+    |df| × n_cells broadcast join, no per-pair HOF distance, no
+    per-vector row_number window. Assignment is a narrow projection +
+    explode: no shuffle, no window, no row inflation. Ties break by
+    ascending cell_id."""
     from pyspark.sql.functions import pandas_udf
 
-    if isinstance(centroids, DataFrame):
-        cell_ids, centers = _centroids_to_np(centroids)
-    else:
-        cell_ids, centers = centroids
-    cent_mat_t = centers.T  # (dim × cells)
-    c2 = (cent_mat_t * cent_mat_t).sum(axis=0)  # ||c||² per cell
-    top = min(n, len(cell_ids))
+    cell_ids, centers = cells
 
     @pandas_udf("array<int>")
     def nearest(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype="object")
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        d2 = c2[None, :] - 2.0 * (mat @ cent_mat_t)  # ranks ||u-c||²
-        idx = np.argsort(d2, axis=1, kind="stable")[:, :top]
+        unit = _unit_rows(np.array(vecs.tolist(), dtype=np.float64))
+        idx = _nearest_centers(unit, centers, n)
         return pd.Series([cell_ids[row].tolist() for row in idx])
 
     return df.withColumn(
@@ -775,7 +799,6 @@ def knn_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int | None = 6,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via an IVF (inverted-file)
     index: corpus vectors bucketed by nearest k-means cell, each query
@@ -787,30 +810,12 @@ def knn_ivf(
     candidate pairs. Candidate generation is an equi-join on cell_id:
     shuffle ∝ Σ probed-cell occupancy, never |Q|·|C|.
 
-    Same output contract as knn_bruteforce; pass a pre-trained
-    ``centroids`` frame to amortize training across calls.
+    Same output contract as knn_bruteforce. The cells are trained on
+    the corpus at each call (deterministic given the sample and seed).
     """
-    if centroids is None:
-        centers = _train_ivf_centers(corpus, n_cells, vec_col)
-        cents_np = (np.arange(len(centers), dtype=np.int64), centers)
-    else:
-        cents_np = _centroids_to_np(centroids)  # one collect, shared below
-    # Norm floored at 1e-12: degenerate zero vectors read as sim 0
-    # instead of an ANSI divide-by-zero (surfaced by all-cancelling
-    # hashed-BoW chunk embeddings in the corpus pipeline at sf0.1).
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("query_vec")
-    ).withColumn(
-        "query_norm", F.greatest(l2_norm(F.col("query_vec")), F.lit(1e-12))
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("neighbor_vec"),
-    ).withColumn(
-        "neighbor_norm", F.greatest(l2_norm(F.col("neighbor_vec")), F.lit(1e-12))
-    )
-    qc = _nearest_cells(q, cents_np, "query", n_probe)
-    cc = _nearest_cells(c, cents_np, "neighbor", 1)
+    cells = _train_ivf_cells(corpus, n_cells, vec_col)
+    qc = _nearest_cells(_vector_frame(queries, id_col, vec_col, "query"), cells, "query", n_probe)
+    cc = _nearest_cells(_vector_frame(corpus, id_col, vec_col, "neighbor"), cells, "neighbor", 1)
 
     # Score per probed CELL with one BLAS matmul (cogroup on cell_id),
     # not per candidate PAIR. The previous equi-join shipped BOTH 128-dim
@@ -829,7 +834,6 @@ def knn_ivf(
     # intermediate regardless of cell width. A hot cell concentrates in
     # one task exactly as it did in the join form — cell balance is the
     # trainer's job, not the scorer's.
-    k_eff = k
     rd = round_digits
     BLOCK = 8192
 
@@ -857,12 +861,7 @@ def knn_ivf(
             all_i = np.concatenate(
                 [best_i, np.broadcast_to(cids, (nq, len(cids)))], axis=1
             )
-            # (score desc, neighbor_id asc): stable argsort by id, then
-            # stable argsort by -score — composition is the total order.
-            o1 = np.argsort(all_i, axis=1, kind="stable")
-            s1 = np.take_along_axis(all_s, o1, axis=1)
-            o2 = np.argsort(-s1, axis=1, kind="stable")[:, :k_eff]
-            keep = np.take_along_axis(o1, o2, axis=1)
+            keep = _top_k_order(all_s, all_i, k)
             best_s = np.take_along_axis(all_s, keep, axis=1)
             best_i = np.take_along_axis(all_i, keep, axis=1)
         mask = np.isfinite(best_s) & (best_i >= 0)
@@ -884,12 +883,7 @@ def knn_ivf(
         )
     )
     # ≤ n_probe*k survivors per query reach the global top-k window.
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _rank_top_k(cands, k)
 
 
 def cluster_report(
@@ -907,7 +901,7 @@ def cluster_report(
     pipeline runs before fixing a data mix.
 
     Reuses the IVF machinery end-to-end: centroids train driver-side on
-    a ≤50k sample (:func:`_train_ivf_centers` — deterministic given
+    a ≤50k sample (:func:`_train_ivf_cells` — deterministic given
     (sample, seed)), and assignment is :func:`_nearest_cells` with n=1:
     one Arrow-batched matmul per batch, a narrow projection — NO
     shuffle, NO per-vector window, no n_cells× row blow-up. The only
@@ -925,15 +919,14 @@ def cluster_report(
     rows. Determinism matches the IVF contract — fixed layout + seed ⇒
     identical cells (tests/test_algorithms.py).
     """
-    centers = _train_ivf_centers(corpus, n_cells, vec_col, seed=seed)
-    cell_ids = np.arange(len(centers), dtype=np.int64)
+    cells = _train_ivf_cells(corpus, n_cells, vec_col, seed=seed)
     cols = [
         F.col(id_col).alias("v_id"),
         as_double(F.col(vec_col)).alias("v_vec"),
     ]
     if label_col is not None:
         cols.append(F.col(label_col).alias("v_label"))
-    assigned = _nearest_cells(corpus.select(*cols), (cell_ids, centers), "v", 1)
+    assigned = _nearest_cells(corpus.select(*cols), cells, "v", 1)
 
     if label_col is None:
         return assigned.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -981,18 +974,7 @@ def best_match_against(
 
     Output: corpus columns (id_col) + ``ref_id_out`` + ``cos_sim``.
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    r_rows = reference.select(id_col, vec_col).collect()
-    if not r_rows:
-        raise ValueError("reference set is empty")
-    r_ids = np.array([r[0] for r in r_rows], dtype=np.int64)
-    r_mat = np.array([r[1] for r in r_rows], dtype=np.float64)
-    r_unit = r_mat / np.maximum(
-        np.linalg.norm(r_mat, axis=1, keepdims=True), 1e-12
-    )
-    bc = spark.sparkContext.broadcast((r_ids, r_unit))
+    bc = _broadcast_unit_rows(reference, id_col, vec_col)
 
     from pyspark.sql.types import (
         DoubleType,
@@ -1010,18 +992,13 @@ def best_match_against(
     )
 
     def score(batches):
-        import pandas as pd
-
         ids, ru = bc.value
         big = np.iinfo(np.int64).max
         for pdf in batches:
             if not len(pdf):
                 continue
             c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_unit = c_mat / np.maximum(
-                np.linalg.norm(c_mat, axis=1, keepdims=True), 1e-12
-            )
+            c_unit = _unit_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
             sims = np.round(c_unit @ ru.T, round_digits)  # (batch, nref)
             best = sims.max(axis=1)
             # ties on the rounded value -> smallest reference id

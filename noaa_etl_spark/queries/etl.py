@@ -926,7 +926,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from noaa_etl_spark.operators.fuzzy import fuzzy_self_join
     from noaa_etl_spark.operators.graph import (
         _graph_sized_shuffle,
-        connected_components_auto,
+        connected_components,
     )
 
     part = load_table(spark, sf_dir, "part")
@@ -957,7 +957,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r15 opt: size-dispatched CC — a catalog-scale match graph
         # union-finds on the driver (identical labels), a 100 TB one
         # takes the distributed loop off the same probe.
-        labels = connected_components_auto(edges)
+        labels = connected_components(edges)
     resolved = n.join(
         labels, n["mk"] == labels["node"], "left"
     ).select(

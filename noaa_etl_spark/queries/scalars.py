@@ -823,7 +823,7 @@ def q_geo_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: integer cell arithmetic end-to-end; cluster membership
     is exact CC; no doubles anywhere.
     """
-    from noaa_etl_spark.operators.graph import connected_components_bounded
+    from noaa_etl_spark.operators.graph import connected_components
 
     cust = load_table(spark, sf_dir, "customer")
     sites = cust.select(
@@ -856,10 +856,10 @@ def q_geo_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.abs(F.col("alon") - F.col("blon")) <= 1)
     ).select("u", "v")
     # The node universe is the 60x75 GRID (a resolution constant, never
-    # data volume) -> driver-side union-find, identical labels (r15 opt:
-    # the distributed loop spent ~7 s of round scheduling on a <=4.5k-
-    # node graph; bounded CC is one collect + broadcast).
-    labels = connected_components_bounded(adj, src="u", dst="v", max_nodes=60 * 75)
+    # data volume), far below connected_components' local edge cap ->
+    # driver-side union-find, identical labels (r15 opt: the distributed
+    # loop spent ~7 s of round scheduling on a <=4.5k-node graph).
+    labels = connected_components(adj, src="u", dst="v")
     # labels ≤ |dense cells| — bounded by the grid universe, always
     # broadcastable (checkpoint scans carry no stats, so left alone the
     # planner falls back to a sort-merge join here).

@@ -290,9 +290,9 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     spaces, reversible). At sf0.01 this is ~1.2k components of up to
     16 nodes, so the propagation genuinely runs multiple hops.
 
-    Engine side (r16 opt): connected_components_auto — the size
-    dispatch the r15 round gave entity_resolution. The high-quantity
-    subgraph is ~1.2k–12k edges at graded SFs, so the distributed
+    Engine side (r16 opt): connected_components' size dispatch
+    (operators/graph.py), first given to entity_resolution. The
+    high-quantity subgraph is ~1.2k–12k edges at graded SFs, so the distributed
     O(log d) loop (hash-min propagation + pointer jumping,
     operators/graph.py) was pure rounds × scheduling floor here:
     7.7 s warm at sf0.1 vs ~0.5 s via the probe + driver union-find
@@ -309,14 +309,14 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation skew, not a cartesian (full analysis in
     operators/graph.py docstring).
     """
-    from noaa_etl_spark.operators.graph import connected_components_auto
+    from noaa_etl_spark.operators.graph import connected_components
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_quantity") >= 49).select(
         (F.col("l_orderkey") * 2).cast("bigint").alias("src"),
         (F.col("l_partkey") * 2 + 1).cast("bigint").alias("dst"),
     )
-    return connected_components_auto(edges)
+    return connected_components(edges)
 
 
 @graded("q_pagerank")  # rows-only: float ranks are iteration-scheme-

@@ -380,9 +380,7 @@ def q_ann_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_stats,
         drift_report,
     )
-    from noaa_etl_spark.operators.similarity import _train_ivf_centers
-
-    import numpy as np
+    from noaa_etl_spark.operators.similarity import _train_ivf_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
     gate = F.substring(
@@ -391,8 +389,7 @@ def q_ann_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = emb.filter(gate < "99")                      # ~60%
     calib = emb.filter((gate >= "99") & (gate < "cc"))   # ~20%
     arriving = emb.filter(gate >= "cc")                  # ~20%
-    centers = _train_ivf_centers(train, n_cells=8)
-    cents = (np.arange(len(centers), dtype=np.int64), centers)
+    cents = _train_ivf_cells(train, n_cells=8)
     base_stats = cell_stats(assign_with_distance(calib, cents))
     new_assigned = assign_with_distance(arriving, cents)
     return drift_report(base_stats, new_assigned).orderBy("cell_id")

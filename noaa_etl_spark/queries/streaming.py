@@ -439,14 +439,12 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    import numpy as np
-
     from noaa_etl_spark.operators.ann_maintenance import (
         assign_with_distance,
         cell_stats,
         streaming_drift_monitor,
     )
-    from noaa_etl_spark.operators.similarity import _train_ivf_centers
+    from noaa_etl_spark.operators.similarity import _train_ivf_cells
     from noaa_etl_spark.io import SCRATCH_ROOT, load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -457,8 +455,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     calib = emb.filter((gate >= "80") & (gate < "c0"))   # ~25%
     arriving = emb.filter(gate >= "c0")                  # ~25%
 
-    centers = _train_ivf_centers(train, n_cells=8)
-    cents = (np.arange(len(centers), dtype=np.int64), centers)
+    cents = _train_ivf_cells(train, n_cells=8)
     base_stats = cell_stats(assign_with_distance(calib, cents))
 
     root = os.path.join(SCRATCH_ROOT, "drift_monitor")

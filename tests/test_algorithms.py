@@ -11,11 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.io import SCRATCH_ROOT, load_table
-from noaa_etl_spark.operators.dedup import (
-    connected_components,
-    minhash_lsh_candidates,
-    minhash_lsh_dedup,
-)
+from noaa_etl_spark.operators.dedup import minhash_lsh_candidates, minhash_lsh_dedup
+from noaa_etl_spark.operators.graph import connected_components
 from noaa_etl_spark.operators.similarity import knn_bruteforce, knn_lsh
 from tests.conftest import SF_SMALL
 
@@ -70,7 +67,10 @@ def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a bigint, id_b bigint"
     )
-    comps = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    comps = {
+        r["node"]: r["component"]
+        for r in connected_components(edges, "id_a", "id_b").collect()
+    }
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
@@ -213,7 +213,7 @@ def test_knn_ivf_recall_beats_probe_budget(spark):
     fixture embeddings — data-adaptive cells beat random hyperplanes),
     results must be deterministic across runs (seeded k-means), and
     obey the k-bound/self-exclusion contract."""
-    from noaa_etl_spark.operators.similarity import knn_ivf, train_ivf_centroids
+    from noaa_etl_spark.operators.similarity import knn_ivf
 
     emb = load_table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -221,14 +221,13 @@ def test_knn_ivf_recall_beats_probe_budget(spark):
         (r["query_id"], r["neighbor_id"])
         for r in knn_bruteforce(queries, emb, k=5).collect()
     }
-    centroids = train_ivf_centroids(emb, n_cells=16)
-    approx = knn_ivf(queries, emb, k=5, n_probe=4, centroids=centroids).collect()
+    approx = knn_ivf(queries, emb, k=5, n_probe=4).collect()
     approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
     assert recall >= 0.45, f"IVF recall collapsed: {recall:.2f}"
     again = {
         (r["query_id"], r["neighbor_id"])
-        for r in knn_ivf(queries, emb, k=5, n_probe=4, centroids=centroids).collect()
+        for r in knn_ivf(queries, emb, k=5, n_probe=4).collect()
     }
     assert approx_set == again
     per_query = {}
@@ -238,9 +237,48 @@ def test_knn_ivf_recall_beats_probe_budget(spark):
     assert all(v <= 5 for v in per_query.values())
     # Probing ALL cells with unlimited k degenerates to exact: sanity
     # that the candidate pipeline loses only what the probe budget cuts.
-    full = knn_ivf(queries, emb, k=5, n_probe=16, centroids=centroids).collect()
+    full = knn_ivf(queries, emb, k=5, n_probe=16).collect()
     full_set = {(r["query_id"], r["neighbor_id"]) for r in full}
     assert len(exact_set & full_set) / len(exact_set) >= 0.99
+
+
+def test_zero_vector_scores_cosine_zero_everywhere(spark):
+    """An all-zero vector (a hashed BoW whose signs cancel) has cosine 0
+    with everything, finite, in every exact and IVF search form — and
+    the BLAS form still equals the brute-force form (ties at 0 keep the
+    smallest neighbor ids)."""
+    import numpy as np
+
+    from noaa_etl_spark.operators.similarity import (
+        best_match_against,
+        knn_bruteforce_blas,
+        knn_ivf,
+    )
+
+    rng = np.random.default_rng(5)
+    mat = np.vstack([np.zeros(8), rng.normal(size=(39, 8))])
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(mat)],
+        "vec_id bigint, embedding array<double>",
+    )
+
+    def rows(df):
+        return sorted((r["query_id"], r["neighbor_id"], r["cos_sim"]) for r in df.collect())
+
+    brute = rows(knn_bruteforce(emb, emb, k=2))
+    assert [r for r in brute if r[0] == 0] == [(0, 1, 0.0), (0, 2, 0.0)]
+    assert all(math.isfinite(r[2]) for r in brute)
+    assert rows(knn_bruteforce_blas(emb, emb, k=2)) == brute
+    # every cell probed: the IVF candidate set is the whole corpus
+    ivf = rows(knn_ivf(emb, emb, k=2, n_cells=4, n_probe=4))
+    assert [r for r in ivf if r[0] == 0] == [(0, 1, 0.0), (0, 2, 0.0)]
+    assert all(math.isfinite(r[2]) for r in ivf)
+    best = {
+        r["vec_id"]: (r["bench_id"], r["cos_sim"])
+        for r in best_match_against(emb, emb.filter(F.col("vec_id") >= 30)).collect()
+    }
+    assert best[0] == (30, 0.0)
+    assert all(math.isfinite(s) for _, s in best.values())
 
 
 def test_doc_similarity_ivf_recall_vs_exact(spark):
@@ -275,14 +313,18 @@ def test_doc_similarity_ivf_recall_vs_exact(spark):
     assert via_exact == exact
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
-    """A chain whose diameter exceeds max_iter must raise, not return
-    silently split components."""
+def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
+    """A chain whose diameter exceeds the distributed loop's round cap
+    must raise, not return silently split components."""
+    from noaa_etl_spark.operators import graph
+
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a bigint, id_b bigint"
     )
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1)
+        connected_components(edges, "id_a", "id_b")
 
 
 def _controlled_cosine_vectors(
@@ -369,10 +411,7 @@ def test_ivf_capture_rises_with_cosine(spark):
     share probed cells ~90% of the time (observed), which is a property
     of the data, not a banding bug."""
     from noaa_etl_spark.functions.vectors import as_double
-    from noaa_etl_spark.operators.similarity import (
-        _nearest_cells,
-        train_ivf_centroids,
-    )
+    from noaa_etl_spark.operators.similarity import _nearest_cells, _train_ivf_cells
 
     levels = [0.95, 0.8, 0.6, 0.3, 0.0]
     n_per = 60
@@ -380,7 +419,7 @@ def test_ivf_capture_rises_with_cosine(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v, _ in rows], "vec_id bigint, embedding array<double>"
     )
-    centroids = train_ivf_centroids(df, n_cells=16)
+    cells = _train_ivf_cells(df, n_cells=16)
     base = df.filter(F.col("vec_id") < 10_000).select(
         F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("query_vec")
     )
@@ -390,11 +429,11 @@ def test_ivf_capture_rises_with_cosine(spark):
     )
     probed = {
         (r["query_id"], r["cell_id"])
-        for r in _nearest_cells(base, centroids, "query", 4).collect()
+        for r in _nearest_cells(base, cells, "query", 4).collect()
     }
     assigned = {
         r["neighbor_id"]: r["cell_id"]
-        for r in _nearest_cells(var, centroids, "neighbor", 1).collect()
+        for r in _nearest_cells(var, cells, "neighbor", 1).collect()
     }
     sims = {i: s for i, _, s in rows if i < 10_000}
     captures = []
@@ -685,20 +724,17 @@ class TestAnnMaintenance:
         """Absorbing a batch against frozen centroids must give each
         new vector the SAME cell a full re-assignment pass would (the
         index stays consistent — only training is skipped)."""
-        import numpy as np
-
         from noaa_etl_spark.operators.ann_maintenance import (
             assign_with_distance,
             ivf_add_batch,
         )
-        from noaa_etl_spark.operators.similarity import _train_ivf_centers
+        from noaa_etl_spark.operators.similarity import _train_ivf_cells
         from pyspark.sql import functions as F
 
         emb = self._emb(spark)
         base = emb.filter(F.col("vec_id") % 5 != 0)
         batch = emb.filter(F.col("vec_id") % 5 == 0)
-        centers = _train_ivf_centers(base, n_cells=8)
-        cents = (np.arange(len(centers), dtype=np.int64), centers)
+        cents = _train_ivf_cells(base, n_cells=8)
 
         index = assign_with_distance(base, cents)
         updated = {
@@ -739,14 +775,13 @@ class TestAnnMaintenance:
             cell_stats,
             drift_report,
         )
-        from noaa_etl_spark.operators.similarity import _train_ivf_centers
+        from noaa_etl_spark.operators.similarity import _train_ivf_cells
 
         anchors = np.eye(16)[:4]
         train = self._clustered(spark, anchors, 50, 0, seed=7)
         calib = self._clustered(spark, anchors, 20, 1000, seed=8)
         indist = self._clustered(spark, anchors, 20, 2000, seed=9)
-        centers = _train_ivf_centers(train, n_cells=4)
-        cents = (np.arange(len(centers), dtype=np.int64), centers)
+        cents = _train_ivf_cells(train, n_cells=4)
         rep = drift_report(
             cell_stats(assign_with_distance(calib, cents)),
             assign_with_distance(indist, cents),
@@ -767,15 +802,14 @@ class TestAnnMaintenance:
             cell_stats,
             drift_report,
         )
-        from noaa_etl_spark.operators.similarity import _train_ivf_centers
+        from noaa_etl_spark.operators.similarity import _train_ivf_cells
 
         anchors = np.eye(16)[:4]
         shifted_anchors = np.eye(16)[8:12]  # orthogonal to every trained cell
         train = self._clustered(spark, anchors, 50, 0, seed=7)
         calib = self._clustered(spark, anchors, 20, 1000, seed=8)
         shifted = self._clustered(spark, shifted_anchors, 20, 3000, seed=10)
-        centers = _train_ivf_centers(train, n_cells=4)
-        cents = (np.arange(len(centers), dtype=np.int64), centers)
+        cents = _train_ivf_cells(train, n_cells=4)
         rep = drift_report(
             cell_stats(assign_with_distance(calib, cents)),
             assign_with_distance(shifted, cents),
@@ -783,6 +817,36 @@ class TestAnnMaintenance:
         touched = [r for r in rep if r["n_new"] >= 5]
         assert touched, "shifted batch landed nowhere (bad test setup)"
         assert any(r["drift"] for r in touched)
+
+    def test_assignment_follows_the_index_cell_rule(self, spark):
+        """Maintenance files every vector into the cell its queries probe
+        first: assign_with_distance's cell equals the index rule's
+        nearest cell (_nearest_cells with n=1) for every sf0.01
+        embedding at 8 cells."""
+        from noaa_etl_spark.functions.vectors import as_double
+        from noaa_etl_spark.operators.ann_maintenance import assign_with_distance
+        from noaa_etl_spark.operators.similarity import _nearest_cells, _train_ivf_cells
+        from pyspark.sql import functions as F
+
+        emb = self._emb(spark)
+        cells = _train_ivf_cells(emb, n_cells=8)
+        maintained = {
+            r["vec_id"]: r["cell_id"] for r in assign_with_distance(emb, cells).collect()
+        }
+        probed = {
+            r["v_id"]: r["cell_id"]
+            for r in _nearest_cells(
+                emb.select(
+                    F.col("vec_id").alias("v_id"),
+                    as_double(F.col("embedding")).alias("v_vec"),
+                ),
+                cells,
+                "v",
+                1,
+            ).collect()
+        }
+        assert len(maintained) == emb.count()
+        assert maintained == probed
 
     def test_graded_report_contract(self, spark):
         from noaa_etl_spark.queries import QUERIES
@@ -1234,11 +1298,15 @@ def test_bpe_encode_textbook_sequences(spark):
     assert encode_word("lowest", ranks) == ["low", "est"]
 
 
-def test_connected_components_path_star_and_isolation(spark):
-    """operators/graph.py hash-min + pointer jumping: a 9-node path
-    (worst case for plain propagation — needs multi-hop), a star, a
-    2-cycle, and NULL endpoints (dropped, per the asof NULL contract)."""
+def test_connected_components_path_star_and_isolation(spark, monkeypatch):
+    """operators/graph.py hash-min + pointer jumping (the distributed
+    arm, forced): a 9-node path (worst case for plain propagation —
+    needs multi-hop), a star, a 2-cycle, and NULL endpoints (dropped,
+    per the asof NULL contract)."""
+    from noaa_etl_spark.operators import graph
     from noaa_etl_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
 
     edges = [
         # path 1-2-3-...-9 (component min = 1)
@@ -1259,11 +1327,15 @@ def test_connected_components_path_star_and_isolation(spark):
     assert 40 not in got and 41 not in got
 
 
-def test_connected_components_matches_union_find_on_random_graph(spark):
-    """Randomized (seeded) graph vs a driver-side union-find reference."""
+def test_connected_components_matches_union_find_on_random_graph(spark, monkeypatch):
+    """Randomized (seeded) graph through the distributed arm (forced) vs
+    a driver-side union-find reference."""
     import random
 
+    from noaa_etl_spark.operators import graph
     from noaa_etl_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
 
     rng = random.Random(7)
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
@@ -1294,16 +1366,17 @@ def test_connected_components_matches_union_find_on_random_graph(spark):
 
 def test_connected_components_log_depth_on_long_path(spark):
     """Pointer jumping must make a 2048-node path converge in O(log n)
-    rounds: max_rounds=16 would be hopeless for plain min-label
-    propagation (needs ~2047 rounds on this graph) but is ample for
+    rounds: 16 rounds would be hopeless for plain min-label
+    propagation (needs ~2047 rounds on this graph) but are ample for
     the shortcut form (2·log2(2048) = 22 ≥ actual)."""
-    from noaa_etl_spark.operators.graph import connected_components
+    from noaa_etl_spark.operators.graph import _distributed_components, _edge_pairs
 
     n = 2048
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "src bigint, dst bigint"
     )
-    got = connected_components(df, max_rounds=16)
+    got, rounds = _distributed_components(_edge_pairs(df, "src", "dst"))
+    assert rounds <= 16
     assert got.filter("component != 1").count() == 0
     assert got.count() == n
 
@@ -1462,6 +1535,45 @@ def test_minhash_core_has_one_definition_per_stage():
             if callee == "coalesce" and "component" in consts:
                 builders["survivors"].add(fn.name)
     assert {k: len(v) for k, v in builders.items()} == dict.fromkeys(builders, 1), builders
+
+
+def test_ann_and_cc_cores_have_one_definition_per_stage():
+    """Spark-free guard over operators/: exactly one function seeds
+    kmeans++ (a weighted ``rng.choice``), exactly one takes row norms
+    with ``np.linalg.norm``, exactly one in similarity.py ranks the
+    per-query top-k window, and exactly one public function is a
+    connected-components entry point."""
+    import ast
+    import pathlib
+
+    import noaa_etl_spark.operators as ops
+
+    found = {"kmeans++ seeding": set(), "row norms": set(), "top-k window": set(), "cc entry": set()}
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{path.stem}.{fn.name}"
+            if fn.name.startswith("connected_components"):
+                found["cc entry"].add(where)
+            for call in ast.walk(fn):
+                if not isinstance(call, ast.Call):
+                    continue
+                func = call.func
+                callee = getattr(func, "attr", getattr(func, "id", ""))
+                consts = {n.value for a in call.args for n in ast.walk(a) if isinstance(n, ast.Constant)}
+                if callee == "choice" and any(kw.arg == "p" for kw in call.keywords):
+                    found["kmeans++ seeding"].add(where)
+                if callee == "norm" and getattr(func.value, "attr", "") == "linalg":
+                    found["row norms"].add(where)
+                if path.stem == "similarity" and callee == "partitionBy" and "query_id" in consts:
+                    found["top-k window"].add(where)
+    assert found == {
+        "kmeans++ seeding": {"similarity._kmeans"},
+        "row norms": {"similarity._row_norms"},
+        "top-k window": {"similarity._rank_top_k"},
+        "cc entry": {"graph.connected_components"},
+    }, found
 
 
 # ---------------------------------------------------------------------------

@@ -51,15 +51,10 @@ COSTS_TEST_SF = _COSTS.get("queries_test_sf", {}) if _COSTS.get("test_sf_dir") =
 BYTES_TOL = 1.5
 BYTES_SLACK = 256 * 1024
 
-# Queries whose plans end in an ITERATIVE connected-components stage:
-# the round count is data-dependent (fixture regeneration can change
-# the blocking graph's diameter), and each extra CC round adds ~2
-# exchanges (propagate + shortcut). Grant them that jitter on the
-# count gates — a real regression (extra fact scan, lost broadcast)
-# is far bigger than two rounds.
+# Count-gate allowances for measured jitter. (The connected-components
+# queries q_entity_resolution and q_geo_cluster label through driver
+# union-find, so their frames run no CC rounds and need none.)
 ITERATIVE_ALLOWANCE = {
-    "q_entity_resolution": 4,
-    "q_geo_cluster": 4,
     # Not iterative — a measured AQE broadcast-REUSE flake (the
     # hist_quantiles ±1 class, bigger here): a 4× in-session r16 probe
     # read (exch 6, bcast 11, reused 0) three times and (6, 15, 3)

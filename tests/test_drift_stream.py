@@ -37,7 +37,7 @@ def test_streaming_drift_monitor_flags_shifted_batch(spark, tmp_dir):
         cell_stats,
         streaming_drift_monitor,
     )
-    from noaa_etl_spark.operators.similarity import _train_ivf_centers
+    from noaa_etl_spark.operators.similarity import _train_ivf_cells
 
     src = f"{tmp_dir}/drift_src"
     out = f"{tmp_dir}/drift_out"
@@ -63,8 +63,7 @@ def test_streaming_drift_monitor_flags_shifted_batch(spark, tmp_dir):
     train = spark.createDataFrame(
         train_rows, "vec_id bigint, embedding array<double>"
     )
-    centers = _train_ivf_centers(train, n_cells=4)
-    cents = (np.arange(len(centers), dtype=np.int64), centers)
+    cents = _train_ivf_cells(train, n_cells=4)
 
     calib_rows = []
     for ci, a in enumerate(anchors):

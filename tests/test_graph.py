@@ -1,19 +1,14 @@
-"""Pins promised by operators/graph.py docstrings (VERDICT r15 item 9 /
-ADVICE r15): the driver union-find local path, the auto size dispatch
-(both arms), and the bounded variant's over-cap raises — each equal to
-the distributed loop's exact min-label fixpoint."""
+"""Pins promised by operators/graph.py docstrings: connected_components'
+driver union-find arm and its distributed arm (forced by monkeypatching
+LOCAL_EDGE_CAP, the HOT_BAND_CAP idiom) are both equal to the exact
+min-label fixpoint, on either side of the size dispatch."""
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
-from noaa_etl_spark.operators.graph import (
-    _local_union_find,
-    connected_components,
-    connected_components_auto,
-    connected_components_bounded,
-)
+from noaa_etl_spark.operators import graph
+from noaa_etl_spark.operators.graph import _local_union_find, connected_components
 
 
 def _random_edges(seed: int, n_nodes: int = 60, n_edges: int = 90):
@@ -51,12 +46,13 @@ def _reference_components(edges):
 
 
 @pytest.mark.parametrize("seed", [1, 7])
-def test_local_union_find_matches_distributed(spark, seed):
+def test_local_union_find_matches_distributed(spark, monkeypatch, seed):
     """_local_union_find == the distributed loop's exact fixpoint
     (component = min reachable node id) on random multigraphs."""
     edges = _random_edges(seed)
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     ref = _reference_components(edges)
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
     dist = _labels(connected_components(df))
     local = dict(
         _local_union_find([{"u": u, "v": v} for u, v in edges])
@@ -65,18 +61,19 @@ def test_local_union_find_matches_distributed(spark, seed):
     assert local == ref
 
 
-def test_auto_takes_both_dispatch_arms_identically(spark):
-    """connected_components_auto: local arm (default cap) and distributed
+def test_auto_takes_both_dispatch_arms_identically(spark, monkeypatch):
+    """connected_components: local arm (default cap) and distributed
     arm (cap forced to 0) produce identical labels."""
     edges = _random_edges(3)
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     ref = _reference_components(edges)
-    assert _labels(connected_components_auto(df)) == ref
-    assert _labels(connected_components_auto(df, local_edge_cap=0)) == ref
+    assert _labels(connected_components(df)) == ref
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
+    assert _labels(connected_components(df)) == ref
 
 
-def test_auto_dispatch_boundary_raw_rows(spark):
-    """The r16 probe counts RAW rows (no distinct shuffle): duplicate
+def test_auto_dispatch_boundary_raw_rows(spark, monkeypatch):
+    """The probe counts RAW rows (no distinct shuffle): duplicate
     edges can push a borderline graph to the distributed arm — both
     sides of the boundary stay label-identical."""
     edges = [(1, 2), (2, 3), (1, 2), (1, 2)]  # 4 raw rows, 2 distinct
@@ -84,55 +81,62 @@ def test_auto_dispatch_boundary_raw_rows(spark):
     ref = {1: 1, 2: 1, 3: 1}
     # cap 4 = raw count -> local arm; cap 3 < raw count -> distributed
     # (even though distinct count 2 <= 3: conservative by design).
-    assert _labels(connected_components_auto(df, local_edge_cap=4)) == ref
-    assert _labels(connected_components_auto(df, local_edge_cap=3)) == ref
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 4)
+    assert _labels(connected_components(df)) == ref
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 3)
+    assert _labels(connected_components(df)) == ref
 
 
-def test_auto_distributed_arm_honors_round_cap(spark):
-    """max_rounds reaches the distributed arm (local arm always
-    converges; dedup.connected_components pins the explicit-cap raise)."""
+def test_auto_distributed_arm_honors_round_cap(spark, monkeypatch):
+    """MAX_ROUNDS binds the distributed arm, which raises rather than
+    return split components (the local arm always converges)."""
     chain = [(i, i + 1) for i in range(1, 40)]
     df = spark.createDataFrame(chain, "src bigint, dst bigint")
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_auto(df, max_rounds=1, local_edge_cap=0)
+        connected_components(df)
 
 
-def test_bounded_matches_distributed(spark):
-    edges = _random_edges(11, n_nodes=30, n_edges=40)
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    assert _labels(connected_components_bounded(df, max_nodes=30)) == (
-        _reference_components(edges)
-    )
+def test_grid_graph_local_matches_distributed(spark, monkeypatch):
+    """A bounded-universe grid graph (the q_geo_cluster shape: cells
+    joined to their ±1 neighbours, u < v) labels identically on the
+    local and the distributed arm."""
+    dense = {(r, c) for r in range(12) for c in range(15) if (r * 7 + c * 3) % 5}
+    cid = {rc: rc[0] * 1000 + rc[1] for rc in dense}
+    edges = [
+        (cid[a], cid[b])
+        for a in dense
+        for b in dense
+        if cid[a] < cid[b] and abs(a[0] - b[0]) <= 1 and abs(a[1] - b[1]) <= 1
+    ]
+    df = spark.createDataFrame(edges, "u bigint, v bigint")
+    ref = _reference_components(edges)
+    assert _labels(connected_components(df, src="u", dst="v")) == ref
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
+    assert _labels(connected_components(df, src="u", dst="v")) == ref
 
 
-def test_bounded_raises_on_overcap(spark):
-    # node universe 12 > max_nodes 8 -> must raise, never mislabel
-    edges = [(i, i + 1) for i in range(1, 12)]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    with pytest.raises(ValueError, match="use connected_components"):
-        connected_components_bounded(df, max_nodes=8)
-    # edge-cap guard: >4*max_nodes edges raises before collecting a
-    # data-sized relation
-    many = spark.range(0, 50).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    with pytest.raises(ValueError, match="not bounded"):
-        connected_components_bounded(many, max_nodes=10)
+def test_dedup_survivors_match_on_both_arms(spark, monkeypatch):
+    """dedup._label_survivors (min-id survivor per near-dup cluster over
+    (id_a, id_b) edges) reads the same labels from either CC arm."""
+    from noaa_etl_spark.operators.dedup import _label_survivors
 
-
-def test_dedup_cc_explicit_cap_goes_distributed_default_local(spark):
-    """dedup.connected_components: default (None) routes the auto local
-    path; an explicit max_iter pins the distributed loop + raise
-    contract (r16 reconciliation of the VERDICT r15 item-1 regression)."""
-    from noaa_etl_spark.operators.dedup import connected_components as dedup_cc
-
+    docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 20)], "doc_id bigint")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
     )
-    expect = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    got_default = {r["id"]: r["component"] for r in dedup_cc(edges).collect()}
-    got_explicit = {
-        r["id"]: r["component"] for r in dedup_cc(edges, max_iter=10).collect()
+    expect = {
+        1: (1, True), 2: (1, False), 3: (1, False),
+        10: (10, True), 11: (10, False), 20: (20, True),
     }
-    assert got_default == expect
-    assert got_explicit == expect
+
+    def survivors():
+        return {
+            r["id"]: (r["component"], r["keep"])
+            for r in _label_survivors(docs, "doc_id", edges).collect()
+        }
+
+    assert survivors() == expect
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
+    assert survivors() == expect

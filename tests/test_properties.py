@@ -273,12 +273,15 @@ edges_strategy = st.lists(
 
 @given(edges=edges_strategy)
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_connected_components_matches_union_find_property(spark, edges):
+def test_connected_components_matches_union_find_property(spark, monkeypatch, edges):
     """Hypothesis twin of the seeded random-graph test: small generated
-    graphs (self-loops, parallel edges, arbitrary shapes) vs a
-    driver-side union-find — shrinking localizes any propagation bug
-    to a minimal edge set."""
+    graphs (self-loops, parallel edges, arbitrary shapes) through the
+    distributed arm (forced) vs a driver-side union-find — shrinking
+    localizes any propagation bug to a minimal edge set."""
+    from noaa_etl_spark.operators import graph
     from noaa_etl_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_EDGE_CAP", 0)
 
     parent: dict[int, int] = {}
 

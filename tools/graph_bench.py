@@ -30,7 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from noaa_etl_spark.operators.graph import (
-    connected_components_with_rounds,
+    _distributed_components,
+    _edge_pairs,
     pagerank,
 )
 from noaa_etl_spark.session import get_spark
@@ -91,7 +92,9 @@ def main() -> None:
     edges, diameter = build_edges(spark, shape, n_edges)
 
     t0 = time.time()
-    labels, cc_rounds = connected_components_with_rounds(edges)
+    # the distributed loop itself: the public entry would union-find
+    # graphs under its local edge cap on the driver and count no rounds
+    labels, cc_rounds = _distributed_components(_edge_pairs(edges, "src", "dst"))
     labels = labels.persist()
     sizes = labels.groupBy("component").count()
     stats = sizes.agg(
