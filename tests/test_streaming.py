@@ -594,3 +594,31 @@ def test_only_bespoke_twins_build_their_own_stream():
             ):
                 offenders.add(fn.name)
     assert not offenders, f"hand-rolled stream scaffold in {sorted(offenders)}"
+
+
+# One twin per drain: run_to_memory and fold_stream, by checkpoint dir.
+CHECKPOINTED_TWINS = {
+    "q_stream_tumbling": os.path.join(SCRATCH_ROOT, "checkpoints", "mem_stream_tumbling"),
+    "q_stream_user_ltv": os.path.join(SCRATCH_ROOT, "stream_ltv", "ckpt"),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(CHECKPOINTED_TWINS))
+def test_drain_leaves_a_whole_checkpoint(spark, twin):
+    """A finished drain leaves no temp file from an atomic checkpoint
+    write behind, and every batch in the offset log is in the commit
+    log: the checkpoint a restart would read is whole."""
+    from noaa_etl_spark.queries import QUERIES
+
+    QUERIES[twin](spark, SF_SMALL).collect()
+    ckpt = CHECKPOINTED_TWINS[twin]
+    leftovers = [
+        os.path.join(d, f) for d, _, files in os.walk(ckpt) for f in files if ".tmp" in f
+    ]
+    assert not leftovers, f"temp files left in {ckpt}: {leftovers}"
+
+    def batch_ids(log: str) -> set[int]:
+        return {int(f) for f in os.listdir(os.path.join(ckpt, log)) if f.isdigit()}
+
+    offsets = batch_ids("offsets")
+    assert offsets and offsets == batch_ids("commits")
