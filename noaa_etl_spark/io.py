@@ -14,17 +14,21 @@ exactly once:
    string↔TIMESTAMP_NTZ comparison, so date literals in queries use the
    ``ntz_lit`` helper.
 
-Scale posture: loaders never infer schemas, never collect, and return
-plain lazy DataFrames so Catalyst sees the whole plan (pushdown + pruning
-reach the parquet scan).
+Scale posture: loaders never collect, and return plain lazy DataFrames
+so Catalyst sees the whole plan (pushdown + pruning reach the parquet
+scan). Reading a Parquet file's schema is a Spark job (a footer read);
+``parquet_schema`` runs it once per version of a file and session type
+mapping, so a table opened again costs no job until the file changes.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from noaa_etl_spark.session import configure_session
 
@@ -74,10 +78,54 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# The session confs that change how Parquet types map to Spark types,
+# so a schema read under one setting is not the schema under another.
+_PARQUET_TYPE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# parquet_schema memo: (file identity, type-mapping confs) -> schema.
+_PARQUET_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """``spark.read.parquet(path).schema``, read once per file version.
+
+    A regular file's schema is memoized for the process under its
+    identity (absolute path, inode, size, ``st_mtime_ns``) and the
+    session's ``_PARQUET_TYPE_CONFS``: a rewrite of the file or a
+    different type mapping is a new key, so it is read again. A
+    directory (or any path ``os.stat`` cannot see as a file) is read
+    every time, since files under it can change without changing it.
+    The returned schema is shared: do not mutate it.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        *(spark.conf.get(k, None) for k in _PARQUET_TYPE_CONFS),
+    )
+    schema = _PARQUET_SCHEMAS.get(key)
+    if schema is None:
+        schema = _PARQUET_SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with engine schema normalization applied."""
     configure_session(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

@@ -8,7 +8,8 @@ the directory then stops — which is exactly the semantics a graded/batch
 comparison needs, and on a real cluster is the canonical backfill mode.
 
 - ``run_to_memory``: a streaming DataFrame (stateful operators included)
-  drained into an in-memory sink, returned as a batch table.
+  drained into an in-memory sink, returned as a batch table. Its answer
+  is what its data batches emit: it runs no watermark-only batch.
 - ``fold_stream``: a source frame split into three arrival files and
   drained through ``foreachBatch``; each micro-batch writes its partial
   state under ``batch_id=N`` and the twin folds the states it gets back.
@@ -22,8 +23,9 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from noaa_etl_spark.io import SCRATCH_ROOT, normalize_events_ts
+from noaa_etl_spark.io import SCRATCH_ROOT, normalize_events_ts, parquet_schema
 from noaa_etl_spark.session import configure_session
 
 _CHECKPOINT_ROOT = os.path.join(SCRATCH_ROOT, "checkpoints")
@@ -36,6 +38,10 @@ _CHECKPOINT_ROOT = os.path.join(SCRATCH_ROOT, "checkpoints")
 # — plans.audit.stream_cost_profile reads this map so a stream query
 # gaining a shuffle fails the COSTS gate.
 LAST_STREAM_PLANS: dict[str, str] = {}
+
+# Drain-time progress by query name: the (batch id, input rows) of each
+# micro-batch the last run_to_memory drain under that name ran.
+LAST_STREAM_PROGRESS: dict[str, list[tuple[int, int]]] = {}
 
 # staged_stream_src cache: (abs sf_dir, twin name) -> staged src dir.
 # Process-local by construction — nothing persists across bench/driver
@@ -104,16 +110,15 @@ def record_foreach_batch_plan(name: str, df: DataFrame) -> None:
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Open one fixture table as a file-source stream.
 
-    Schema is taken from a batch read of the same file (schemas must be
-    declared for file streams); the events nanos→micros conversion is
-    applied identically to the batch loader so both planes see one
-    schema.
+    Schema is the batch loader's (schemas must be declared for file
+    streams), from ``io.parquet_schema``; the events nanos→micros
+    conversion is applied identically to the batch loader so both planes
+    see one schema.
     """
     configure_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = spark.read.parquet(path).schema
     df = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
@@ -132,10 +137,21 @@ def run_to_memory(
 
     The checkpoint dir is recreated per run — a stale checkpoint would
     make availableNow see 'no new data' and return an empty table.
+
+    Drain contract: the answer is what the DATA batches emit. The query
+    starts with ``spark.sql.streaming.noDataMicroBatches.enabled=false``,
+    so Spark runs no watermark-only batch after the last data: that
+    batch would only evict state from a checkpoint the next run throws
+    away. A query whose output needs the final watermark must not drain
+    through here: append-mode window aggregates, outer-join null rows
+    and event-time timeouts that fire only after the last data are
+    emitted by that batch alone. Each batch's id and input rows are
+    recorded in ``LAST_STREAM_PROGRESS[query_name]``.
     """
     spark = stream_df.sparkSession
     checkpoint = os.path.join(_CHECKPOINT_ROOT, query_name)
     shutil.rmtree(checkpoint, ignore_errors=True)
+    scoped = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
     # r15 opt: stateful streaming shuffles are NOT reached by AQE
     # coalescing, and the first micro-batch bakes
     # spark.sql.shuffle.partitions into the state layout — under a
@@ -144,19 +160,22 @@ def run_to_memory(
     # at sf0.01 under the vanilla driver; ~8 s sized). Scope-set the
     # count to the executor parallelism ONLY when the session still
     # carries Spark's untouched 200 default (an explicit production
-    # sizing is respected verbatim); restore after the drain. Fresh checkpoint per run ⇒
+    # sizing is respected verbatim). Fresh checkpoint per run ⇒
     # no cross-run state-layout conflict.
     # r16 fix (ADVICE r15): on a session that never explicitly set the
     # conf, conf.get(key, None) returns None — NOT "200" — so the old
     # `prev == "200"` guard never fired under exactly the vanilla
     # driver the sizing targets, and would have overridden a session
-    # that deliberately pinned 200. None ⇒ untouched default ⇒ size it
-    # and unset after; any explicit value (including 200) is respected
-    # verbatim.
+    # that deliberately pinned 200. None ⇒ untouched default ⇒ size it;
+    # any explicit value (including 200) is respected verbatim.
     part_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(part_key, None)
-    if prev is None:
-        spark.conf.set(part_key, str(spark.sparkContext.defaultParallelism))
+    if spark.conf.get(part_key, None) is None:
+        scoped[part_key] = str(spark.sparkContext.defaultParallelism)
+    # Every scoped conf gets its previous value back after the drain,
+    # unset if it was unset, whether or not the query failed.
+    prev = {key: spark.conf.get(key, None) for key in scoped}
+    for key, value in scoped.items():
+        spark.conf.set(key, value)
     try:
         query = (
             stream_df.writeStream.format("memory")
@@ -168,8 +187,14 @@ def run_to_memory(
         )
         query.awaitTermination()
     finally:
-        if prev is None:
-            spark.conf.unset(part_key)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+    LAST_STREAM_PROGRESS[query_name] = [
+        (p.batchId, p.numInputRows) for p in query.recentProgress
+    ]
     # explainInternal on a terminated availableNow query returns the
     # LAST micro-batch's executed physical plan (incremental execution
     # is retained on the query handle) — the only surface that shows
@@ -233,7 +258,9 @@ def fold_stream(
     per session by ``staged_stream_src``; ``ckpt`` and one directory per
     partial, both wiped before each run (a stale checkpoint would make
     availableNow see no data). Returns one frame per partial, in
-    ``partials`` order, each with its ``batch_id`` partition column.
+    ``partials`` order, each with its ``batch_id`` partition column. The
+    states are read back with the schema of the frames written, all
+    nullable, plus ``batch_id int``, so the read-back infers nothing.
     """
     spark = source.sparkSession
     root = os.path.join(SCRATCH_ROOT, name)
@@ -250,11 +277,18 @@ def fold_stream(
 
     src = staged_stream_src(sf_dir, name, build)
 
+    # The read-back schema of each partial's states, from its frames.
+    schemas: dict[str, StructType] = {}
+
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         for key, partial in partials.items():
             frame = partial(batch_df)
             record_foreach_batch_plan(key, frame)
             frame.write.mode("overwrite").parquet(f"{states[key]}/batch_id={batch_id}")
+            schemas[key] = StructType(
+                [StructField(f.name, f.dataType, True, f.metadata) for f in frame.schema]
+                + [StructField("batch_id", IntegerType())]
+            )
 
     stream = (
         spark.readStream.schema(source.schema)
@@ -268,4 +302,4 @@ def fold_stream(
         .start()
         .awaitTermination()
     )
-    return [spark.read.parquet(d) for d in states.values()]
+    return [spark.read.schema(schemas[key]).parquet(states[key]) for key in partials]

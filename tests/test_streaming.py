@@ -622,3 +622,80 @@ def test_drain_leaves_a_whole_checkpoint(spark, twin):
 
     offsets = batch_ids("offsets")
     assert offsets and offsets == batch_ids("commits")
+
+
+# The two append drains whose watermark would have had Spark run a
+# second, data-free batch after their one data batch.
+ONE_BATCH_DRAINS = {
+    "q_stream_interval_join": "mem_stream_interval_join",
+    "q_stream_dedup_watermark": "mem_stream_dedup_wm",
+}
+
+
+@pytest.mark.parametrize("twin", sorted(ONE_BATCH_DRAINS))
+def test_memory_drain_runs_only_data_batches(spark, twin):
+    """A run_to_memory drain runs its data batch and no watermark-only
+    batch after it: its progress record holds one batch, with input."""
+    from noaa_etl_spark.queries import QUERIES
+    from noaa_etl_spark.streaming.core import LAST_STREAM_PROGRESS
+
+    assert QUERIES[twin](spark, SF_SMALL).count() > 0
+    [(batch_id, input_rows)] = LAST_STREAM_PROGRESS[ONE_BATCH_DRAINS[twin]]
+    assert batch_id == 0 and input_rows > 0
+
+
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@pytest.mark.parametrize("prev", [None, "true"])
+@pytest.mark.parametrize("fails", [False, True], ids=["ok", "failing"])
+def test_drain_restores_scoped_confs(spark, prev, fails):
+    """run_to_memory scopes the no-data-batch switch (and the shuffle
+    sizing) to its query: afterwards each conf is what it was, unset if
+    it was unset, also when the query fails."""
+    s = spark.newSession()
+    part_key = "spark.sql.shuffle.partitions"
+    s.conf.unset(part_key)
+    if prev is None:
+        s.conf.unset(NO_DATA_BATCHES)
+    else:
+        s.conf.set(NO_DATA_BATCHES, prev)
+    ev = stream_table(s, SF_SMALL, "events").select("event_id", "event_type")
+    if fails:
+        ev = ev.select(F.raise_error(F.lit("injected drain failure")).alias("boom"))
+        with pytest.raises(Exception, match="injected drain failure"):
+            run_to_memory(ev, "mem_conf_scope", "append")
+    else:
+        assert run_to_memory(ev, "mem_conf_scope", "append").count() > 0
+    assert s.conf.get(NO_DATA_BATCHES, None) == prev
+    assert s.conf.get(part_key, None) is None
+
+
+@pytest.mark.parametrize("twin", sorted(RESUME_TWINS))
+def test_fold_read_back_matches_inferred_schema(spark, monkeypatch, twin):
+    """The states fold_stream reads back with the written frames' schema
+    equal a schema-inferring read of the same directories: names, types,
+    nullability, the batch_id partition column and rows."""
+    from noaa_etl_spark.queries import QUERIES
+    from noaa_etl_spark.queries import streaming as twins
+    from noaa_etl_spark.streaming import core
+
+    drained = []
+
+    def fold_stream(sf_dir, name, source, split, partials, *args, **kwargs):
+        frames = core.fold_stream(sf_dir, name, source, split, partials, *args, **kwargs)
+        drained.extend(
+            (os.path.join(SCRATCH_ROOT, name, key), frame)
+            for key, frame in zip(partials, frames)
+        )
+        return frames
+
+    monkeypatch.setattr(twins, "fold_stream", fold_stream)
+    QUERIES[twin](spark, SF_SMALL).collect()
+    assert drained
+    for state_dir, frame in drained:
+        inferred = spark.read.parquet(state_dir)
+        assert frame.schema == inferred.schema, state_dir
+        assert dict(frame.dtypes)["batch_id"] == "int"
+        rows = sorted(map(tuple, frame.collect()), key=repr)
+        assert rows and rows == sorted(map(tuple, inferred.collect()), key=repr), state_dir
